@@ -523,7 +523,7 @@ FROM ranked WHERE rn <= 10
 
 def _q_posting_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     eng = _engine(spark, sf_dir)
-    return eng._postings(PROBE_TERMS).select("term", "doc_id", "tf", "dl")
+    return eng._postings(PROBE_TERMS, mode="postings_lang").select("term", "doc_id", "tf", "dl")
 
 
 def _q_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:

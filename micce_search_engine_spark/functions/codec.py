@@ -224,7 +224,6 @@ def decode_postings(
     block_mask: np.ndarray | None = None,
     want_lang: bool = False,
     want_positions: bool = False,
-    want_block: bool = False,
 ) -> tuple[np.ndarray, ...]:
     """Decode (optionally a subset of blocks of) one term's postings.
 
@@ -234,11 +233,7 @@ def decode_postings(
     when ``want_lang`` (older rows without a lang stream yield zeros),
     plus a FLAT positions int64 array when ``want_positions`` (exactly
     ``tf`` values per posting, in posting order — split with
-    ``np.cumsum(tfs)``; requires a row encoded with positions), plus a
-    per-posting BLOCK INDEX int64 array when ``want_block`` (the block
-    each posting was decoded from — lets query plans map candidate
-    docs back to the exact blocks a later positional decode must
-    touch; appended LAST).
+    ``np.cumsum(tfs)``; requires a row encoded with positions).
     """
     first = np.asarray(row["block_first_doc"], dtype=np.int64)
     block_n = np.asarray(row["block_n"], dtype=np.int64)
@@ -303,8 +298,6 @@ def decode_postings(
                 out = out + (run - base,)
             else:
                 out = out + (pd_,)
-        if want_block:
-            out = out + (blk_of,)
         return out
     sel = np.flatnonzero(block_mask)
     empty = np.empty(0, dtype=np.int64)
@@ -313,8 +306,6 @@ def decode_postings(
         if want_lang:
             out = out + (empty.copy(),)
         if want_positions:
-            out = out + (empty.copy(),)
-        if want_block:
             out = out + (empty.copy(),)
         return out
 
@@ -366,8 +357,6 @@ def decode_postings(
         out = out + (langs,)
     if want_positions:
         out = out + (np.concatenate(pos_out),)
-    if want_block:
-        out = out + (np.repeat(sel.astype(np.int64), block_n[sel]),)
     return out
 
 

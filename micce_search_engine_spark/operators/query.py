@@ -1,46 +1,47 @@
 """Query engine: SearchCondition -> DataFrame plan -> BM25 top-k.
 
 Re-expresses the reference's query path (SURVEY.md §3.1):
-  SearchCondition (/root/reference/search-api/internal/domain/SearchCondition.go:9-21)
+  SearchCondition (search-api/internal/domain/SearchCondition.go:9-21)
   -> synonym expansion (vespaRepository.go:22-29, convertSpotNameQuery.go:5-22)
   -> predicate tree (query/whereQuery.go) -> [Vespa: tokenize, match
   inverted index, BM25, limit/offset] -> {total_hits, last_page, ids}
   (presentation/model/response.go:8-42).
 
-Here the "Vespa side" is a DataFrame plan: query terms pruned to their
-segment buckets -> Arrow-batched zero-copy posting decode (the decoder
-emits the idf-free BM25 weight ``wf`` directly and applies the exact
-lang filter from the per-posting attribute stream — NO join against a
-docs table, which at 10^12 docs is a full shuffle per query) ->
-fixed-point scoring -> per-branch match counting -> count + distributed
-top-k (TakeOrderedAndProject).
+Every keyword query — ``search`` (exact and ``topk_only``) as much as
+the batch entry points — is ranked by ONE evaluator: ``search`` runs
+as a batch of one through operators/batch_query.py, whose vectorized
+mapInArrow evaluator scores OR-of-AND branches over decoded postings,
+applies the lang filter, and emits each partition's top-k plus a count
+marker; the driver merges and pages them. This module holds what that
+evaluator reads: the bucket/term-pruned segment scan, the Arrow-batched
+zero-copy posting decode (it emits the idf-free BM25 weight ``wf`` and
+the per-posting lang attribute — NO join against a docs table, which
+at 10^12 docs is a full shuffle per query), the optional pinned decoded
+cache (``preload="decoded"``) and the block-max WAND bounds.
 
 Determinism (SURVEY.md §4.2 item 4): per-term contributions are
 quantized to int64 fixed-point (floor(idf * wf * 1e9)) and summed as
 LONGS — integer addition is exact and order-independent, so scores are
-bit-identical across any partitioning/parallelism WITHOUT the
-collect_set/sort_array array aggregate round 1 used (which was the
-batched path's scaling bottleneck). score = score_fx / 1e9; ties break
-``score DESC, doc_id ASC``.
-
-Branch semantics (AND within an OR branch, whereQuery.go:13-41) are
-counted relationally: one conditional-sum column per branch (<= 8
-branches), a doc matches iff some branch's matched-term count equals
-its size — plain codegen aggregates, no per-group arrays.
+bit-identical across any partitioning/parallelism. score = score_fx /
+1e9; ties break ``score DESC, doc_id ASC``.
 
 ``topk_only=True`` enables block-max WAND pruning (SURVEY.md §4.2
 item 2): decode each term's best block for score lower bounds, set
 theta = k-th best, then decode only blocks whose upper bound (own
-block-max + other terms' global maxima) reaches theta. Works for ANY
-branch structure and lang filter (round-3): pruning is lossless
-because every doc in a pruned block has true score < theta, so it can
-be in neither the top-k nor affect their exact scores; branch
-filtering on partially-decoded docs can only produce false NEGATIVES
-for docs already proven out of the top-k. The selection itself is
-relational (a (term, salt, allowed) DataFrame joined into the segment
-scan) — driver state is one row per query term, never per block.
-total_hits is not computed in this mode (the reference's totalCount is
-likewise an estimate under Vespa's weakAnd).
+block-max + other terms' global maxima) reaches theta. Pruning is
+lossless for any branch structure and lang filter: every doc in a
+pruned block has true score < theta, so it can be in neither the top-k
+nor affect their exact scores; branch filtering on partially-decoded
+docs can only produce false NEGATIVES for docs already proven out of
+the top-k. The selection is relational (a (term, salt, allowed)
+DataFrame joined into the segment scan) — driver state is one row per
+query term, never per block. total_hits is not computed in this mode
+(the reference's totalCount is likewise an estimate under Vespa's
+weakAnd).
+
+Phrase search (``search_phrase``) and multi-field scoring keep their
+own relational frames; ``_topk_and_count`` is the generic reducer for
+them.
 """
 
 from __future__ import annotations
@@ -52,67 +53,55 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from micce_search_engine_spark import BLOCK_SIZE, BM25_B, BM25_K1
+from micce_search_engine_spark import BM25_B, BM25_K1
 from micce_search_engine_spark.functions.codec import bm25_wf, decode_postings
 from micce_search_engine_spark.operators.index_build import IndexPaths, bucket_of
-from micce_search_engine_spark.oracle import expand_branches
 
-_POSTING_SCHEMA = "term string, doc_id long, tf long, dl long"
 _POSTING_LANG_SCHEMA = "term string, doc_id long, tf long, dl long, lang_id long"
-_SCORE_SCHEMA = "term string, doc_id long, wf double"
-_SCORE_LANG_SCHEMA = "term string, doc_id long, wf double, lang_id long"
-_POSTING_LANG_POS_SCHEMA = (
-    "term string, doc_id long, tf long, dl long, lang_id long, positions array<int>"
-)
-_SCORE_POS_SCHEMA = "term string, doc_id long, wf double, positions array<int>"
+_POSTING_LANG_POS_SCHEMA = _POSTING_LANG_SCHEMA + ", positions array<int>"
+_SCHEMAS = {
+    "postings_lang": _POSTING_LANG_SCHEMA,
+    "postings_lang_pos": _POSTING_LANG_POS_SCHEMA,
+    "score": "term string, doc_id long, wf double",
+    "score_lang": "term string, doc_id long, wf double, lang_id long",
+    "score_pos": "term string, doc_id long, wf double, positions array<int>",
+}
 
 # fixed-point scale: contributions are floor(idf * wf * 1e9) int64
 SCORE_SCALE = 1e9
 MAX_BRANCHES = 8
 
 # segment columns each decode mode needs (column-pruned parquet scan)
-_META_COLS = ["term", "salt", "block_first_doc", "block_n"]
-_MODE_COLS = {
-    "postings": _META_COLS
-    + ["block_doc_off", "block_tf_off", "block_dl_off", "doc_blob", "tf_blob", "dl_blob"],
-    "postings_lang": _META_COLS
-    + [
-        "block_doc_off",
-        "block_tf_off",
-        "block_dl_off",
-        "block_lang_off",
-        "doc_blob",
-        "tf_blob",
-        "dl_blob",
-        "lang_blob",
-    ],
-    "score": _META_COLS
-    + ["block_doc_off", "block_tf_off", "block_dl_off", "doc_blob", "tf_blob", "dl_blob"],
-    "score_lang": _META_COLS
-    + [
-        "block_doc_off",
-        "block_tf_off",
-        "block_dl_off",
-        "block_lang_off",
-        "doc_blob",
-        "tf_blob",
-        "dl_blob",
-        "lang_blob",
-    ],
-}
-# positional variants (round-4 phrase support): same scans + the
-# optional 5th stream's columns
+_SEG_COLS = [
+    "term",
+    "salt",
+    "block_first_doc",
+    "block_n",
+    "block_doc_off",
+    "block_tf_off",
+    "block_dl_off",
+    "doc_blob",
+    "tf_blob",
+    "dl_blob",
+]
+_LANG_COLS = ["block_lang_off", "lang_blob"]
 _POS_COLS = ["block_pos_off", "pos_blob"]
-_MODE_COLS["postings_lang_pos"] = _MODE_COLS["postings_lang"] + _POS_COLS
-_MODE_COLS["score_pos"] = _MODE_COLS["score"] + _POS_COLS
-_MODE_COLS["score_pos_lang"] = _MODE_COLS["score_lang"] + _POS_COLS
-# block-annotated score mode (round-5 bounded phrase): same cheap scan
-# as ``score`` (NO pos_blob) but each posting carries its (salt, block)
-# coordinates, so candidate docs map back to the exact blocks a later
-# positional decode must touch
-_MODE_COLS["score_blk"] = _MODE_COLS["score"]
-_MODE_COLS["score_blk_lang"] = _MODE_COLS["score_lang"]
-_SCORE_BLK_SCHEMA = "term string, salt int, bi int, doc_id long, wf double"
+_MODE_COLS = {
+    "postings_lang": _SEG_COLS + _LANG_COLS,
+    "postings_lang_pos": _SEG_COLS + _LANG_COLS + _POS_COLS,
+    "score": _SEG_COLS,
+    "score_lang": _SEG_COLS + _LANG_COLS,
+    "score_pos": _SEG_COLS + _POS_COLS,
+}
+
+
+def _scan_cols(mode: str, lang_id: int | None) -> list[str]:
+    """Segment columns ``mode`` reads; a decode-side lang filter on the
+    lang-free score modes adds the lang stream."""
+    cols = _MODE_COLS[mode]
+    if lang_id is not None and "block_lang_off" not in cols:
+        cols = cols + _LANG_COLS
+    return cols
 
 
 def _batch_row_views(batch, names: list[str]):
@@ -158,19 +147,17 @@ def _batch_row_views(batch, names: list[str]):
     return rows
 
 
-def _decode_map(
-    mode: str = "postings",
-    lang_id: int | None = None,
-    avgdl: float = 1.0,
-):
-    """mapInArrow decoder factory.
+def _decode_map(mode: str, lang_id: int | None = None, avgdl: float = 1.0):
+    """mapInArrow decoder factory; output schema ``_SCHEMAS[mode]``.
 
     modes:
-      * ``postings``   -> (term, doc_id, tf, dl)            [probe/tests]
-      * ``score``      -> (term, doc_id, wf)                [single query;
-                          optional decode-side exact lang filter]
-      * ``score_lang`` -> (term, doc_id, wf, lang_id)       [batched
-                          queries with per-query lang filters]
+      * ``postings_lang`` / ``postings_lang_pos`` -> (term, doc_id, tf,
+        dl, lang_id[, positions])  [upsert rewrite, decoded cache]
+      * ``score`` / ``score_pos`` -> (term, doc_id, wf[, positions])
+                                   [phrase, multifield; optional
+                                    decode-side exact lang filter]
+      * ``score_lang`` -> (term, doc_id, wf, lang_id)  [the BM25
+                          evaluator, per-query lang filters]
 
     Block-max WAND restriction rides the DATA, not the closure: when
     the incoming batch carries an ``allowed`` array<int> column (added
@@ -182,17 +169,11 @@ def _decode_map(
     (<= blocks-per-segment-row = max_postings_per_row/BLOCK_SIZE ints
     per row).
     """
-    want_lang = mode in ("score_lang", "postings_lang", "postings_lang_pos") or (
-        mode in ("score", "score_pos", "score_blk") and lang_id is not None
-    )
-    want_pos = mode in ("postings_lang_pos", "score_pos")
-    want_blk = mode == "score_blk"
-    if mode in ("score", "score_blk") and lang_id is not None:
-        cols = _MODE_COLS[mode + "_lang"]
-    elif mode == "score_pos" and lang_id is not None:
-        cols = _MODE_COLS["score_pos_lang"]
-    else:
-        cols = _MODE_COLS[mode]
+    scoring = mode.startswith("score")
+    emit_lang = "lang" in mode
+    want_lang = emit_lang or lang_id is not None
+    want_pos = mode.endswith("_pos")
+    cols = _scan_cols(mode, lang_id)
 
     def fn(it):
         import pyarrow as pa
@@ -201,175 +182,71 @@ def _decode_map(
             if batch.num_rows == 0:
                 continue
             names = cols + (["allowed"] if "allowed" in batch.schema.names else [])
-            rows = _batch_row_views(batch, names)
             terms, sizes = [], []
-            docs_out, a_out, b_out, c_out = [], [], [], []
+            docs_out, a_out, b_out, lang_out = [], [], [], []
             pos_out, plen_out = [], []
-            salt_out, blk_out = [], []
-            for row in rows:
+            for row in _batch_row_views(batch, names):
                 mask = None
                 allowed = row.get("allowed")
                 if allowed is not None:
                     mask = np.zeros(len(row["block_first_doc"]), dtype=bool)
                     mask[np.asarray(allowed, dtype=np.int64)] = True
-                dec = list(
-                    decode_postings(
-                        row,
-                        mask,
-                        want_lang=want_lang,
-                        want_positions=want_pos,
-                        want_block=want_blk,
-                    )
+                dec = decode_postings(
+                    row, mask, want_lang=want_lang, want_positions=want_pos
                 )
-                bis = dec.pop() if want_blk else None
                 docs, tfs, dls = dec[0], dec[1], dec[2]
                 langs = dec[3] if want_lang else None
-                pos = dec[3 + int(want_lang)] if want_pos else None
-                if mode in ("score", "score_pos", "score_blk") and lang_id is not None:
+                pos = dec[-1] if want_pos else None
+                if lang_id is not None:
                     keep = langs == lang_id
                     if want_pos:
                         pos = pos[np.repeat(keep, tfs)]
-                    if want_blk:
-                        bis = bis[keep]
                     docs, tfs, dls = docs[keep], tfs[keep], dls[keep]
                 if not docs.size:
                     continue
                 terms.append(row["term"])
                 sizes.append(docs.size)
                 docs_out.append(docs)
-                if mode in ("postings", "postings_lang", "postings_lang_pos"):
+                if scoring:
+                    a_out.append(bm25_wf(tfs, dls, avgdl, BM25_K1, BM25_B))
+                else:
                     a_out.append(tfs)
                     b_out.append(dls)
-                    if mode in ("postings_lang", "postings_lang_pos"):
-                        c_out.append(langs)
-                else:
-                    a_out.append(bm25_wf(tfs, dls, avgdl, BM25_K1, BM25_B))
-                    if mode == "score_lang":
-                        b_out.append(langs)
+                if emit_lang:
+                    lang_out.append(langs)
                 if want_pos:
                     pos_out.append(pos)
                     plen_out.append(tfs)
-                if want_blk:
-                    salt_out.append(
-                        np.full(docs.size, int(row["salt"]), dtype=np.int32)
-                    )
-                    blk_out.append(bis.astype(np.int32))
-            if docs_out:
-                # expand the per-row term to per-posting rows with a
-                # C-level take (Spark can't consume Arrow dictionary
-                # arrays directly)
-                idx = np.repeat(
-                    np.arange(len(terms), dtype=np.int64), np.asarray(sizes)
-                )
-                term_arr = pa.array(terms, type=pa.string()).take(pa.array(idx))
-                if want_blk:
-                    yield pa.RecordBatch.from_arrays(
-                        [
-                            term_arr,
-                            pa.array(np.concatenate(salt_out)),
-                            pa.array(np.concatenate(blk_out)),
-                            pa.array(np.concatenate(docs_out)),
-                            pa.array(np.concatenate(a_out)),
-                        ],
-                        names=["term", "salt", "bi", "doc_id", "wf"],
-                    )
-                    continue
-                arrays = [term_arr, pa.array(np.concatenate(docs_out))]
-                names = ["term", "doc_id"]
-                if mode in ("postings", "postings_lang", "postings_lang_pos"):
-                    arrays += [pa.array(np.concatenate(a_out)), pa.array(np.concatenate(b_out))]
-                    names += ["tf", "dl"]
-                    if mode in ("postings_lang", "postings_lang_pos"):
-                        arrays.append(pa.array(np.concatenate(c_out)))
-                        names.append("lang_id")
-                elif mode in ("score", "score_pos"):
-                    arrays.append(pa.array(np.concatenate(a_out)))
-                    names.append("wf")
-                else:
-                    arrays += [pa.array(np.concatenate(a_out)), pa.array(np.concatenate(b_out))]
-                    names += ["wf", "lang_id"]
-                if want_pos:
-                    plens = np.concatenate(plen_out)
-                    offsets = np.concatenate(([0], np.cumsum(plens))).astype(np.int32)
-                    arrays.append(
-                        pa.ListArray.from_arrays(
-                            pa.array(offsets, type=pa.int32()),
-                            pa.array(np.concatenate(pos_out).astype(np.int32)),
-                        )
-                    )
-                    names.append("positions")
-                yield pa.RecordBatch.from_arrays(arrays, names=names)
-
-    return fn
-
-
-def _single_term_topk_fn(idf_t: float, k: int, lang_id: int | None, avgdl: float):
-    """mapInArrow: segment rows of ONE term -> per-partition top-k +
-    count marker rows (the _topk_and_count partition contract), fusing
-    decode, scoring and the local top-k into a single Python pass
-    (round-6; the relational shape chained a mapInArrow decode into a
-    mapInPandas top-k — two JVM<->Python crossings of every posting).
-    Scores are floor(idf*wf*1e9)/1e9 with int64 floors — the identical
-    fixed-point arithmetic as contrib_fx."""
-    want_lang = lang_id is not None
-    cols = _MODE_COLS["score_lang" if want_lang else "score"]
-
-    def fn(it):
-        import pyarrow as pa
-
-        docs_acc: list = []
-        scores_acc: list = []
-        cnt = 0
-
-        def compact(docs, scores):
-            order = np.lexsort((docs, -scores))[:k]
-            return docs[order], scores[order]
-
-        for batch in it:
-            if batch.num_rows == 0:
+            if not docs_out:
                 continue
-            for row in _batch_row_views(batch, cols):
-                dec = decode_postings(row, None, want_lang=want_lang)
-                docs, tfs, dls = dec[0], dec[1], dec[2]
-                if want_lang:
-                    keep = dec[3] == lang_id
-                    docs, tfs, dls = docs[keep], tfs[keep], dls[keep]
-                if not docs.size:
-                    continue
-                cnt += docs.size
-                wf = bm25_wf(tfs, dls, avgdl, BM25_K1, BM25_B)
-                fx = np.floor(idf_t * wf * SCORE_SCALE).astype(np.int64)
-                docs_acc.append(docs)
-                scores_acc.append(fx.astype(np.float64) / SCORE_SCALE)
-                if sum(d.size for d in docs_acc) > 8 * k:
-                    d, s = compact(
-                        np.concatenate(docs_acc), np.concatenate(scores_acc)
+            # expand the per-row term to per-posting rows with a C-level
+            # take (Spark can't consume Arrow dictionary arrays directly)
+            idx = np.repeat(np.arange(len(terms), dtype=np.int64), np.asarray(sizes))
+            arrays = [
+                pa.array(terms, type=pa.string()).take(pa.array(idx)),
+                pa.array(np.concatenate(docs_out)),
+                pa.array(np.concatenate(a_out)),
+            ]
+            names = ["term", "doc_id", "wf" if scoring else "tf"]
+            if not scoring:
+                arrays.append(pa.array(np.concatenate(b_out)))
+                names.append("dl")
+            if emit_lang:
+                arrays.append(pa.array(np.concatenate(lang_out)))
+                names.append("lang_id")
+            if want_pos:
+                plens = np.concatenate(plen_out)
+                offsets = np.concatenate(([0], np.cumsum(plens))).astype(np.int32)
+                arrays.append(
+                    pa.ListArray.from_arrays(
+                        pa.array(offsets, type=pa.int32()),
+                        pa.array(np.concatenate(pos_out).astype(np.int32)),
                     )
-                    docs_acc, scores_acc = [d], [s]
-        if cnt:
-            d, s = compact(np.concatenate(docs_acc), np.concatenate(scores_acc))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(np.append(d, -1)),
-                    pa.array(np.append(s, 0.0)),
-                    pa.array(np.append(np.zeros(d.size, dtype=np.int64), cnt)),
-                    pa.array(np.append(np.zeros(d.size, dtype=bool), True)),
-                ],
-                names=["doc_id", "score", "n", "is_marker"],
-            )
+                )
+                names.append("positions")
+            yield pa.RecordBatch.from_arrays(arrays, names=names)
 
     return fn
-
-
-def _merge_topk_rows(rows, k: int) -> tuple[int, list]:
-    """Driver merge of per-partition top-k + count-marker rows (the
-    shared tail of _topk_and_count and the fused single-term path)."""
-    total = int(sum(r["n"] for r in rows if r["is_marker"]))
-    top = sorted(
-        (r for r in rows if not r["is_marker"]),
-        key=lambda r: (-r["score"], r["doc_id"]),
-    )
-    return total, top[:k]
 
 
 def _topk_and_count(cand: DataFrame, k: int) -> tuple[int, list]:
@@ -404,7 +281,12 @@ def _topk_and_count(cand: DataFrame, k: int) -> tuple[int, list]:
     rows = cand.mapInPandas(
         part, "doc_id long, score double, n long, is_marker boolean"
     ).collect()
-    return _merge_topk_rows(rows, k)
+    total = int(sum(r["n"] for r in rows if r["is_marker"]))
+    top = sorted(
+        (r for r in rows if not r["is_marker"]),
+        key=lambda r: (-r["score"], r["doc_id"]),
+    )
+    return total, top[:k]
 
 
 def _shift_positions(col, off: int):
@@ -594,18 +476,38 @@ class SearchEngine:
             df = df.select(*cols)  # prune blob columns the mode won't read
         return df
 
+    def _segment_scan(
+        self,
+        terms: list[str],
+        mode: str,
+        lang_id: int | None = None,
+        block_join: DataFrame | None = None,
+    ) -> DataFrame:
+        """Pruned segment rows of ``terms`` carrying the columns ``mode``
+        decodes. ``block_join``: optional (term, salt, allowed
+        array<int>) selection — inner-joined so only surviving blocks are
+        decoded (segment rows with no selection row drop out entirely)."""
+        seg = self._segments_for(terms, _scan_cols(mode, lang_id))
+        if block_join is not None:
+            # FORCE broadcast of the selection side: it is small by
+            # construction (one row per (term,salt) of the query's
+            # terms, each holding <= blocks-per-row ints), but it sits
+            # behind aggregates whose size AQE misestimates — a fallback
+            # to sort-merge would shuffle the SEGMENT side's blob
+            # columns, which measured 3x slower than no pruning at all
+            seg = seg.join(F.broadcast(block_join), ["term", "salt"])
+        return seg
+
     def _postings(
         self,
         terms: list[str],
         block_join: DataFrame | None = None,
-        mode: str = "postings",
+        mode: str = "score",
         lang_id: int | None = None,
     ) -> DataFrame:
-        """Decoded postings of ``terms``. ``block_join``: optional
-        (term, salt, allowed array<int>) selection — inner-joined into
-        the segment scan so only surviving blocks are decoded (segment
-        rows with no selection row drop out entirely)."""
-        want_lang = mode == "score_lang" or (mode == "score" and lang_id is not None)
+        """Decoded postings of ``terms`` (schema ``_SCHEMAS[mode]``), from
+        the pinned decoded cache when it can serve ``mode``, else
+        decoded from :meth:`_segment_scan`."""
         if (
             self._decoded_cached is not None
             and block_join is None
@@ -632,68 +534,13 @@ class SearchEngine:
                     out = out.filter(F.col("lang_id") == lang_id)
                 return out.select("term", "doc_id", "wf")
             return out.select("term", "doc_id", "wf", "lang_id")
-        if mode in ("score", "score_blk") and lang_id is not None:
-            cols = _MODE_COLS[mode + "_lang"]
-        elif mode == "score_pos" and lang_id is not None:
-            cols = _MODE_COLS["score_pos_lang"]
-        else:
-            cols = _MODE_COLS[mode]
-        schema = {
-            "postings": _POSTING_SCHEMA,
-            "postings_lang": _POSTING_LANG_SCHEMA,
-            "postings_lang_pos": _POSTING_LANG_POS_SCHEMA,
-            "score": _SCORE_SCHEMA,
-            "score_lang": _SCORE_LANG_SCHEMA,
-            "score_pos": _SCORE_POS_SCHEMA,
-            "score_blk": _SCORE_BLK_SCHEMA,
-        }[mode]
-        seg = self._segments_for(terms, cols)
-        if block_join is not None:
-            # FORCE broadcast of the selection side: it is small by
-            # construction (one row per (term,salt) of the query's
-            # terms, each holding <= blocks-per-row ints), but it sits
-            # behind aggregates whose size AQE misestimates — a fallback
-            # to sort-merge would shuffle the SEGMENT side's blob
-            # columns, which measured 3x slower than no pruning at all
-            seg = seg.join(F.broadcast(block_join), ["term", "salt"])
-        return seg.mapInArrow(_decode_map(mode, lang_id, self.avgdl), schema)
+        return self._segment_scan(terms, mode, lang_id, block_join).mapInArrow(
+            _decode_map(mode, lang_id, self.avgdl), _SCHEMAS[mode]
+        )
 
     def _idf_expr(self, idf: dict[str, float]):
         return F.create_map(
             *[x for t, v in sorted(idf.items()) for x in (F.lit(t), F.lit(float(v)))]
-        )
-
-    def _scored(
-        self,
-        postings: DataFrame,
-        idf: dict[str, float],
-        branches: list[list[str]],
-    ) -> DataFrame:
-        """(doc_id, score double) for docs matching some branch."""
-        all_terms = {t for b in branches for t in b}
-        if len(all_terms) == 1:
-            # single-term query (round-4): a doc holds exactly ONE
-            # posting of a term (salted sub-rows cover disjoint doc
-            # ranges), so the per-doc aggregate is the identity and the
-            # branch predicate is trivially true — drop the groupBy
-            # SHUFFLE entirely; the fused count+top-k then runs as one
-            # narrow single-stage job. Covers the stopword/hot-term
-            # serving pattern, the dominant interactive case.
-            per = postings.withColumn(
-                "score_fx",
-                contrib_fx(self._idf_expr(idf)[F.col("term")], F.col("wf")),
-            )
-            return per.select(
-                "doc_id", (F.col("score_fx") / F.lit(SCORE_SCALE)).alias("score")
-            )
-        per_term = postings.withColumn(
-            "w_fx", contrib_fx(self._idf_expr(idf)[F.col("term")], F.col("wf"))
-        )
-        agg = per_term.groupBy("doc_id").agg(
-            F.sum("w_fx").alias("score_fx"), *branch_count_aggs(branches)
-        )
-        return agg.filter(branch_match_pred(branches)).select(
-            "doc_id", (F.col("score_fx") / F.lit(SCORE_SCALE)).alias("score")
         )
 
     # -- block-max WAND ------------------------------------------------
@@ -726,77 +573,11 @@ class SearchEngine:
             ).alias("s"),
         ).collect()
         term_ub = {r["term"]: float(r["ub"]) for r in rows}
-        if not rows:
-            sel = self.spark.createDataFrame(
-                [], "term string, salt int, allowed array<int>"
-            )
-        else:
-            sel = self.spark.createDataFrame(
-                [(r["term"], int(r["s"]["salt"]), [int(r["s"]["bi"])]) for r in rows],
-                "term string, salt int, allowed array<int>",
-            )
+        sel = self.spark.createDataFrame(
+            [(r["term"], int(r["s"]["salt"]), [int(r["s"]["bi"])]) for r in rows],
+            "term string, salt int, allowed array<int>",
+        )
         return term_ub, sel
-
-    def _best_block_selection(self, blocks: DataFrame) -> DataFrame:
-        return self._term_ub_and_best(blocks)[1]
-
-    def _wand_block_selection(
-        self,
-        terms: list[str],
-        idf: dict[str, float],
-        k: int,
-        branches: list[list[str]],
-        lang_id: int | None = None,
-    ) -> DataFrame | None:
-        """Surviving-block selection (term, salt, allowed array<int>)
-        DataFrame, or None when pruning isn't safe (fewer than k probe
-        matches). Fully relational (round-2 verdict item): the only
-        driver state is one row per QUERY TERM (upper bounds) and the
-        k probe scores — never per-block.
-
-        Generalized past round 2's single-term-branch restriction:
-        theta from the probe is a valid lower bound for any branch
-        structure (a doc fully matching a branch within the best
-        blocks truly matches, and its probe score is <= its true
-        score), and a block is pruned only when its own max plus ALL
-        other terms' global maxima cannot reach theta — which bounds
-        every doc in the block regardless of branch semantics. A lang
-        filter only shrinks the probe (bounds ignore lang: safe)."""
-        blocks = self._wand_blocks(terms, idf)
-        term_ub, best_sel = self._term_ub_and_best(blocks)
-        if not term_ub:
-            return best_sel  # empty: no segments -> decode nothing
-        lb = (
-            self._scored(
-                self._postings(
-                    terms,
-                    block_join=best_sel,
-                    mode="score",
-                    lang_id=lang_id,
-                ),
-                idf,
-                branches,
-            )
-            .orderBy(F.desc("score"), "doc_id")
-            .limit(k)
-            .collect()
-        )
-        if len(lb) < k:
-            return None  # not enough evidence to prune safely
-        theta = lb[-1]["score"]
-        total_ub = sum(term_ub.values())
-        # per-term pruning threshold: block survives iff
-        # bound >= theta - (total_ub - ub_term) — tiny driver map
-        thr = self.spark.createDataFrame(
-            [(t, float(theta - (total_ub - ub))) for t, ub in term_ub.items()],
-            "term string, thr double",
-        )
-        surviving = blocks.join(F.broadcast(thr), "term").filter(
-            F.col("bound") >= F.col("thr")
-        )
-        return surviving.groupBy("term", "salt").agg(
-            F.collect_list("bi").alias("allowed")
-        )
 
     # -- phrase search (round-4; fused single-decode round-6) -------------
 
@@ -1088,83 +869,30 @@ class SearchEngine:
 
         limit/page semantics replicate queryBuilder.go:40-41 +
         response.go:40-42 exactly (limit' = limit*page, offset =
-        limit*(page-1), last_page = total - limit*page <= 0).
+        limit*(page-1), last_page = total - limit*page <= 0). Runs as a
+        batch of one through the shared BM25 evaluator and pager
+        (operators/batch_query.py); ``topk_only`` takes its adaptive
+        WAND path and reports no totals. Raises ValueError unless
+        limit >= 1 and page >= 1.
         """
-        if limit < 1 or page < 1:
-            raise ValueError("limit and page are required and must be >= 1")
-        branches = expand_branches(query_text, self.synonyms)
-        if not branches:
-            return {"total_hits": 0, "last_page": True, "results": []}
-        all_terms = sorted({t for b in branches for t in b})
-        idf = self.idf_map(all_terms)
-        k = limit * page
-        lid = self.lang_id_of(lang_filter)
+        from micce_search_engine_spark.operators.batch_query import _batch_pages
 
-        block_sel = None
+        query = {
+            "query_id": 0,
+            "query_text": query_text,
+            "lang_filter": lang_filter,
+            "limit": limit,
+            "page": page,
+        }
+        totals, pages = _batch_pages(self, [query], topk_only=topk_only)
+        results = [
+            (int(d), float(s)) for d, s in zip(pages["doc_id"], pages["score"])
+        ]
         if topk_only:
-            # ADAPTIVE engagement (round-4, VERDICT r3 #3): the probe
-            # machinery costs ~3 extra Spark jobs (block-metadata agg,
-            # probe decode + top-k, threshold build) that only pay off
-            # once the decode volume it prunes dominates — proven past
-            # ~the 1M-doc crossover for batches, and plainly NOT at
-            # 100k docs where full decode of a stopword is ~1 s. Skip
-            # the probe when the candidate decode volume (sum of the
-            # query terms' dfs — already cached driver-side by
-            # idf_map, zero extra jobs) is below
-            # ``wand_engage_factor * k * BLOCK_SIZE`` postings; the
-            # exact path then runs, which returns the identical top-k
-            # (pruning is lossless, so engagement is purely a
-            # performance choice).
-            sum_df = sum(self._df_cache.get(t, 0) for t in all_terms)
-            if sum_df >= self.wand_engage_factor * k * BLOCK_SIZE:
-                # generalized block-max WAND: any branch structure, any
-                # lang filter (round-2 restriction lifted)
-                block_sel = self._wand_block_selection(
-                    all_terms, idf, k, branches, lang_id=lid
-                )
-
-        if not topk_only and len(all_terms) == 1 and self._decoded_cached is None:
-            # single-term exact query (round-6): decode + score + local
-            # top-k + count in ONE Python pass over the pruned segment
-            # scan — the relational shape chained two Python nodes
-            # (decode, then the fused top-k) and shipped every posting
-            # across the JVM boundary twice
-            t = all_terms[0]
-            cols = _MODE_COLS["score_lang" if lid is not None else "score"]
-            rows = (
-                self._segments_for([t], cols)
-                .mapInArrow(
-                    _single_term_topk_fn(float(idf[t]), k, lid, self.avgdl),
-                    "doc_id long, score double, n long, is_marker boolean",
-                )
-                .collect()
-            )
-            total, top = _merge_topk_rows(rows, k)
-            offset = limit * (page - 1)
-            window = top[offset : offset + limit]
-            return {
-                "total_hits": total,
-                "last_page": total - limit * page <= 0,
-                "results": [(r["doc_id"], r["score"]) for r in window],
-            }
-        cand = self._scored(
-            self._postings(all_terms, block_sel, mode="score", lang_id=lid),
-            idf,
-            branches,
-        )
-        if topk_only:
-            total = None
-            top = cand.orderBy(F.desc("score"), F.asc("doc_id")).limit(k).collect()
-        else:
-            # fused count + top-k: ONE job (each partition emits its
-            # local top-k plus a count marker row; driver merges) —
-            # round 2 ran count and orderBy as two jobs over a
-            # persisted candidate set
-            total, top = _topk_and_count(cand, k)
-        offset = limit * (page - 1)
-        window = top[offset : offset + limit]
+            return {"total_hits": None, "last_page": None, "results": results}
+        total = int(totals.get(0, 0))
         return {
             "total_hits": total,
-            "last_page": (total - limit * page <= 0) if total is not None else None,
-            "results": [(r["doc_id"], r["score"]) for r in window],
+            "last_page": total - limit * page <= 0,
+            "results": results,
         }

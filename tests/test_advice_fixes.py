@@ -142,20 +142,23 @@ def test_idf_lru_eviction_keeps_current_call_terms(spark, tiny_index, synonyms):
     assert set(out) == {"the", "w000001", "w000002", "w000003"}
 
 
-def test_adaptive_wand_skips_probe_at_small_scale(spark, tiny_index, synonyms):
+def test_adaptive_wand_skips_probe_at_small_scale(
+    spark, tiny_index, synonyms, monkeypatch
+):
     """Round-4: below the engagement floor topk_only must return the
-    exact top-k WITHOUT the probe's extra jobs (selection is None)."""
+    exact top-k WITHOUT the probe's extra jobs (no block selection)."""
+    import micce_search_engine_spark.operators.batch_query as bq
     from micce_search_engine_spark.operators.query import SearchEngine
 
     eng = SearchEngine(spark, tiny_index, synonyms=synonyms)
     calls = []
-    orig = eng._wand_block_selection
+    orig = bq._batch_wand_selection
 
     def spy(*a, **kw):
         calls.append(1)
         return orig(*a, **kw)
 
-    eng._wand_block_selection = spy
+    monkeypatch.setattr(bq, "_batch_wand_selection", spy)
     exact = eng.search("the", limit=10, page=1)
     skipped = eng.search("the", limit=10, page=1, topk_only=True)
     assert not calls  # probe never engaged below the floor

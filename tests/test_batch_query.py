@@ -1,6 +1,6 @@
 """Batched multi-query plan vs the single-query engine and the oracle:
 same hits, same fixed-point scores, same totals/pagination — one
-relational plan for N queries (SURVEY.md §2D)."""
+evaluator plan for N queries (SURVEY.md §2D)."""
 
 import pytest
 
@@ -188,25 +188,87 @@ def test_batch_phrase_flag(spark, tiny_pages_pdf, synonyms, tmp_path_factory):
     assert gotw == expw
 
 
-def test_vectorized_plan_matches_join_plan(spark, tiny_index, synonyms):
-    """Round-6: the doc-partitioned vectorized evaluator (dense
-    docs x vocabulary numpy panel, fused per-partition top-k/count)
-    must return row-identical candidates AND identical final frames to
-    the qweights-join fallback plan it replaced."""
+def test_large_batch_matches_single_search(spark, tiny_index, synonyms, monkeypatch):
+    """A batch of more than 256 queries (SPECS re-numbered), split into
+    several driver-merge chunks, returns row for row what per-query
+    search returns: same docs, scores, ranks, totals and last_page."""
     import micce_search_engine_spark.operators.batch_query as bq
 
     eng = SearchEngine(spark, tiny_index, synonyms=synonyms)
-    new_rows = sorted(map(tuple, search_batch(eng, SPECS).collect()))
-    new_cand, _, reduced = bq._candidates(eng, SPECS, with_score=True)
-    assert not reduced  # no reduce requested -> plain candidate rows
-    new_c = sorted(map(tuple, new_cand.collect()))
-    old_max = bq.BATCH_EXPR_MAX
-    bq.BATCH_EXPR_MAX = 0  # force the join fallback
-    try:
-        old_rows = sorted(map(tuple, search_batch(eng, SPECS).collect()))
-        old_cand, _, _ = bq._candidates(eng, SPECS, with_score=True)
-        old_c = sorted(map(tuple, old_cand.collect()))
-    finally:
-        bq.BATCH_EXPR_MAX = old_max
-    assert new_c == old_c
-    assert new_rows == old_rows
+    copies = 50
+    specs = [
+        dict(s, query_id=c * len(SPECS) + s["query_id"])
+        for c in range(copies)
+        for s in SPECS
+    ]
+    # 8 shuffle partitions x (maxk 14 + 1) rows per query -> 64-query chunks
+    monkeypatch.setattr(bq, "DRIVER_MERGE_MAX_ROWS", 8 * 15 * 64)
+    rows = search_batch(eng, specs).collect()
+    by_q = {}
+    for r in rows:
+        by_q.setdefault(r["query_id"], []).append(
+            (r["doc_id"], r["score"], r["rank"], r["total_hits"], r["last_page"])
+        )
+    for s in SPECS:
+        single = eng.search(
+            s["query_text"], lang_filter=s["lang_filter"],
+            limit=s["limit"], page=s["page"],
+        )
+        exp = [
+            (d, sc, rank, single["total_hits"], single["last_page"])
+            for rank, (d, sc) in enumerate(single["results"], start=1)
+        ]
+        for c in range(copies):
+            assert by_q.get(c * len(SPECS) + s["query_id"], []) == exp, (c, s)
+
+
+def test_batch_entries_reject_bad_limit_page(spark, tiny_index, synonyms):
+    from micce_search_engine_spark.operators.batch_query import search_batch_topk
+
+    eng = SearchEngine(spark, tiny_index, synonyms=synonyms)
+    for bad in ({"limit": 5, "page": 0}, {"limit": 0, "page": 1}):
+        specs = [SPECS[0], dict(SPECS[1], **bad)]
+        for entry in (search_batch, search_batch_topk, totals_batch):
+            with pytest.raises(ValueError):
+                entry(eng, specs)
+
+
+def test_single_search_unknown_lang_matches_nothing(spark, tiny_index, synonyms):
+    """lang_id_of maps an unknown lang to -1, which the evaluator reads
+    as "no filter" — the batch-of-one compile must turn it into a
+    filter that matches nothing."""
+    eng = SearchEngine(spark, tiny_index, synonyms=synonyms)
+    assert eng.search("the", limit=5, page=1)["total_hits"] > 0
+    res = eng.search("the", lang_filter="nolang", limit=5, page=1)
+    assert res == {"total_hits": 0, "last_page": True, "results": []}
+
+
+def _exchanges(df) -> list[str]:
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]  # AQE prints both plans
+    return [ln.strip() for ln in final.splitlines() if "Exchange" in ln]
+
+
+@pytest.mark.parametrize(
+    "texts, n_exchanges",
+    [
+        (["the"], 0),  # one distinct term: decode + evaluate in one pass
+        (["the", "of"], 0),  # a batch of single-term queries
+        (["the of"], 1),  # multi-term
+        (["alias0"], 1),  # synonym: two branches, two terms
+    ],
+)
+def test_eval_plan_shape(spark, tiny_index, synonyms, texts, n_exchanges):
+    """Single-term calls run shuffle-free; every other call repartitions
+    the decoded postings by doc_id exactly once."""
+    from micce_search_engine_spark.operators.batch_query import _eval_plan
+
+    eng = SearchEngine(spark, tiny_index, synonyms=synonyms)
+    specs = [
+        {"query_id": i, "query_text": t, "lang_filter": None, "limit": 10, "page": 1}
+        for i, t in enumerate(texts)
+    ]
+    ex = _exchanges(_eval_plan(eng, specs, 10))
+    assert len(ex) == n_exchanges, ex
+    assert all("hashpartitioning(doc_id" in ln for ln in ex), ex

@@ -214,7 +214,7 @@ def test_phrase_positional_decode_is_bounded(spark, tiny_pages_pdf, tmp_path_fac
     calls = []
     orig = eng._postings
 
-    def spy(terms, block_join=None, mode="postings", lang_id=None):
+    def spy(terms, block_join=None, mode="score", lang_id=None):
         calls.append((tuple(terms), mode, block_join is not None))
         return orig(terms, block_join=block_join, mode=mode, lang_id=lang_id)
 

@@ -155,3 +155,21 @@ def test_paged_pdf_matches_loop(with_totals):
         assert int(a[0]) == b[0] and int(a[1]) == b[1] and a[2] == b[2] and int(a[3]) == b[3]
         if with_totals:
             assert int(a[4]) == b[4] and bool(a[5]) == b[5]
+
+
+def test_paged_pdf_window_stays_inside_its_query():
+    """ADVICE #1: page=0 put lo = left - limit, so query 2's window
+    reached back into query 1's rows (docs 11 and 12 under id 2)."""
+    pdf = pd.DataFrame(
+        {"query_id": [1, 1, 2], "doc_id": [11, 12, 21], "score": [2.0, 1.0, 3.0]}
+    )
+    queries = [
+        {"query_id": 1, "limit": 2, "page": 1},
+        {"query_id": 2, "limit": 2, "page": 0},
+    ]
+    got = _paged_pdf(pdf, queries, totals=None)
+    assert list(zip(got["query_id"], got["doc_id"])) == [(1, 11), (1, 12)]
+    assert [tuple(r) for r in _loop_paged(pdf, queries, None)] == [
+        (1, 11, 2.0, 1),
+        (1, 12, 1.0, 2),
+    ]

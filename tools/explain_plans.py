@@ -4,8 +4,8 @@ Evidence that the plans are the ones you'd want at 100 TB:
   * parquet scans carry PushedFilters / PartitionFilters and pruned
     ReadSchema (no blob columns in metadata-only scans);
   * small sides broadcast (BroadcastHashJoin / BroadcastExchange);
-  * aggregates are partial (map-side combine) long-sum HashAggregates
-    inside WholeStageCodegen spans — no array buffers;
+  * every keyword query runs through one vectorized BM25 evaluator
+    (MapInArrow) with at most one doc_id Exchange in front of it;
   * the LSH ANN indexed path shows bucket partition pruning.
 
 Usage: python tools/explain_plans.py [n_docs]
@@ -34,7 +34,10 @@ def main() -> None:
     import shutil
 
     from micce_search_engine_spark.corpus import gen_pages, gen_synonyms, pages_spark_schema
-    from micce_search_engine_spark.operators.batch_query import _candidates
+    from micce_search_engine_spark.operators.batch_query import (
+        _batch_wand_selection,
+        _eval_plan,
+    )
     from micce_search_engine_spark.operators.index_build import build_index
     from micce_search_engine_spark.operators.query import SearchEngine
     from micce_search_engine_spark.session import get_spark
@@ -53,31 +56,29 @@ def main() -> None:
 
     sections: list[tuple[str, str, str]] = []
 
-    # single-query scoring plan
-    branches = [["the"], ["w000001"]]
-    idf = eng.idf_map(["the", "w000001"])
-    single = eng._scored(
-        eng._postings(["the", "w000001"], mode="score", lang_id=0), idf, branches
-    )
+    def spec(qid, text, lang=None, limit=10, page=1):
+        return {"query_id": qid, "query_text": text, "lang_filter": lang,
+                "limit": limit, "page": page}
+
+    # the one BM25 evaluator, in its three plan shapes
     sections.append(
         (
-            "Single-query BM25 (decode -> fixed-point hash aggregate)",
-            "Look for: PartitionFilters [bucket IN ...] + PushedFilters on term; "
-            "ReadSchema WITHOUT unused blob columns; partial_sum(LongType) "
-            "HashAggregate in WholeStageCodegen.",
-            explain(single),
+            "BM25 evaluator, single-term query (shuffle-free)",
+            "Look for: NO Exchange anywhere — a doc holds exactly one posting "
+            "of a term, so decode and evaluation run as ONE MapInArrow over the "
+            "bucket-pruned segment scan (PartitionFilters [bucket IN ...], "
+            "PushedFilters on term, ReadSchema WITHOUT unused blob columns).",
+            explain(_eval_plan(eng, [spec(0, "the")], 10)),
         )
     )
-
-    # single-TERM query: no aggregate, no shuffle (round-4)
-    idf1 = eng.idf_map(["the"])
     sections.append(
         (
-            "Single-TERM query (round-4: shuffle-free)",
-            "Look for: NO Exchange anywhere — a doc holds exactly one posting "
-            "of a term, so scoring is a Project over the decode; the fused "
-            "count+top-k then runs as one narrow stage.",
-            explain(eng._scored(eng._postings(["the"], mode="score"), idf1, [["the"]])),
+            "BM25 evaluator, multi-term query (one doc_id shuffle)",
+            "Look for: the decode MapInArrow, then exactly ONE Exchange "
+            "hashpartitioning(doc_id) + Sort, then the evaluator MapInArrow "
+            "emitting per-partition top-k + count markers — no aggregate, no "
+            "window.",
+            explain(_eval_plan(eng, [spec(0, "the w000001", lang="en")], 10)),
         )
     )
 
@@ -105,34 +106,25 @@ def main() -> None:
     sections.append(
         (
             "Serving-mode decoded cache (round-4: preload='decoded')",
-            "Look for: InMemoryTableScan (no parquet, no MapInArrow) with the "
+            "Look for: InMemoryTableScan (no parquet, no decode) with the "
             "term filter applied against the cached columnar batches; wf "
-            "recomputed as Column math.",
-            explain(
-                srv._scored(
-                    srv._postings(["the"], mode="score"), idf1, [["the"]]
-                )
-            ),
+            "recomputed as Column math feeding the evaluator MapInArrow.",
+            explain(_eval_plan(srv, [spec(0, "the")], 10)),
         )
     )
     srv._decoded_cached.unpersist()
     srv._segments_cached.unpersist()
 
     # batched plan
-    specs = [
-        {"query_id": 0, "query_text": "the w000002", "lang_filter": "en", "limit": 10, "page": 1},
-        {"query_id": 1, "query_text": "alias0", "lang_filter": None, "limit": 5, "page": 2},
-    ]
-    cand, _, _ = _candidates(eng, specs, with_score=True)
+    specs = [spec(0, "the w000002", lang="en"), spec(1, "alias0", limit=5, page=2)]
     sections.append(
         (
-            "Batched BM25 candidates (N queries, one plan)",
-            "Look for (round-6 vectorized plan, batches <= 256 queries): ONE "
-            "Exchange hashpartitioning(doc_id) of the decoded postings — no "
-            "per-query fan-out join, no (query_id, doc_id) aggregate — then a "
-            "single MapInArrow evaluating every query's candidacy + fixed-point "
-            "score vectorized per doc chunk.",
-            explain(cand),
+            "BM25 evaluator, batch (N queries, one plan)",
+            "Look for: the same shape as the multi-term query — ONE Exchange "
+            "hashpartitioning(doc_id) of the decoded postings, no per-query "
+            "fan-out join — then a single MapInArrow evaluating every query's "
+            "candidacy + fixed-point score vectorized per doc chunk.",
+            explain(_eval_plan(eng, specs, 10)),
         )
     )
 
@@ -174,11 +166,9 @@ def main() -> None:
     )
 
     # WAND: surviving-block selection joined into the segment scan
-    sel = eng._wand_block_selection(
-        ["the", "w000001"], idf, k=10, branches=[["the"], ["w000001"]]
-    )
+    wspec = [spec(0, "the")]
+    sel = _batch_wand_selection(eng, wspec, 10)
     if sel is not None:
-        wand = eng._postings(["the", "w000001"], block_join=sel, mode="score")
         sections.append(
             (
                 "WAND surviving-block decode (relational selection)",
@@ -186,7 +176,7 @@ def main() -> None:
                 "bucket-pruned segment scan (no driver-side block lists; the "
                 "join side is an aggregate Spark can broadcast at runtime); "
                 "decode restricted by the allowed column.",
-                explain(wand),
+                explain(_eval_plan(eng, wspec, 10, block_join=sel)),
             )
         )
 
