@@ -16,3 +16,9 @@ __version__ = "0.1.0"
 BM25_K1 = 1.2
 BM25_B = 0.75
 BLOCK_SIZE = 128  # docs per posting block (block-max metadata granularity)
+
+# Python workers: stop re-reading unchanged zip archives on every task
+# (see _pyworker); a no-op on the driver
+from micce_search_engine_spark import _pyworker  # noqa: E402
+
+_pyworker.install()

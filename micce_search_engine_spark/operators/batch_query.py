@@ -61,7 +61,9 @@ _BATCH_SCHEMA = _PAGE_SCHEMA + ", total_hits long, last_page boolean"
 
 #: driver-merge bound: a call is evaluated in chunks of queries whose
 #: worst-case reduced frame (partitions x queries x (maxk+1) rows) stays
-#: under this many rows; each chunk is collected and paged on its own
+#: under this many rows; each chunk is collected and paged on its own.
+#: partitions: the larger of spark.sql.shuffle.partitions and the
+#: segment scan's (the shuffle-free single-term plan has the latter)
 DRIVER_MERGE_MAX_ROWS = 2_000_000
 
 #: rows per dense evaluation chunk inside the evaluator — bounds task
@@ -447,7 +449,10 @@ def _batch_pages(
         if int(q["limit"]) < 1 or int(q["page"]) < 1:
             raise ValueError("limit and page are required and must be >= 1")
     maxk = max((int(q["limit"]) * int(q["page"]) for q in queries), default=1)
-    n_parts = int(engine.spark.conf.get("spark.sql.shuffle.partitions"))
+    n_parts = max(
+        int(engine.spark.conf.get("spark.sql.shuffle.partitions")),
+        engine._scan_partitions,
+    )
     size = max(1, DRIVER_MERGE_MAX_ROWS // (n_parts * (maxk + 1)))
     totals: dict = {}
     pages = []

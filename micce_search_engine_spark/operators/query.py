@@ -407,6 +407,15 @@ class SearchEngine:
                 .persist()
             )
             self._decoded_cached.count()  # materialize at open, not query 1
+        # the shuffle-free single-term plan runs one task per partition of
+        # the segment scan (pinned cache, or parquet splits), which can
+        # outnumber spark.sql.shuffle.partitions; batch_query sizes its
+        # driver-merge chunks by the larger of the two
+        self._scan_partitions = (
+            self._segments_cached
+            if self._segments_cached is not None
+            else spark.read.parquet(self.paths.segments)
+        ).rdd.getNumPartitions()
         # lossless WAND after incremental upserts: stored block bounds
         # were encoded with a possibly-smaller avgdl; scaling them by
         # avgdl_now/min_avgdl_encoded keeps them true upper bounds

@@ -4,23 +4,43 @@ Local-mode defaults mirror what we would set per-executor on a real
 cluster; on a 1000-executor cluster the same code runs unchanged with
 ``spark.sql.shuffle.partitions`` sized to ~2-3x total cores and AQE
 coalescing the rest.
+
+Python worker start-up: PySpark's worker calls
+``importlib.invalidate_caches()`` at the start of every task. On
+CPython 3.10-3.12 that re-reads the whole central directory of every
+zip on the worker's path (pyspark.zip, the py4j zip, the spark-core jar
+and this package's zip), ~250 ms per task on a 4-core host, because an
+archive may have changed since the last task. The package ``__init__``
+installs ``_pyworker`` in every worker that unpickles a package UDF:
+it re-reads an archive only when its mtime or size changed. Python
+>= 3.13 re-reads lazily and is left alone. To check it, time
+``importlib.invalidate_caches()`` inside a ``mapInArrow`` task: a few
+ms with the fix, hundreds without.
 """
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import shutil
 import tempfile
 import zipfile
 
 from pyspark.sql import SparkSession
 
 
+@functools.lru_cache(maxsize=None)
 def _package_zip() -> str:
     """Zip this package so executors can import it — the programmatic
     equivalent of ``spark-submit --py-files`` (BASELINE.json north_rule
-    deployment mode). Cached per process."""
+    deployment mode). Written once per process into a private temp dir,
+    so concurrent processes never ship each other's (or a half-written)
+    package; the dir is removed at exit."""
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    out = os.path.join(tempfile.gettempdir(), "micce_search_engine_spark.zip")
+    out_dir = tempfile.mkdtemp(prefix="micce_pkg_")
+    atexit.register(shutil.rmtree, out_dir, ignore_errors=True)
+    out = os.path.join(out_dir, "micce_search_engine_spark.zip")
     with zipfile.ZipFile(out, "w") as z:
         for root, _dirs, files in os.walk(pkg_dir):
             for f in files:

@@ -222,6 +222,40 @@ def test_large_batch_matches_single_search(spark, tiny_index, synonyms, monkeypa
             assert by_q.get(c * len(SPECS) + s["query_id"], []) == exp, (c, s)
 
 
+def test_single_term_chunks_fit_the_scan_partitions(spark, tiny_index, synonyms, monkeypatch):
+    """The shuffle-free single-term plan runs one task per segment-scan
+    partition, not per shuffle partition: its chunks must keep
+    partitions x queries x (maxk + 1) rows under DRIVER_MERGE_MAX_ROWS
+    for the real partition count, even with one shuffle partition."""
+    import micce_search_engine_spark.operators.batch_query as bq
+
+    eng = SearchEngine(spark, tiny_index, synonyms=synonyms)
+    specs = [  # distinct terms spread over the buckets: several scan partitions
+        {"query_id": i, "query_text": f"w{i:06d}", "lang_filter": None, "limit": 10, "page": 1}
+        for i in range(24)
+    ]
+    n_parts = bq._eval_plan(eng, specs, 10).rdd.getNumPartitions()
+    assert n_parts > 1 and eng._scan_partitions >= n_parts
+    expected = search_batch(eng, specs).collect()
+    chunks = []
+    reduce_ = bq._reduce
+
+    def spy(engine, qs, k, sel):
+        chunks.append(len(qs))
+        return reduce_(engine, qs, k, sel)
+
+    monkeypatch.setattr(bq, "_reduce", spy)
+    monkeypatch.setattr(bq, "DRIVER_MERGE_MAX_ROWS", n_parts * 11 * 4)  # 4 queries
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "1")
+    try:
+        rows = search_batch(eng, specs).collect()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    assert chunks and max(chunks) * n_parts * 11 <= bq.DRIVER_MERGE_MAX_ROWS
+    assert sum(chunks) == len(specs) and sorted(rows) == sorted(expected)
+
+
 def test_batch_entries_reject_bad_limit_page(spark, tiny_index, synonyms):
     from micce_search_engine_spark.operators.batch_query import search_batch_topk
 
