@@ -145,11 +145,16 @@ def _apply_swaps(swaps: list[dict]) -> None:
             os.rename(dst, bak)
 
 
-def _finalize_journal(index_dir: str, j: dict) -> None:
-    for e in j["swaps"]:
+def _drop_staging(swaps: list[dict], tmp_roots: list[str]) -> None:
+    """Delete the backups a completed swap list left, and its tmp roots."""
+    for e in swaps:
         shutil.rmtree(_bak_path(e["dst"]), ignore_errors=True)
-    for t in j.get("tmp_roots", []):
+    for t in tmp_roots:
         shutil.rmtree(t, ignore_errors=True)
+
+
+def _finalize_journal(index_dir: str, j: dict) -> None:
+    _drop_staging(j["swaps"], j.get("tmp_roots", []))
     try:
         os.remove(_journal_path(index_dir))
     except FileNotFoundError:
@@ -206,7 +211,7 @@ def _sweep_stale_tmp(index_dir: str) -> None:
     """Remove tmp dirs abandoned by a run that crashed before writing
     its journal (live tables were never touched, so this is pure GC).
     Sweeps the index root AND one level inside segments/ (ADVICE r4,
-    medium: per-bucket overwrites stage next to their bucket dir).
+    medium: swap backups of bucket dirs sit next to them).
     Callers hold the writer lock: no other upsert is in flight."""
     roots = [index_dir, os.path.join(index_dir, "segments")]
     for root in roots:
@@ -250,13 +255,11 @@ def _prepare_overwrite(df: DataFrame, path: str) -> dict:
     time. The tmp dir IS the swap src (renamed away), so no separate
     tmp_root cleanup is needed.
 
-    The tmp is a DOT-PREFIXED sibling (ADVICE r4, medium): per-bucket
-    segment overwrites stage INSIDE the live segments/ table, and a
-    crash-before-journal previously leaked ``bucket=N.__upd_x__`` dirs
-    that Spark partition discovery listed as partitions (and preload
-    engines, which read segments with no bucket filter, ingested as
-    duplicate postings). Names starting with '.' are invisible to
-    Spark's file listing."""
+    The tmp is a DOT-PREFIXED sibling (ADVICE r4, medium): staged next
+    to a partition dir, a ``bucket=N.__upd_x__`` name would be listed
+    by Spark partition discovery as a partition (and ingested by
+    preload engines as duplicate postings). Names starting with '.'
+    are invisible to Spark's file listing."""
     tmp = os.path.join(
         os.path.dirname(path),
         "." + os.path.basename(path) + f".__upd_{uuid.uuid4().hex[:8]}__",
@@ -275,9 +278,18 @@ def apply_upsert(
     serialized by the index writer lock — held for the whole upsert so
     a concurrent engine open's recovery can never interleave with the
     swap phase (ADVICE r4, medium). See :func:`_apply_upsert_locked`
-    for the full protocol."""
-    with _writer_lock(index_dir, blocking=True):
-        return _apply_upsert_locked(spark, index_dir, old_pages, updates)
+    for the full protocol.
+
+    Each phase labels its Spark jobs with ``setJobDescription``
+    ("upsert: <phase>"); the caller's description is restored on
+    return, and job groups are left alone."""
+    sc = spark.sparkContext
+    prev_desc = sc.getLocalProperty("spark.job.description")
+    try:
+        with _writer_lock(index_dir, blocking=True):
+            return _apply_upsert_locked(spark, index_dir, old_pages, updates)
+    finally:
+        sc.setJobDescription(prev_desc)
 
 
 def _apply_upsert_locked(
@@ -290,21 +302,33 @@ def _apply_upsert_locked(
 
     The set-oriented analog of the reference's per-doc re-feed loop
     (/root/reference/indexer/internal/service/index_service.go:159-172),
-    O(delta) END TO END on the v3 layout (round-3; round 2 rewrote the
-    full terms/docs/term_stats tables per delta — VERDICT r2 #3):
-    1. merged pages = omit-nil MERGE of ``updates`` into ``old_pages``;
-    2. changed docs keep their doc_ids (url_map lookup pruned to the
-       delta's ubuckets); NEW urls get append-only ids max_id+1+rank
-       (max_doc_id rides the stats row — no corpus scan);
-    3. terms/docs/url_map are patched by rewriting ONLY the dbucket/
-       ubucket partition dirs the delta touches;
-    4. corpus stats are maintained incrementally (exact integer
-       sum_dl/N deltas — bit-identical to a full rebuild) and
-       term_stats by per-term df/cf deltas in affected tbuckets only;
-    5. segment rows are re-encoded ONLY for affected terms, sourced by
-       DECODING their old postings from the segments themselves
-       (bucket-pruned scan) — no full terms-table read — and only
-       affected segment buckets are rewritten.
+    O(delta) end to end on the v3 layout. It runs a FIXED sequence of
+    at most 14 Spark actions, independent of ``n_buckets`` and of how
+    many partitions the delta touches:
+
+    1. resolve ids (3 collects + the doc-id ranking pass): the stats
+       row; one aggregate over the changed urls for their url_map
+       ubuckets and newly seen langs; one aggregate over the persisted
+       ``changed`` frame for its dbuckets, insert count, max doc_id and
+       the new urls' ubuckets. Changed docs keep their doc_ids; new
+       urls get append-only ids max_id+1+rank;
+    2. stage terms (2 writes): the affected-term set (old ∪ new terms
+       of changed docs, kept distributed as parquet), then the touched
+       dbucket dirs of ``terms``;
+    3. stage docs+stats (1 collect, 2 writes): ``dl_minus`` and
+       ``dl_plus`` summed in one action (exact integer sum_dl/N
+       deltas — bit-identical to a full rebuild), the touched dbucket
+       dirs of ``docs``, then the one-row ``stats`` table;
+    4. stage url_map (1 write, only when urls are new);
+    5. stage term_stats (1 collect, 1 write): the affected term
+       buckets, then per-term df/cf deltas in those buckets;
+    6. re-encode segments (1 collect, 1 write): the encode partition
+       count comes from Σ post-delta ``df`` over the affected terms
+       (the re-encode's exact input row count, with no decode pass);
+       old postings of affected terms are DECODED from the segments
+       themselves (bucket-pruned), re-encoded with the delta, and every
+       touched bucket is staged in ONE partitioned write: one
+       (term, salt)-sorted file per bucket.
 
     Every read and write is pruned to partitions the delta touches;
     for full O(delta) the caller should pass ``old_pages`` covering at
@@ -336,10 +360,14 @@ def _apply_upsert_locked(
         _tokenize_count_pos,
     )
     from micce_search_engine_spark.operators.query import (
+        _MODE_COLS,
         _POSTING_LANG_POS_SCHEMA,
         _POSTING_LANG_SCHEMA,
         _decode_map,
     )
+
+    def phase(name: str) -> None:
+        spark.sparkContext.setJobDescription(f"upsert: {name}")
 
     p = IndexPaths(index_dir)
     # heal a crashed prior upsert BEFORE reading anything: a pending
@@ -394,24 +422,21 @@ def _apply_upsert_locked(
         .persist()
     )
 
-    # -- doc_id resolution: url_map pruned to the delta's ubuckets -----
+    # -- resolve ids: url_map pruned to the delta's ubuckets -----------
+    phase("resolve ids")
     stats_row = spark.read.parquet(p.stats).collect()[0]
     n_old = int(stats_row["N"])
     sum_dl_old = int(stats_row["sum_dl"])
     max_id = int(stats_row["max_doc_id"]) if stats_row["max_doc_id"] is not None else -1
-    ubuckets = sorted(
-        r["b"]
-        for r in changed_urls.select(
-            (F.crc32(F.encode(F.col("url"), "UTF-8")) % url_buckets)
-            .cast("int")
-            .alias("b")
-        )
-        .distinct()
-        .collect()
-    )
+    ub_col = (F.crc32(F.encode(F.col("url"), "UTF-8")) % url_buckets).cast("int")
+    new_lang = F.coalesce(F.col("_new_lang"), F.lit(""))
+    # one pass over the changed urls: touched ubuckets + every lang
+    cu = changed_urls.agg(
+        F.collect_set(ub_col).alias("ub"), F.collect_set(new_lang).alias("langs")
+    ).collect()[0]
     url_map = (
         spark.read.parquet(p.url_map)
-        .filter(F.col("ubucket").isin(ubuckets))
+        .filter(F.col("ubucket").isin(sorted(cu["ub"])))
         .select("url", "doc_id")
     )
     ch = changed_urls.join(url_map, "url", "left")
@@ -431,34 +456,31 @@ def _apply_upsert_locked(
         .withColumn("_is_new", F.lit(False))
     )
     changed = old_ids.union(new_ids).persist()
-    changed.count()  # materialize BEFORE any source path is swapped
+    dbucket_col = F.floor(F.col("doc_id") / F.lit(cap)).cast("long")
+    # one pass over the delta (and its first action, which materializes
+    # the persisted frame): touched dbuckets, inserts, max id, and the
+    # ubuckets the new urls land in
+    ca = changed.agg(
+        F.collect_set(dbucket_col).alias("db"),
+        F.count(F.when(F.col("_is_new"), 1)).alias("n_ins"),
+        F.max("doc_id").alias("max_id"),
+        F.collect_set(F.when(F.col("_is_new"), ub_col)).alias("new_ub"),
+    ).collect()[0]
     changed_urls.unpersist()
     changed_ids = changed.select("doc_id")
+    dbuckets = sorted(ca["db"])
+    n_inserted = int(ca["n_ins"])
+    max_id_now = max_id if ca["max_id"] is None else max(max_id, int(ca["max_id"]))
 
     # -- language dictionary: append newly-seen langs (ids are stable) --
     langs: list[str] = list(meta.get("langs", []))
-    seen = {
-        r["l"]
-        for r in changed.select(
-            F.coalesce(F.col("_new_lang"), F.lit("")).alias("l")
-        )
-        .distinct()
-        .collect()
-    }
-    langs += sorted(seen - set(langs))
+    langs += sorted(set(cu["langs"]) - set(langs))
     lang_map = F.create_map(
         *[x for i, l in enumerate(langs) for x in (F.lit(l), F.lit(i))]
     )
 
     # -- delta-scoped reads: only the dbuckets holding changed docs ----
-    dbuckets = sorted(
-        r["b"]
-        for r in changed_ids.select(
-            F.floor(F.col("doc_id") / F.lit(cap)).cast("long").alias("b")
-        )
-        .distinct()
-        .collect()
-    )
+    phase("stage terms")
     terms_aff = spark.read.parquet(p.terms).filter(F.col("dbucket").isin(dbuckets))
     # old term rows of changed docs: feeds affected-term set AND
     # term_stats deltas (delta-sized; no forced broadcast — ADVICE r2)
@@ -474,18 +496,17 @@ def _apply_upsert_locked(
         changed.select(
             "doc_id",
             F.col("_new_text").alias("text"),
-            lang_map[F.coalesce(F.col("_new_lang"), F.lit(""))].cast("long").alias("lang_id"),
+            lang_map[new_lang].cast("long").alias("lang_id"),
         )
         .mapInArrow(
             _tokenize_count_pos if has_pos else _tokenize_count,
             TERMS_POS_SCHEMA if has_pos else TERMS_SCHEMA,
         )
     ).persist()
-    new_terms_rows.count()
-    # materialize the affected-term set NOW — downstream plans must not
-    # lazily re-read tables that get swapped below. Kept DISTRIBUTED
-    # (parquet spill + read back): a 1% delta of a 10^12-doc corpus has
-    # millions of distinct terms — a driver collect() would OOM.
+    # the affected-term set is kept DISTRIBUTED (parquet spill + read
+    # back): a 1% delta of a 10^12-doc corpus has millions of distinct
+    # terms — a driver collect() would OOM. This write is also the first
+    # action on both persisted term-row frames.
     aff_path = os.path.join(index_dir, ".affected_terms.__tmp__")
     (
         old_terms_rows.select("term")
@@ -497,7 +518,6 @@ def _apply_upsert_locked(
     affected = spark.read.parquet(aff_path)
 
     # -- patch terms table: rewrite ONLY affected dbuckets -------------
-    dbucket_col = F.floor(F.col("doc_id") / F.lit(cap)).cast("long")
     terms_patched = (
         terms_aff.drop("dbucket")
         .join(changed_ids, "doc_id", "left_anti")
@@ -518,12 +538,8 @@ def _apply_upsert_locked(
     tmp_roots.append(t)
 
     # -- patch docs table (same dbuckets) + incremental corpus stats ---
+    phase("stage docs+stats")
     docs_aff = spark.read.parquet(p.docs).filter(F.col("dbucket").isin(dbuckets))
-    dl_minus = (
-        docs_aff.join(changed_ids, "doc_id", "left_semi")
-        .agg(F.coalesce(F.sum("dl"), F.lit(0)))
-        .collect()[0][0]
-    )
     doc_len_new = new_terms_rows.groupBy("doc_id").agg(F.first("dl").alias("dl"))
     has_ts = "warc_ts" in merged.columns
     changed_docs = changed.join(doc_len_new, "doc_id", "left").withColumn(
@@ -537,9 +553,12 @@ def _apply_upsert_locked(
     changed_docs = changed_docs.select(
         *doc_cols, F.col("_new_lang").alias("lang")
     ).persist()
-    dl_plus = changed_docs.agg(F.coalesce(F.sum("dl"), F.lit(0))).collect()[0][0]
-    n_inserted = changed.filter(F.col("_is_new")).count()
-    max_id_new = changed.agg(F.coalesce(F.max("doc_id"), F.lit(max_id))).collect()[0][0]
+    dl_sums = (
+        docs_aff.join(changed_ids, "doc_id", "left_semi")
+        .agg(F.coalesce(F.sum("dl"), F.lit(0)).alias("minus"))
+        .crossJoin(changed_docs.agg(F.coalesce(F.sum("dl"), F.lit(0)).alias("plus")))
+        .collect()[0]
+    )
     old_doc_cols = ["doc_id", "url"] + (["warc_ts"] if has_ts else []) + ["dl", "lang"]
     docs_patched = (
         docs_aff.drop("dbucket")
@@ -551,38 +570,37 @@ def _apply_upsert_locked(
     e, t = _prepare_patch(docs_patched, p.docs, "dbucket", dbuckets, extra_parts=["lang"])
     swaps += e
     tmp_roots.append(t)
-    n_now = n_old + int(n_inserted)
-    sum_dl_now = sum_dl_old - int(dl_minus) + int(dl_plus)
+    n_now = n_old + n_inserted
+    sum_dl_now = sum_dl_old - int(dl_sums["minus"]) + int(dl_sums["plus"])
     avgdl_now = sum_dl_now / n_now if n_now else 0.0
     stats_new = spark.createDataFrame(
-        [(n_now, avgdl_now, sum_dl_now, int(max(max_id, max_id_new)))],
+        [(n_now, avgdl_now, sum_dl_now, max_id_now)],
         "N long, avgdl double, sum_dl long, max_doc_id long",
     )
     swaps.append(_prepare_overwrite(stats_new.coalesce(1), p.stats))
 
     # -- patch url_map: append new urls to their ubuckets --------------
-    new_pairs = changed.filter(F.col("_is_new")).select("url", "doc_id")
     if n_inserted:
-        ub_col = (F.crc32(F.encode(F.col("url"), "UTF-8")) % url_buckets).cast("int")
-        new_ubuckets = sorted(
-            r["b"]
-            for r in new_pairs.select(ub_col.alias("b")).distinct().collect()
-        )
+        phase("stage url_map")
+        new_ubuckets = sorted(ca["new_ub"])
         um_aff = (
             spark.read.parquet(p.url_map)
             .filter(F.col("ubucket").isin(new_ubuckets))
             .select("url", "doc_id")
         )
+        new_pairs = changed.filter(F.col("_is_new")).select("url", "doc_id")
         um_patched = um_aff.unionByName(new_pairs).withColumn("ubucket", ub_col)
         e, t = _prepare_patch(um_patched, p.url_map, "ubucket", new_ubuckets)
         swaps += e
         tmp_roots.append(t)
 
     # -- patch term_stats: per-term df/cf deltas in affected tbuckets --
+    # term_stats' tbucket and the segments' bucket are the same hash
+    # (crc32(term) % n_buckets), so one collect serves both patches
+    phase("stage term_stats")
     tb_col = (F.crc32(F.encode(F.col("term"), "UTF-8")) % n_buckets).cast("int")
-    tbuckets = sorted(
-        r["b"]
-        for r in affected.select(tb_col.alias("b")).distinct().collect()
+    aff_buckets = sorted(
+        r["b"] for r in affected.select(tb_col.alias("b")).distinct().collect()
     )
     delta = (
         old_terms_rows.groupBy("term")
@@ -602,7 +620,7 @@ def _apply_upsert_locked(
     )
     ts_aff = (
         spark.read.parquet(p.term_stats)
-        .filter(F.col("tbucket").isin(tbuckets))
+        .filter(F.col("tbucket").isin(aff_buckets))
         .select("term", "df", "cf")
     )
     ts_patched = (
@@ -615,84 +633,75 @@ def _apply_upsert_locked(
         .filter(F.col("df") > 0)
         .withColumn("tbucket", tb_col)
     )
-    e, ts_tmp = _prepare_patch(ts_patched, p.term_stats, "tbucket", tbuckets)
+    e, t = _prepare_patch(ts_patched, p.term_stats, "tbucket", aff_buckets)
     swaps += e
-    tmp_roots.append(ts_tmp)
+    tmp_roots.append(t)
 
     # -- re-encode ONLY affected terms; rewrite ONLY their buckets ------
     # postings sourced by DECODING the old segments (bucket-pruned) —
     # no full terms-table scan (round-2's O(corpus) read)
-    aff_buckets = sorted(
-        r["b"]
-        for r in affected.select(
-            (F.crc32(F.encode(F.col("term"), "UTF-8")) % n_buckets)
-            .cast("int")
-            .alias("b")
-        )
-        .distinct()
-        .collect()
-    )
+    phase("re-encode segments")
+    # post-delta dfs of the affected terms, from the PATCHED term_stats
+    # plan (it reads only live pre-swap tables; the staged tmp can be
+    # empty for a no-op delta, so it is not re-read here)
+    aff_stats = ts_patched.join(affected, "term", "left_semi")
+    # the re-encode's input has one row per post-delta posting of an
+    # affected term, so Σ df sizes the encode partitions exactly like
+    # the build's S3 (bounds the per-task group-collect OBJECT state on
+    # wide deltas; see ENCODE_ROWS_PER_PARTITION) without a decode pass
+    n_postings = aff_stats.agg(F.sum("df")).collect()[0][0] or 0
+    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_enc = max(n_shuffle, -(-n_postings // ENCODE_ROWS_PER_PARTITION))
     max_rows = int(meta.get("max_postings_per_row", 200_000))
-    from micce_search_engine_spark.operators.query import _MODE_COLS
-
     dec_mode = "postings_lang_pos" if has_pos else "postings_lang"
-    seg_aff = (
-        spark.read.parquet(p.segments)
-        .filter(F.col("bucket").isin(aff_buckets))
-        .join(affected, "term", "left_semi")
+    seg_aff = spark.read.parquet(p.segments).filter(F.col("bucket").isin(aff_buckets))
+    old_postings = (
+        seg_aff.join(affected, "term", "left_semi")
         .select(*_MODE_COLS[dec_mode])
+        .mapInArrow(
+            _decode_map(mode=dec_mode),
+            _POSTING_LANG_POS_SCHEMA if has_pos else _POSTING_LANG_SCHEMA,
+        )
     )
-    old_postings = seg_aff.mapInArrow(
-        _decode_map(mode=dec_mode),
-        _POSTING_LANG_POS_SCHEMA if has_pos else _POSTING_LANG_SCHEMA,
-    )
-    t = (
+    postings = (
         old_postings.join(changed_ids, "doc_id", "left_anti")
         .unionByName(new_terms_rows)
     )
-    # hot terms among the affected only — computed from the PATCHED
-    # term_stats plan (post-delta dfs, reading only live pre-swap
-    # tables; the staged tmp can be empty for a no-op delta, so it is
-    # not re-read here). Delta-sized recompute — cheap.
-    hot = (
-        ts_patched.filter(F.col("df") > max_rows)
-        .join(affected, "term", "left_semi")
-        .select("term", F.col("df").alias("_hot_df"))
+    # hot terms among the affected only (delta-sized)
+    hot = aff_stats.filter(F.col("df") > max_rows).select(
+        "term", F.col("df").alias("_hot_df")
     )
-    t = t.join(F.broadcast(hot), "term", "left")
+    postings = postings.join(F.broadcast(hot), "term", "left")
     n_rows_exp = F.ceil(F.col("_hot_df") / F.lit(max_rows))
     salt = F.when(
         F.col("_hot_df").isNotNull(),
         F.floor(F.col("doc_id") * n_rows_exp / F.lit(n_now)),
     ).otherwise(F.lit(0))
-    # data-aware partition count like the build's S3: bound the
-    # per-task group-collect OBJECT state on wide deltas (see
-    # ENCODE_ROWS_PER_PARTITION for the memory derivation)
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    n_enc = max(n_shuffle, -(-t.count() // ENCODE_ROWS_PER_PARTITION))
-    re_encoded = (
-        _grouped_postings(
-            t.withColumn("salt", salt.cast("int")).drop("_hot_df"), n_enc, has_pos
-        ).mapInArrow(
-            _make_grouped_encoder(avgdl_now, n_buckets, has_pos),
-            SEGMENT_POS_SCHEMA if has_pos else SEGMENT_SCHEMA,
+    re_encoded = _grouped_postings(
+        postings.withColumn("salt", salt.cast("int")).drop("_hot_df"), n_enc, has_pos
+    ).mapInArrow(
+        _make_grouped_encoder(avgdl_now, n_buckets, has_pos),
+        SEGMENT_POS_SCHEMA if has_pos else SEGMENT_SCHEMA,
+    )
+    if aff_buckets:
+        # kept rows of the touched buckets + the re-encoded rows: one
+        # (term, salt)-sorted file per bucket. A bucket left with no rows
+        # becomes a src=None swap entry. The sort leads with "bucket":
+        # the partitioned writer needs its input ordered by the
+        # partition column, and on any other ordering Spark plans its
+        # own sort by bucket alone and drops a (term, salt) sort below.
+        seg_patched = (
+            seg_aff.join(affected, "term", "left_anti")
+            .unionByName(re_encoded)
+            .repartition(len(aff_buckets), "bucket")
+            .sortWithinPartitions("bucket", "term", "salt")
         )
-    ).persist()
-    # positional grouped encode runs sort-based (see
-    # _sort_based_group_agg); the conf must be live when the persisted
-    # frame first MATERIALIZES, i.e. around the bucket-staging writes
-    with _sort_based_group_agg(spark, has_pos):
-        for b in aff_buckets:
-            bucket_dir = os.path.join(p.segments, f"bucket={b}")
-            keep = (
-                spark.read.parquet(bucket_dir)
-                .join(affected, "term", "left_anti")
-                if os.path.exists(bucket_dir)
-                else None
-            )
-            add = re_encoded.filter(F.col("bucket") == b).drop("bucket")
-            out = add if keep is None else keep.unionByName(add)
-            swaps.append(_prepare_overwrite(out, bucket_dir))
+        # positional grouped encode runs sort-based (see
+        # _sort_based_group_agg); the conf must be live while it runs
+        with _sort_based_group_agg(spark, has_pos):
+            e, t = _prepare_patch(seg_patched, p.segments, "bucket", aff_buckets)
+        swaps += e
+        tmp_roots.append(t)
 
     meta["min_avgdl_encoded"] = min(
         float(meta.get("min_avgdl_encoded", meta.get("avgdl_encoded", avgdl_now))),
@@ -717,7 +726,6 @@ def _apply_upsert_locked(
     changed_docs.unpersist()
     old_terms_rows.unpersist()
     new_terms_rows.unpersist()
-    re_encoded.unpersist()
     # Spark's CacheManager matches cached plans BY PATH: an engine
     # opened before this upsert may have persisted e.g. term_stats, and
     # a NEW engine's identical read plan would silently serve the
@@ -728,7 +736,6 @@ def _apply_upsert_locked(
 
 
 def _patch_partitions(
-    spark: SparkSession,
     df: DataFrame,
     table_path: str,
     part_col: str,
@@ -736,29 +743,15 @@ def _patch_partitions(
     extra_parts: list[str] | None = None,
 ) -> None:
     """Rewrite ONLY the listed partition dirs of a partitioned table —
-    the path-swap stand-in for Iceberg/Delta partition-level MERGE.
-
-    ``df`` must contain exactly the new rows for those partitions
-    (carrying ``part_col``); it is written to a temp root in ONE Spark
-    job, then each ``<part_col>=<v>`` dir is swapped in atomically
-    (rename pair). A listed partition absent from the temp output
-    means it became empty: its live dir is removed. Unlisted
-    partitions are never touched — the I/O contract that makes upserts
-    O(delta)."""
-    tmp = table_path + f".__patch_{uuid.uuid4().hex[:8]}__"
-    w = df.write.mode("overwrite").partitionBy(part_col, *(extra_parts or []))
-    w.parquet(tmp)
-    for v in part_vals:
-        src = os.path.join(tmp, f"{part_col}={v}")
-        dst = os.path.join(table_path, f"{part_col}={v}")
-        old = _bak_path(dst)  # dot-prefixed: invisible to partition discovery
-        shutil.rmtree(old, ignore_errors=True)
-        if os.path.exists(dst):
-            os.rename(dst, old)
-        if os.path.exists(src):
-            os.rename(src, dst)
-        shutil.rmtree(old, ignore_errors=True)
-    shutil.rmtree(tmp, ignore_errors=True)
+    the path-swap stand-in for Iceberg/Delta partition-level MERGE,
+    for a table outside the upsert journal (the live index's pages
+    store). Stages with :func:`_prepare_patch` (one Spark job), swaps
+    with :func:`_apply_swaps` (a listed partition absent from the
+    staged output became empty: its live dir is removed), then drops
+    the backups and the tmp root."""
+    swaps, tmp = _prepare_patch(df, table_path, part_col, part_vals, extra_parts)
+    _apply_swaps(swaps)
+    _drop_staging(swaps, [tmp])
 
 
 def _atomic_overwrite(df: DataFrame, path: str, partition_by: str | None = None) -> None:

@@ -110,7 +110,6 @@ def run_live_index_once(
         merged_sub = apply_upsert(spark, index_dir, old_sub, updates).persist()
         merged_sub.count()  # materialize before swapping source buckets
         _patch_partitions(
-            spark,
             merged_sub.withColumn("pbucket", _pbucket_col(pages_buckets)),
             pages_path,
             "pbucket",

@@ -307,3 +307,131 @@ def test_upsert_preserves_positions(spark, tmp_path):
     url_of = {r["doc_id"]: r["url"] for r in docs}
     assert sorted(url_of[d] for d, _ in res["results"]) == ["u0", "u1", "u9"]
     assert res["total_hits"] == 3
+
+
+def _count_actions(monkeypatch):
+    """Wrap the driver actions apply_upsert issues and return the call
+    log. On PySpark 4 the concrete frame is the classic DataFrame; the
+    abstract ``pyspark.sql.DataFrame`` sees none of the calls."""
+    from pyspark.sql import DataFrameWriter
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+
+    calls = []
+    for cls, name in (
+        (ClassicDataFrame, "collect"),
+        (ClassicDataFrame, "count"),
+        (DataFrameWriter, "parquet"),
+    ):
+        real = getattr(cls, name)
+
+        def wrapped(*a, _real=real, _name=name, **k):
+            calls.append(_name)
+            return _real(*a, **k)
+
+        monkeypatch.setattr(cls, name, wrapped)
+    return calls
+
+
+def test_upsert_action_budget(spark, tmp_path, monkeypatch):
+    """apply_upsert runs a fixed number of Spark actions: at most 14,
+    and the same for 4 and 16 segment buckets (it used to run one
+    bucket write per touched bucket). Each phase labels its jobs, and
+    the caller's job description is restored afterwards."""
+    pdf = gen_pages(300, seed=13)
+    pages = spark.createDataFrame(pdf, schema=pages_spark_schema())
+    updates = spark.createDataFrame(
+        [
+            (pdf.url[0], "rewritten budget text alpha", None),
+            (pdf.url[1], None, "xx"),
+            ("https://zz.example/budget", "fresh budget page", "en"),
+        ],
+        "url string, text string, lang string",
+    )
+    sc = spark.sparkContext
+    counts = {}
+    for n_buckets in (4, 16):
+        idx = str(tmp_path / f"idx_b{n_buckets}")
+        build_index(
+            spark, pages, idx, n_buckets=n_buckets, max_postings_per_row=60,
+            with_positions=True,
+        )
+        with monkeypatch.context() as m:
+            calls = _count_actions(m)
+            sc.setJobDescription("caller description")
+            try:
+                apply_upsert(spark, idx, pages, updates)
+                assert sc.getLocalProperty("spark.job.description") == "caller description"
+            finally:
+                sc.setJobDescription(None)
+        counts[n_buckets] = len(calls)
+    assert counts[4] <= 14, counts
+    assert counts[4] == counts[16], counts
+
+
+def test_segment_patch_drops_emptied_bucket(spark, tmp_path):
+    """The segment patch is one partitioned write over every touched
+    bucket: a bucket whose only term is removed is swapped out (src
+    None), and every rewritten bucket holds one (term, salt)-sorted
+    file, as a build writes it."""
+    import pyarrow.parquet as pq
+
+    from micce_search_engine_spark.operators.index_build import bucket_of
+    from micce_search_engine_spark.functions.tokenize import tokenize_text
+
+    n_buckets = 64
+    rows = [
+        (f"u{i}", f"common word{i} shared{i % 3} common", "en") for i in range(8)
+    ]
+    new_text = "common word0 replaced common"
+    vocab = {t for _, text, _ in rows + [("", new_text, "")] for t in tokenize_text(text)}
+    used = {bucket_of(t, n_buckets) for t in vocab}
+    solo = next(
+        f"solo{i}" for i in range(1000) if bucket_of(f"solo{i}", n_buckets) not in used
+    )
+    rows[0] = ("u0", f"common {solo} word0 common", "en")
+    pages = spark.createDataFrame(rows, "url string, text string, lang string")
+    idx = str(tmp_path / "idx_solo")
+    # max_postings_per_row=3 salts "common" (8 postings) into 3 rows
+    build_index(spark, pages, idx, n_buckets=n_buckets, max_postings_per_row=3)
+    seg_root = os.path.join(idx, "segments")
+    solo_dir = os.path.join(seg_root, f"bucket={bucket_of(solo, n_buckets)}")
+    assert os.path.isdir(solo_dir)
+
+    updates = spark.createDataFrame(
+        [("u0", new_text, None)],
+        "url string, text string, lang string",
+    )
+    merged_pdf = (
+        apply_upsert(spark, idx, pages, updates).select("url", "text", "lang").toPandas()
+    )
+    assert not os.path.exists(solo_dir)
+
+    eng = SearchEngine(spark, idx)
+    assert eng.search(solo, limit=5, page=1)["total_hits"] == 0
+    url_of = {
+        r["doc_id"]: r["url"]
+        for r in spark.read.parquet(os.path.join(idx, "docs")).collect()
+    }
+    oracle = BruteForceBM25(merged_pdf)
+    for q in ["common", "replaced", "word0 common", "shared1"]:
+        got = eng.search(q, limit=10, page=1)
+        exp = oracle.search(q, limit=10, page=1)
+        assert got["total_hits"] == exp["total_hits"], q
+        assert sorted((url_of[d], round(s, 9)) for d, s in got["results"]) == sorted(
+            (oracle.urls[d], round(s, 9)) for d, s in exp["results"]
+        ), q
+
+    touched = {
+        bucket_of(t, n_buckets)
+        for t in tokenize_text(rows[0][1]) + tokenize_text(new_text)
+    } - {bucket_of(solo, n_buckets)}
+    for b in touched:
+        bdir = os.path.join(seg_root, f"bucket={b}")
+        files = [f for f in os.listdir(bdir) if f.endswith(".parquet")]
+        assert len(files) == 1, (b, files)
+        tbl = pq.read_table(os.path.join(bdir, files[0]), columns=["term", "salt"])
+        keys = list(zip(tbl.column("term").to_pylist(), tbl.column("salt").to_pylist()))
+        assert keys == sorted(keys), b
+    common_dir = os.path.join(seg_root, f"bucket={bucket_of('common', n_buckets)}")
+    salts = pq.read_table(common_dir, columns=["term", "salt"]).to_pylist()
+    assert sorted(r["salt"] for r in salts if r["term"] == "common") == [0, 1, 2]
