@@ -362,8 +362,9 @@ def _q_bm25_phrase(spark: SparkSession, sf_dir: str) -> DataFrame:
     phrase on index fields, whereQuery.go:43-57): exact token adjacency
     via the positional posting stream, BM25 over the phrase's distinct
     terms; oracle recomputes adjacency from token positions in SQL.
-    Round-5: the positional decode is bounded by the AND-candidate
-    blocks (operators/query.py _phrase_sets)."""
+    The BM25 evaluator checks adjacency per doc, and the positional
+    decode is bounded to the rarest term's blocks
+    (operators/batch_query.py)."""
     eng = _engine(spark, sf_dir)
     res = eng.search_phrase(f"{PHRASE_T1} {PHRASE_T2}", limit=10, page=1)
     rows = [(int(d), round(float(s), 6)) for d, s in res["results"]]

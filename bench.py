@@ -129,7 +129,7 @@ def run_suite(spark, pages, sf_dir: str, cpus: int, n_docs: int) -> tuple[dict, 
     timings["batch100_wand"] = time.monotonic() - t0
 
     # SPARK_GRAFT_BENCH_ONLY: comma-set of optional leg groups to run
-    # ("singles,wand,preload,pipeline"); empty/unset = all. Build +
+    # ("singles,wand,phrase,pipeline"); empty/unset = all. Build +
     # batch legs always run (the headline metrics). Lets a big-corpus
     # scaling leg fit a bounded time slice.
     only = {
@@ -166,24 +166,6 @@ def run_suite(spark, pages, sf_dir: str, cpus: int, n_docs: int) -> tuple[dict, 
         eng.search("the w000001", limit=10, page=1, topk_only=True)
         timings["q_wand_and2"] = time.monotonic() - t0
 
-    # serving tier (round-4): preload="decoded" pins the decoded
-    # postings term-clustered in executor memory (the Vespa
-    # index-in-RAM analog). Cache build is part of OPENING the serving
-    # engine, reported separately; the q_p50_preload leg measures the
-    # steady-state query path.
-    if _want("preload"):
-        t0 = time.monotonic()
-        eng_srv = SearchEngine(spark, index_dir, synonyms=synonyms, preload="decoded")
-        timings["preload_open"] = time.monotonic() - t0
-        lat_srv = []
-        for name, (qt, lf) in single_qs.items():
-            t0 = time.monotonic()
-            eng_srv.search(qt, lang_filter=lf, limit=10, page=1)
-            lat_srv.append(time.monotonic() - t0)
-        timings["q_p50_preload"] = statistics.median(lat_srv)
-        eng_srv._decoded_cached.unpersist()
-        eng_srv._segments_cached.unpersist()
-        eng_srv._term_stats.unpersist()
     eng._segments_cached.unpersist()
     eng._term_stats.unpersist()
 
@@ -299,7 +281,7 @@ def main() -> None:
         reps.append({k: round(v, 3) for k, v in t.items()})
     timings = {k: min(r[k] for r in reps) for k in reps[0]}
 
-    total = sum(v for k, v in timings.items() if k not in ("q_p50", "q_p50_preload"))
+    total = sum(v for k, v in timings.items() if k != "q_p50")
     sf = sf_dir.rstrip("/").split("sf")[-1]
     result = {
         "metric": "index-build + BM25 query suite (synthetic pages corpus "

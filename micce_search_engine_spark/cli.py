@@ -57,9 +57,9 @@ def main(argv: list[str] | None = None) -> int:
     )
     s.add_argument(
         "--preload",
-        choices=["none", "segments", "decoded"],
+        choices=["none", "segments"],
         default="none",
-        help="serving mode: pin segments or fully decoded postings in memory",
+        help="serving mode: pin the segments table in executor memory",
     )
     s.add_argument("--synonyms", default=None, help="2-column CSV path")
 
@@ -73,9 +73,9 @@ def main(argv: list[str] | None = None) -> int:
     v.add_argument("--port", type=int, default=8001)
     v.add_argument(
         "--preload",
-        choices=["none", "segments", "decoded"],
-        default="decoded",
-        help="serving mode (default: decoded-postings cache)",
+        choices=["none", "segments"],
+        default="segments",
+        help="serving mode (default: segments pinned in executor memory)",
     )
     v.add_argument("--synonyms", default=None, help="2-column CSV path")
 
@@ -117,10 +117,9 @@ def main(argv: list[str] | None = None) -> int:
                 from micce_search_engine_spark.sources.synonyms import load_synonyms_csv
 
                 synonyms = load_synonyms_csv(spark, args.synonyms)
-            preload = {"none": False, "segments": True, "decoded": "decoded"}[
-                args.preload
-            ]
-            eng = SearchEngine(spark, args.index, synonyms=synonyms, preload=preload)
+            eng = SearchEngine(
+                spark, args.index, synonyms=synonyms, preload=args.preload == "segments"
+            )
             if args.phrase:
                 res = eng.search_phrase(
                     args.query,
@@ -147,10 +146,9 @@ def main(argv: list[str] | None = None) -> int:
                 from micce_search_engine_spark.sources.synonyms import load_synonyms_csv
 
                 synonyms = load_synonyms_csv(spark, args.synonyms)
-            preload = {"none": False, "segments": True, "decoded": "decoded"}[
-                args.preload
-            ]
-            eng = SearchEngine(spark, args.index, synonyms=synonyms, preload=preload)
+            eng = SearchEngine(
+                spark, args.index, synonyms=synonyms, preload=args.preload == "segments"
+            )
             ce = ConditionEngine({"text": eng}, synonyms=synonyms)
             srv = serve(ce, host=args.host, port=args.port)
             print(

@@ -2,20 +2,23 @@
 
 The reference answers one HTTP query at a time
 (search-api/internal/repository/vespaRepository.go:21-40). Here every
-keyword query — a ``search_batch`` of hundreds or a single
-``SearchEngine.search``, run as a batch of one — compiles into the same
-plan (SURVEY.md §2D):
+keyword query — a ``search_batch`` of hundreds, a single
+``SearchEngine.search`` or ``search_phrase``, each run as a batch of
+one — compiles into the same plan (SURVEY.md §2D):
 
   compile (driver): per query, its synonym-expanded OR-of-AND branches
-    as column ids into the batch vocabulary, its terms' idf and its
-    lang filter
-  -> decoded postings (term, doc_id, wf, lang_id): the segment decode,
-     the pinned ``preload="decoded"`` cache, or a WAND ``block_join``
-     selection of surviving blocks
+    as column ids into the batch vocabulary, its terms' idf, its lang
+    filter and, for a phrase-flagged query, each multi-token branch's
+    token sequence
+  -> decoded postings (term, doc_id, wf, lang_id[, positions]): the
+     segment decode, restricted by a WAND or phrase ``block_join``
+     selection of blocks when one applies; positions are decoded only
+     when the call holds a multi-token phrase branch
   -> ONE vectorized mapInArrow evaluator (_batch_eval_fn): per chunk of
      docs, a dense docs x vocabulary wf panel; branch AND/OR candidacy,
-     exact lang filter and the fixed-point score are numpy over it; it
-     emits each query's partition-local top-maxk plus a count marker
+     phrase adjacency (_phrase_docs), exact lang filter and the
+     fixed-point score are numpy over it; it emits each query's
+     partition-local top-maxk plus a count marker (_TopK)
   -> one Arrow collect, merged and paged on the driver (_paged_pdf)
      with the reference's limit*page / offset=limit*(page-1) quirk
      (search-api/internal/repository/query/queryBuilder.go:40-41,
@@ -26,8 +29,14 @@ postings are repartitioned by ``doc_id`` once — unless every query of
 the call has exactly one distinct term: a doc holds at most one posting
 of a term, so decode and evaluation then fuse into one mapInArrow over
 the pruned segment scan, with no shuffle. Batches are split into chunks
-whose reduced frame fits DRIVER_MERGE_MAX_ROWS. A phrase-flagged query
-feeds its adjacency matches in as one more required, unscored term.
+whose reduced frame fits DRIVER_MERGE_MAX_ROWS.
+
+A phrase-flagged query matches a multi-token branch only where its
+tokens occur at consecutive positions (whereQuery.go:43-57); its score
+is the usual BM25 over all its terms, and a phrase whose branches are
+all single tokens is plain bag-of-words. When every branch of the call
+is such a phrase, the decode is bounded to the blocks holding a doc of
+each phrase's rarest term (SearchEngine._phrase_block_join).
 
 ``search_batch_topk`` is the WAND-pruned variant: one probe pass over
 every term's best block yields per-query k-th-best lower bounds,
@@ -70,10 +79,6 @@ DRIVER_MERGE_MAX_ROWS = 2_000_000
 #: memory to ~chunk_docs x n_terms doubles regardless of partition size
 _EVAL_CHUNK_ROWS = 65_536
 
-#: vocabulary entry of a phrase-flagged query's adjacency matches; the
-#: NUL byte keeps it apart from every token the tokenizer can emit
-_PHRASE_TERM = "\x00phrase:{}"
-
 
 def _query_terms(engine: SearchEngine, q: dict) -> list[str]:
     return sorted({t for b in expand_branches(q["query_text"], engine.synonyms) for t in b})
@@ -83,11 +88,11 @@ def _compile(engine: SearchEngine, queries: list[dict]):
     """Driver-side compile -> (programs, term_to_tid, terms).
 
     One program per query with a non-empty expansion: (query_id,
-    lang_id, [(tid, idf) score terms], [branch tid-arrays]). lang_id -1
-    means no filter; an unknown lang (``lang_id_of``'s -1) becomes -2,
-    which matches nothing. A phrase-flagged query's adjacency-match
-    column is required by every branch and left out of the score.
-    Synonym expansion is an exact-key dict lookup
+    lang_id, [(tid, idf) score terms], [branch tid-arrays], [per branch:
+    its tid sequence in token order when it is a multi-token branch of
+    a phrase-flagged query, else None]). lang_id -1 means no filter; an
+    unknown lang (``lang_id_of``'s -1) becomes -2, which matches
+    nothing. Synonym expansion is an exact-key dict lookup
     (search-api/internal/repository/bboltRepository.go:56-64)."""
     expanded = [(q, expand_branches(q["query_text"], engine.synonyms)) for q in queries]
     expanded = [(q, bs) for q, bs in expanded if bs]
@@ -96,19 +101,18 @@ def _compile(engine: SearchEngine, queries: list[dict]):
     tid = {t: i for i, t in enumerate(terms)}
     programs = []
     for q, branches in expanded:
-        qid = int(q["query_id"])
-        extra = set()
-        if q.get("phrase"):
-            extra = {tid.setdefault(_PHRASE_TERM.format(qid), len(tid))}
         lid = engine.lang_id_of(q.get("lang_filter"))
         lid = -1 if lid is None else (-2 if lid < 0 else lid)
         programs.append(
             (
-                qid,
+                int(q["query_id"]),
                 lid,
                 [(tid[t], float(idf[t])) for t in sorted({t for b in branches for t in b})],
+                [np.asarray(sorted({tid[t] for t in b}), dtype=np.int64) for b in branches],
                 [
-                    np.asarray(sorted({tid[t] for t in b} | extra), dtype=np.int64)
+                    np.asarray([tid[t] for t in b], dtype=np.int64)
+                    if q.get("phrase") and len(b) > 1
+                    else None
                     for b in branches
                 ],
             )
@@ -116,149 +120,211 @@ def _compile(engine: SearchEngine, queries: list[dict]):
     return programs, tid, terms
 
 
-def _batch_eval_fn(programs, term_to_tid, maxk: int, doc_sorted: bool = True):
-    """mapInArrow evaluator: (term, doc_id, wf, lang_id) rows -> each
-    query's partition-local top-maxk (score DESC, doc_id ASC) plus one
-    count-marker row per query (``_REDUCED_SCHEMA``), for EVERY query of
-    the batch in one vectorized pass.
+def _chunk_rows(n_terms: int) -> int:
+    """Postings per evaluation chunk: the dense panel stays <= ~8M cells
+    (64 MB of float64) even when every row is a distinct doc and the
+    batch vocabulary is at its largest."""
+    return max(4096, min(_EVAL_CHUNK_ROWS, 8_000_000 // max(n_terms, 1)))
 
-    Per chunk of whole docs, postings are scattered into a dense
-    (docs x batch-vocabulary) wf panel; each query's branch candidacy
-    is numpy boolean algebra over its term columns and its score the
-    int64 sum of floor(idf*wf*1e9) contributions. ``doc_sorted`` input
-    keeps a doc's postings in one chunk; unsorted input is only valid
-    when every query reads one term. Candidate buffers are compacted to
-    maxk whenever they exceed 8*maxk, so memory stays bounded per query
-    regardless of partition size."""
-    n_terms = len(term_to_tid)
-    # bound the dense panel: <= ~8M cells (64 MB of float64) per chunk
-    # even when every row is a distinct doc and the batch vocabulary is
-    # at its largest
-    chunk_rows = max(4096, min(_EVAL_CHUNK_ROWS, 8_000_000 // max(n_terms, 1)))
 
-    def _topk_cut(docs, scores):
-        order = np.lexsort((docs, -scores))[:maxk]
+def _posting_arrays(batch, term_to_tid):
+    """One Arrow batch of decoded postings -> (tids, docs, wfs, langs,
+    pcnt, pos): per posting its term id, doc, wf, lang and number of
+    positions, plus the batch's flat positions in posting order (none
+    when the batch has no ``positions`` column)."""
+    idx = {nm: j for j, nm in enumerate(batch.schema.names)}
+
+    def col(nm, dtype):
+        return batch.column(idx[nm]).to_numpy(zero_copy_only=False).astype(dtype)
+
+    denc = batch.column(idx["term"]).dictionary_encode()
+    lut = np.asarray([term_to_tid[t] for t in denc.dictionary.to_pylist()], dtype=np.int64)
+    tids = lut[denc.indices.to_numpy(zero_copy_only=False).astype(np.int64)]
+    if "positions" in idx:
+        lists = batch.column(idx["positions"])
+        off = lists.offsets.to_numpy().astype(np.int64)
+        pcnt = np.diff(off)
+        pos = lists.values.to_numpy(zero_copy_only=False)[off[0] : off[-1]].astype(np.int64)
+    else:
+        pcnt = np.zeros(batch.num_rows, dtype=np.int64)
+        pos = np.empty(0, dtype=np.int64)
+    return tids, col("doc_id", np.int64), col("wf", np.float64), col("lang_id", np.int64), pcnt, pos
+
+
+def _split(cols, cut: int):
+    """(head, tail) of ``_posting_arrays`` columns at posting ``cut``."""
+    pcut = int(cols[4][:cut].sum())
+    head = tuple(c[:cut] for c in cols[:5]) + (cols[5][:pcut],)
+    tail = tuple(c[cut:] for c in cols[:5]) + (cols[5][pcut:],)
+    return head, tail
+
+
+def _doc_chunks(it, term_to_tid, chunk_rows: int, doc_sorted: bool):
+    """Arrow batches of decoded postings -> ``_posting_arrays`` chunks of
+    about ``chunk_rows`` postings. ``doc_sorted`` input is cut only at
+    doc boundaries, so each doc's postings land in one chunk."""
+    bufs: list = []
+    nbuf = 0
+    for batch in it:
+        if batch.num_rows == 0:
+            continue
+        bufs.append(_posting_arrays(batch, term_to_tid))
+        nbuf += batch.num_rows
+        if nbuf < chunk_rows:
+            continue
+        cols = tuple(np.concatenate(c) for c in zip(*bufs))
+        cut = cols[1].size
+        if doc_sorted:
+            # keep the (possibly straddling) last doc buffered
+            cut = int(np.searchsorted(cols[1], cols[1][-1], side="left"))
+            if cut == 0:  # single doc in buffer: keep accumulating
+                bufs = [cols]
+                continue
+        head, tail = _split(cols, cut)
+        yield head
+        bufs, nbuf = ([tail], tail[1].size) if tail[1].size else ([], 0)
+    if bufs:
+        yield tuple(np.concatenate(c) for c in zip(*bufs))
+
+
+def _phrase_docs(seq, cand, inv, tids, pcnt, pos):
+    """Narrow ``cand`` (a mask over a chunk's docs) to the docs in which
+    the term ids ``seq`` occur at consecutive positions. Position p of
+    the j-th token keys ``doc * B + p - j``; a key present for every j
+    is a phrase start, so the key sets are intersected over j (a doc
+    holds one posting per term, so each set is duplicate-free)."""
+    B = int(pos.max()) + 1
+    starts = np.cumsum(pcnt) - pcnt
+    keys = None
+    for j, t in enumerate(seq):
+        sel = np.flatnonzero((tids == t) & cand[inv])
+        c = pcnt[sel]
+        flat = np.repeat(starts[sel] - np.cumsum(c) + c, c) + np.arange(int(c.sum()))
+        p = pos[flat] - j
+        k = (np.repeat(inv[sel], c) * B + p)[p >= 0]
+        keys = k if keys is None else np.intersect1d(keys, k, assume_unique=True)
+    out = np.zeros(cand.size, dtype=bool)
+    out[keys // B] = True
+    return out
+
+
+def _matches(present, branches, seqs, inv, tids, pcnt, pos):
+    """Mask over a chunk's docs: SOME branch has all of its terms
+    (``present``: docs x vocabulary) and, when it is a phrase branch
+    (its ``seqs`` entry is not None), has them at consecutive
+    positions."""
+    matched = np.zeros(present.shape[0], dtype=bool)
+    for btids, seq in zip(branches, seqs):
+        m = present[:, btids].all(axis=1)
+        if seq is not None and m.any():
+            m = _phrase_docs(seq, m, inv, tids, pcnt, pos)
+        matched |= m
+    return matched
+
+
+class _TopK:
+    """Per-query top-maxk (score DESC, doc_id ASC) plus a hit count.
+    Candidate buffers are compacted to maxk whenever they exceed
+    8*maxk, so memory stays bounded per query whatever is added."""
+
+    def __init__(self, maxk: int):
+        self.maxk = maxk
+        self.acc: dict = {}
+        self.counts: dict = {}
+
+    def _cut(self, docs, scores):
+        order = np.lexsort((docs, -scores))[: self.maxk]
         return docs[order], scores[order]
 
-    def _eval_chunk(docs, tids, wfs, langs, acc, counts):
-        uniq, inv = np.unique(docs, return_inverse=True)
-        W = np.zeros((uniq.size, n_terms), dtype=np.float64)
-        W[inv, tids] = wfs
-        # phrase-match rows carry lang_id -1: only postings set a doc's lang
-        real = langs >= 0
-        lang_doc = np.full(uniq.size, -1, dtype=np.int64)
-        lang_doc[inv[real]] = langs[real]
-        for qid, lid, sterms, branches in programs:
-            matched = (W[:, branches[0]] > 0).all(axis=1)
-            for btids in branches[1:]:
-                matched |= (W[:, btids] > 0).all(axis=1)
-            if lid != -1:
-                matched &= lang_doc == lid
-            idx = np.flatnonzero(matched)
-            if not idx.size:
-                continue
-            counts[qid] = counts.get(qid, 0) + idx.size
-            fx = np.zeros(idx.size, dtype=np.int64)
-            for t, idf in sterms:
-                fx += np.floor(idf * W[idx, t] * SCORE_SCALE).astype(np.int64)
-            d, s = uniq[idx], fx.astype(np.float64) / SCORE_SCALE
-            if qid in acc:
-                d = np.concatenate([acc[qid][0], d])
-                s = np.concatenate([acc[qid][1], s])
-            acc[qid] = _topk_cut(d, s) if d.size > 8 * maxk else (d, s)
+    def add(self, qid: int, docs, scores) -> None:
+        self.counts[qid] = self.counts.get(qid, 0) + docs.size
+        if qid in self.acc:
+            docs = np.concatenate([self.acc[qid][0], docs])
+            scores = np.concatenate([self.acc[qid][1], scores])
+        self.acc[qid] = self._cut(docs, scores) if docs.size > 8 * self.maxk else (docs, scores)
 
-    def fn(it):
+    def batches(self):
+        """The ``_REDUCED_SCHEMA`` rows: each counted query's top-maxk
+        plus its count marker."""
         import pyarrow as pa
 
-        acc: dict = {}
-        counts: dict = {}
-
-        def _flush(bufs, final):
-            tids, docs, wfs, langs = (np.concatenate(c) for c in zip(*bufs))
-            cut = docs.size
-            if doc_sorted and not final:
-                # keep the (possibly straddling) last doc buffered
-                cut = np.searchsorted(docs, docs[-1], side="left")
-                if cut == 0:
-                    return bufs  # single doc in buffer: keep accumulating
-            _eval_chunk(docs[:cut], tids[:cut], wfs[:cut], langs[:cut], acc, counts)
-            if cut == docs.size:
-                return []
-            return [(tids[cut:], docs[cut:], wfs[cut:], langs[cut:])]
-
-        bufs: list = []
-        nbuf = 0
-        for batch in it:
-            if batch.num_rows == 0:
-                continue
-            idx = {nm: j for j, nm in enumerate(batch.schema.names)}
-            denc = batch.column(idx["term"]).dictionary_encode()
-            lut = np.asarray(
-                [term_to_tid[t] for t in denc.dictionary.to_pylist()], dtype=np.int64
-            )
-            codes = denc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-            bufs.append(
-                (
-                    lut[codes],
-                    batch.column(idx["doc_id"]).to_numpy(zero_copy_only=False).astype(np.int64),
-                    batch.column(idx["wf"]).to_numpy(zero_copy_only=False).astype(np.float64),
-                    batch.column(idx["lang_id"]).to_numpy(zero_copy_only=False).astype(np.int64),
-                )
-            )
-            nbuf += batch.num_rows
-            if nbuf >= chunk_rows:
-                bufs = _flush(bufs, final=False)
-                nbuf = sum(b[1].size for b in bufs)
-        if bufs:
-            _flush(bufs, final=True)
-        if not counts:
+        if not self.counts:
             return
         qs, ds, ss, ns, mk = [], [], [], [], []
-        for qid in sorted(counts):
-            d, s = _topk_cut(*acc[qid]) if qid in acc else (np.empty(0, np.int64), np.empty(0))
+        for qid in sorted(self.counts):
+            d, s = self._cut(*self.acc[qid])
             qs.append(np.full(d.size + 1, qid, dtype=np.int64))
             ds += [d, [-1]]
             ss += [s, [0.0]]
-            ns += [np.zeros(d.size, dtype=np.int64), [counts[qid]]]
+            ns += [np.zeros(d.size, dtype=np.int64), [self.counts[qid]]]
             mk += [np.zeros(d.size, dtype=bool), [True]]
         yield pa.RecordBatch.from_arrays(
             [pa.array(np.concatenate(c)) for c in (qs, ds, ss, ns, mk)],
             names=["query_id", "doc_id", "score", "n", "is_marker"],
         )
 
+
+def _batch_eval_fn(programs, term_to_tid, maxk: int, doc_sorted: bool = True):
+    """mapInArrow evaluator: (term, doc_id, wf, lang_id[, positions])
+    rows -> each query's partition-local top-maxk (score DESC, doc_id
+    ASC) plus one count-marker row per query (``_REDUCED_SCHEMA``), for
+    EVERY query of the batch in one vectorized pass.
+
+    Per chunk of whole docs, postings are scattered into a dense
+    (docs x batch-vocabulary) wf panel; each query's branch candidacy
+    is numpy boolean algebra over its term columns (``_matches``, with
+    phrase adjacency over the positions) and its score the int64 sum of
+    floor(idf*wf*1e9) contributions. ``doc_sorted`` input keeps a doc's
+    postings in one chunk; unsorted input is only valid when every
+    query reads one term."""
+    n_terms = len(term_to_tid)
+
+    def _eval_chunk(chunk, top):
+        tids, docs, wfs, langs, pcnt, pos = chunk
+        uniq, inv = np.unique(docs, return_inverse=True)
+        W = np.zeros((uniq.size, n_terms), dtype=np.float64)
+        W[inv, tids] = wfs
+        present = W > 0
+        lang_doc = np.empty(uniq.size, dtype=np.int64)
+        lang_doc[inv] = langs
+        for qid, lid, sterms, branches, seqs in programs:
+            matched = _matches(present, branches, seqs, inv, tids, pcnt, pos)
+            if lid != -1:
+                matched &= lang_doc == lid
+            idx = np.flatnonzero(matched)
+            if not idx.size:
+                continue
+            fx = np.zeros(idx.size, dtype=np.int64)
+            for t, idf in sterms:
+                fx += np.floor(idf * W[idx, t] * SCORE_SCALE).astype(np.int64)
+            top.add(qid, uniq[idx], fx.astype(np.float64) / SCORE_SCALE)
+
+    def fn(it):
+        top = _TopK(maxk)
+        for chunk in _doc_chunks(it, term_to_tid, _chunk_rows(n_terms), doc_sorted):
+            _eval_chunk(chunk, top)
+        yield from top.batches()
+
     return fn
 
 
-def _batch_phrase_rows(engine: SearchEngine, queries: list[dict]) -> DataFrame | None:
-    """Adjacency matches of every phrase-flagged query as evaluator input
-    rows (term = the query's ``_PHRASE_TERM``, doc_id, wf 1.0, lang_id
-    -1), or None when the batch has none. One bounded positional decode
-    serves the whole batch (operators/query.py _phrase_sets; each
-    expanded OR branch of each phrase query becomes one sequence).
+def _phrase_hits_fn(term_to_tid, branches, seqs):
+    """mapInArrow over doc-sorted decoded postings with positions ->
+    (doc_id) of every doc where some branch matches, by the evaluator's
+    own candidacy and adjacency test (``_matches``)."""
+    n_terms = len(term_to_tid)
 
-    Matches are lang-UNFILTERED (a doc's token adjacency does not depend
-    on lang); the evaluator applies each query's lang filter from the
-    doc's postings, so all phrase queries share one decode. A phrase
-    match of a branch implies its AND match, so requiring this column in
-    every branch leaves exactly the phrase hits."""
-    seqs: dict[int, list[str]] = {}
-    owner = []
-    for q in queries:
-        if not q.get("phrase"):
-            continue
-        for b in expand_branches(q["query_text"], engine.synonyms):
-            owner.append((len(seqs), _PHRASE_TERM.format(int(q["query_id"]))))
-            seqs[len(seqs)] = b
-    if not seqs:
-        return None
-    matches, _ = engine._phrase_sets(seqs, lang_id=None)
-    qmap = engine.spark.createDataFrame(owner, "seq_id int, term string")
-    return matches.join(F.broadcast(qmap), "seq_id").select(
-        "term",
-        "doc_id",
-        F.lit(1.0).alias("wf"),
-        F.lit(-1).cast("long").alias("lang_id"),
-    )
+    def fn(it):
+        import pyarrow as pa
+
+        for chunk in _doc_chunks(it, term_to_tid, _chunk_rows(n_terms), True):
+            uniq, inv = np.unique(chunk[1], return_inverse=True)
+            present = np.zeros((uniq.size, n_terms), dtype=bool)
+            present[inv, chunk[0]] = True
+            m = _matches(present, branches, seqs, inv, chunk[0], chunk[4], chunk[5])
+            yield pa.RecordBatch.from_arrays([pa.array(uniq[m])], names=["doc_id"])
+
+    return fn
 
 
 def _eval_plan(
@@ -270,27 +336,27 @@ def _eval_plan(
     programs, tid, terms = _compile(engine, queries)
     if not programs:
         return None
-    phrase = _batch_phrase_rows(engine, queries)
-    if phrase is None and all(len(p[2]) == 1 for p in programs):
+    seqs = [s for p in programs for s in p[4]]
+    mode = "score_lang"
+    if any(s is not None for s in seqs):
+        engine._require_positions()
+        mode = "score_lang_pos"
+        if block_join is None and all(s is not None for s in seqs):
+            block_join = engine._phrase_block_join([[terms[t] for t in s] for s in seqs])
+    if all(len(p[2]) == 1 for p in programs):
         # one distinct term per query: a doc holds at most one posting of
         # a term (salted rows cover disjoint doc ranges), so no query
         # needs a doc's postings co-located — evaluate where they are
         # decoded, in the same Python pass, with no shuffle
         ev = _batch_eval_fn(programs, tid, maxk, doc_sorted=False)
-        if engine._decoded_cached is not None and block_join is None:
-            return engine._postings(terms, mode="score_lang").mapInArrow(
-                ev, _REDUCED_SCHEMA
-            )
-        dec = _decode_map("score_lang", avgdl=engine.avgdl)
-        return engine._segment_scan(terms, "score_lang", block_join=block_join).mapInArrow(
+        dec = _decode_map(mode, avgdl=engine.avgdl)
+        return engine._segment_scan(terms, mode, block_join=block_join).mapInArrow(
             lambda it: ev(dec(it)), _REDUCED_SCHEMA
         )
-    postings = engine._postings(terms, block_join=block_join, mode="score_lang")
-    if phrase is not None:
-        postings = postings.unionByName(phrase)
     n_shuf = int(engine.spark.conf.get("spark.sql.shuffle.partitions"))
     return (
-        postings.repartition(n_shuf, "doc_id")
+        engine._postings(terms, block_join=block_join, mode=mode)
+        .repartition(n_shuf, "doc_id")
         .sortWithinPartitions("doc_id")
         .mapInArrow(_batch_eval_fn(programs, tid, maxk), _REDUCED_SCHEMA)
     )
@@ -302,19 +368,43 @@ def _empty_top() -> pd.DataFrame:
     )
 
 
-def _reduce(
-    engine: SearchEngine, queries: list[dict], maxk: int, block_join=None
-) -> tuple[dict, pd.DataFrame]:
-    """Evaluate one chunk and merge it on the driver -> ({query_id:
-    total candidates}, per-partition top rows (query_id, doc_id, score)).
-    One Arrow collect of the reduced frame, which the chunking bounds."""
-    plan = _eval_plan(engine, queries, maxk, block_join)
-    if plan is None:
-        return {}, _empty_top()
+def _merge_reduced(plan: DataFrame) -> tuple[dict, pd.DataFrame]:
+    """One Arrow collect of a reduced frame -> ({query_id: total
+    candidates}, per-partition top rows (query_id, doc_id, score))."""
     pdf = plan.toPandas()
     mk = pdf["is_marker"].to_numpy(dtype=bool)
     totals = pdf.loc[mk].groupby("query_id")["n"].sum().astype(int).to_dict()
     return totals, pdf.loc[~mk]
+
+
+def _reduce(
+    engine: SearchEngine, queries: list[dict], maxk: int, block_join=None
+) -> tuple[dict, pd.DataFrame]:
+    """Evaluate one chunk and merge it on the driver (``_merge_reduced``);
+    the chunking bounds the collected frame."""
+    plan = _eval_plan(engine, queries, maxk, block_join)
+    if plan is None:
+        return {}, _empty_top()
+    return _merge_reduced(plan)
+
+
+def _reduce_scored(cand: DataFrame, maxk: int) -> tuple[dict, pd.DataFrame]:
+    """The evaluator's reducer over any (doc_id, score) frame, as query 0:
+    each partition keeps its top-maxk plus a count marker (``_TopK``),
+    merged by one collect -> ({0: total} or {}, top rows) for
+    ``_paged_pdf``."""
+
+    def fn(it):
+        top = _TopK(maxk)
+        for batch in it:
+            if batch.num_rows:
+                docs, scores = (
+                    batch.column(nm).to_numpy(zero_copy_only=False) for nm in ("doc_id", "score")
+                )
+                top.add(0, docs.astype(np.int64), scores.astype(np.float64))
+        yield from top.batches()
+
+    return _merge_reduced(cand.select("doc_id", "score").mapInArrow(fn, _REDUCED_SCHEMA))
 
 
 def _batch_wand_selection(engine: SearchEngine, queries: list[dict], maxk: int):

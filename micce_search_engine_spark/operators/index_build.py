@@ -714,9 +714,12 @@ def build_index(
                     # partition writer emits one file per bucket instead
                     # of every task fanning out to all n_buckets dirs
                     # (and sort by term so parquet row-group min/max
-                    # stats prune term lookups)
+                    # stats prune term lookups). The sort leads with
+                    # bucket: the partitioned write adds its own local
+                    # sort by bucket and drops any sort that does not
+                    # start with it
                     .repartition(n_buckets, "bucket")
-                    .sortWithinPartitions("term", "salt")
+                    .sortWithinPartitions("bucket", "term", "salt")
                     .write.mode("overwrite")
                     .partitionBy("bucket")
                     .parquet(p.segments + ".__tmp__")

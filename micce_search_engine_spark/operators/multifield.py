@@ -22,6 +22,8 @@ Engine realization:
     (fixed-point score + per-branch matched-term counts), then a union
     + second aggregate sums scores across fields and ORs the match
     flags — a doc is a hit iff SOME field fully matched SOME branch;
+    phrase candidacy per field comes from the BM25 evaluator's own
+    adjacency kernel (operators/batch_query.py ``_phrase_hits_fn``);
   * attributes (geo position, category, bools) live in an attribute
     store table joined by doc_id (Vespa ``attribute``/``fast-search``,
     spot.sd:19-31) — at cluster scale both sides are bucketed by
@@ -32,6 +34,7 @@ Engine realization:
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -99,17 +102,27 @@ def multifield_scored(
     OR (convertSpotNameQuery.go:11-17). Scoring is unchanged (Vespa
     ranks phrase hits with the same bm25 features), so phrase only
     SHRINKS the candidate set. Single-token branches need no position
-    stream; multi-token branches require with_positions indexes."""
+    stream; multi-token branches require with_positions indexes
+    (RuntimeError otherwise)."""
+    from micce_search_engine_spark.operators.batch_query import _phrase_hits_fn
+
     branches = expand_branches(query_text, synonyms)
     if not branches:
         return None
     if phrase and all(len(b) == 1 for b in branches):
         # a 1-token phrase is exactly term presence, which the plain
         # branch aggregate already computes — skip the positional
-        # machinery (and let serving engines keep their decoded-cache
-        # fast path) when no branch is multi-token (ADVICE r5)
+        # decode when no branch is multi-token (ADVICE r5)
         phrase = False
     all_terms = sorted({t for b in branches for t in b})
+    if phrase:
+        tid = {t: i for i, t in enumerate(all_terms)}
+        hits_fn = _phrase_hits_fn(
+            tid,
+            [np.asarray(sorted({tid[t] for t in b}), dtype=np.int64) for b in branches],
+            [np.asarray([tid[t] for t in b], dtype=np.int64) if len(b) > 1 else None
+             for b in branches],
+        )
     parts = []
     for fname, eng in sorted(engines.items()):
         idf = eng.idf_map(all_terms)
@@ -119,16 +132,16 @@ def multifield_scored(
             "w_fx", contrib_fx(eng._idf_expr(idf)[F.col("term")], F.col("wf"))
         )
         if phrase:
-            # phrase candidacy per field: bounded two-pass adjacency
-            # over ALL branches in one decode (operators/query.py
-            # _phrase_sets); the (doc_id) hit set is eagerly
-            # materialized, so joining it back is cheap
-            matches, _ = eng._phrase_sets(
-                dict(enumerate(branches)), lang_id=lid
-            )
+            # phrase candidacy per field: one positional decode of the
+            # field's postings by doc, every branch tested by the
+            # evaluator's kernel; each hit doc is emitted once
+            eng._require_positions()
+            n_shuf = int(eng.spark.conf.get("spark.sql.shuffle.partitions"))
             flag = (
-                matches.select("doc_id")
-                .distinct()
+                eng._postings(all_terms, mode="score_lang_pos", lang_id=lid)
+                .repartition(n_shuf, "doc_id")
+                .sortWithinPartitions("doc_id")
+                .mapInArrow(hits_fn, "doc_id long")
                 .withColumn("matched", F.lit(True))
             )
             agg = per_term.groupBy("doc_id").agg(F.sum("w_fx").alias("score_fx"))
@@ -264,19 +277,20 @@ class ConditionEngine:
         """{total_hits, last_page, results} with the reference's
         limit*page / offset pagination quirk (queryBuilder.go:40-41,
         response.go:40-42). Count + top-k run FUSED in one job over the
-        lazy candidate frame (round-6, VERDICT r5 #6 — previously two
-        jobs over a persisted frame; _topk_and_count's partition-local
-        top-k + count-marker merge returns the identical totals and
-        page window)."""
-        from micce_search_engine_spark.operators.query import _topk_and_count
+        lazy candidate frame, with the keyword evaluator's reducer
+        (partition-local top-k + count marker) and pager."""
+        from micce_search_engine_spark.operators.batch_query import (
+            _paged_pdf,
+            _reduce_scored,
+        )
 
         limit, page = int(condition["limit"]), int(condition["page"])
         cand = self.search_frame(condition)
-        total, top = _topk_and_count(cand, limit * page)
-        offset = limit * (page - 1)
-        window = top[offset : offset + limit]
+        totals, top = _reduce_scored(cand, limit * page)
+        window = _paged_pdf(top, [{"query_id": 0, "limit": limit, "page": page}], None)
+        total = int(totals.get(0, 0))
         return {
             "total_hits": total,
             "last_page": total - limit * page <= 0,
-            "results": [(r["doc_id"], r["score"]) for r in window],
+            "results": [(int(d), float(s)) for d, s in zip(window["doc_id"], window["score"])],
         }

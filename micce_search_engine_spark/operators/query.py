@@ -7,17 +7,20 @@ Re-expresses the reference's query path (SURVEY.md §3.1):
   inverted index, BM25, limit/offset] -> {total_hits, last_page, ids}
   (presentation/model/response.go:8-42).
 
-Every keyword query — ``search`` (exact and ``topk_only``) as much as
-the batch entry points — is ranked by ONE evaluator: ``search`` runs
-as a batch of one through operators/batch_query.py, whose vectorized
-mapInArrow evaluator scores OR-of-AND branches over decoded postings,
+Every keyword query — ``search`` (exact and ``topk_only``) and
+``search_phrase`` as much as the batch entry points — is ranked by ONE
+evaluator: each runs as a batch of one through
+operators/batch_query.py, whose vectorized mapInArrow evaluator scores
+OR-of-AND branches over decoded postings, checks phrase adjacency,
 applies the lang filter, and emits each partition's top-k plus a count
 marker; the driver merges and pages them. This module holds what that
-evaluator reads: the bucket/term-pruned segment scan, the Arrow-batched
-zero-copy posting decode (it emits the idf-free BM25 weight ``wf`` and
-the per-posting lang attribute — NO join against a docs table, which
-at 10^12 docs is a full shuffle per query), the optional pinned decoded
-cache (``preload="decoded"``) and the block-max WAND bounds.
+evaluator reads: the bucket/term-pruned segment scan (optionally pinned
+in executor memory with ``preload=True``), the Arrow-batched zero-copy
+posting decode (it emits the idf-free BM25 weight ``wf``, the
+per-posting lang attribute and, for phrase calls, the positions — NO
+join against a docs table, which at 10^12 docs is a full shuffle per
+query), and the block selections that bound a decode: block-max WAND
+bounds and the rarest-term blocks of a phrase.
 
 Determinism (SURVEY.md §4.2 item 4): per-term contributions are
 quantized to int64 fixed-point (floor(idf * wf * 1e9)) and summed as
@@ -38,10 +41,6 @@ DataFrame joined into the segment scan) — driver state is one row per
 query term, never per block. total_hits is not computed in this mode
 (the reference's totalCount is likewise an estimate under Vespa's
 weakAnd).
-
-Phrase search (``search_phrase``) and multi-field scoring keep their
-own relational frames; ``_topk_and_count`` is the generic reducer for
-them.
 """
 
 from __future__ import annotations
@@ -59,12 +58,13 @@ from micce_search_engine_spark.operators.index_build import IndexPaths, bucket_o
 
 _POSTING_LANG_SCHEMA = "term string, doc_id long, tf long, dl long, lang_id long"
 _POSTING_LANG_POS_SCHEMA = _POSTING_LANG_SCHEMA + ", positions array<int>"
+_SCORE_LANG_SCHEMA = "term string, doc_id long, wf double, lang_id long"
 _SCHEMAS = {
     "postings_lang": _POSTING_LANG_SCHEMA,
     "postings_lang_pos": _POSTING_LANG_POS_SCHEMA,
     "score": "term string, doc_id long, wf double",
-    "score_lang": "term string, doc_id long, wf double, lang_id long",
-    "score_pos": "term string, doc_id long, wf double, positions array<int>",
+    "score_lang": _SCORE_LANG_SCHEMA,
+    "score_lang_pos": _SCORE_LANG_SCHEMA + ", positions array<int>",
 }
 
 # fixed-point scale: contributions are floor(idf * wf * 1e9) int64
@@ -91,7 +91,7 @@ _MODE_COLS = {
     "postings_lang_pos": _SEG_COLS + _LANG_COLS + _POS_COLS,
     "score": _SEG_COLS,
     "score_lang": _SEG_COLS + _LANG_COLS,
-    "score_pos": _SEG_COLS + _POS_COLS,
+    "score_lang_pos": _SEG_COLS + _LANG_COLS + _POS_COLS,
 }
 
 
@@ -152,12 +152,12 @@ def _decode_map(mode: str, lang_id: int | None = None, avgdl: float = 1.0):
 
     modes:
       * ``postings_lang`` / ``postings_lang_pos`` -> (term, doc_id, tf,
-        dl, lang_id[, positions])  [upsert rewrite, decoded cache]
-      * ``score`` / ``score_pos`` -> (term, doc_id, wf[, positions])
-                                   [phrase, multifield; optional
-                                    decode-side exact lang filter]
-      * ``score_lang`` -> (term, doc_id, wf, lang_id)  [the BM25
-                          evaluator, per-query lang filters]
+        dl, lang_id[, positions])  [upsert rewrite]
+      * ``score`` -> (term, doc_id, wf)  [multifield, phrase block
+                     selection; optional decode-side exact lang filter]
+      * ``score_lang`` / ``score_lang_pos`` -> (term, doc_id, wf,
+        lang_id[, positions])  [the BM25 evaluator, per-query lang
+        filters; positions for phrase calls]
 
     Block-max WAND restriction rides the DATA, not the closure: when
     the incoming batch carries an ``allowed`` array<int> column (added
@@ -249,54 +249,6 @@ def _decode_map(mode: str, lang_id: int | None = None, avgdl: float = 1.0):
     return fn
 
 
-def _topk_and_count(cand: DataFrame, k: int) -> tuple[int, list]:
-    """Fused total-count + top-k over (doc_id, score) in ONE job: each
-    partition emits its bounded local top-k plus one count-marker row
-    (``is_marker`` is an explicit column — round-3 used doc_id = -1 as
-    the sentinel, which would absorb real hits of a corpus built with
-    caller-supplied negative doc ids into the total, ADVICE r3), and
-    the driver merges <= n_partitions * (k+1) tiny rows. Replaces
-    round 2's count() + orderBy().limit() double pass over a persisted
-    candidate set."""
-
-    def part(it):
-        import pandas as pd_
-
-        best = None
-        cnt = 0
-        for pdf in it:
-            cnt += len(pdf)
-            pool = pdf if best is None else pd_.concat([best, pdf])
-            best = pool.sort_values(
-                ["score", "doc_id"], ascending=[False, True]
-            ).head(k)
-        marker = pd_.DataFrame(
-            {"doc_id": [-1], "score": [0.0], "n": [cnt], "is_marker": [True]}
-        )
-        if best is None:
-            yield marker
-        else:
-            yield pd_.concat([best.assign(n=0, is_marker=False), marker])
-
-    rows = cand.mapInPandas(
-        part, "doc_id long, score double, n long, is_marker boolean"
-    ).collect()
-    total = int(sum(r["n"] for r in rows if r["is_marker"]))
-    top = sorted(
-        (r for r in rows if not r["is_marker"]),
-        key=lambda r: (-r["score"], r["doc_id"]),
-    )
-    return total, top[:k]
-
-
-def _shift_positions(col, off: int):
-    """positions - off as an array Column. The offset must be bound via
-    this factory's scope: a two-parameter lambda passed to
-    ``F.transform`` would receive the ARRAY INDEX as its second
-    argument."""
-    return F.transform(col, lambda p: p - F.lit(off))
-
-
 def contrib_fx(idf_col, wf_col):
     """Fixed-point per-term BM25 contribution: floor(idf*wf*1e9) long.
     Summed as int64 -> deterministic under ANY partitioning; mirrored
@@ -337,7 +289,7 @@ class SearchEngine:
         spark: SparkSession,
         index_dir: str,
         synonyms: dict[str, str] | None = None,
-        preload: bool | str = False,
+        preload: bool = False,
     ):
         self.spark = spark
         self.paths = IndexPaths(index_dir)
@@ -377,36 +329,8 @@ class SearchEngine:
         # same way; batch/offline sessions leave this off and rely on
         # bucket partition pruning.
         self._segments_cached = None
-        self._decoded_cached = None
         if preload:
             self._segments_cached = spark.read.parquet(self.paths.segments).persist()
-        if preload == "decoded":
-            # serving tier (round-4): pin the FULLY DECODED postings
-            # (term, doc_id, tf, dl, lang_id), term-clustered so the
-            # in-memory columnar cache's per-batch min/max stats prune
-            # non-matching batches — the closest Spark analog of Vespa
-            # holding its index in RAM. A query then skips parquet AND
-            # the Arrow decode entirely; wf is recomputed as Column
-            # math in the exact bm25_wf evaluation order (bit-identical
-            # doubles). Memory = one row per posting per executor —
-            # the deliberate serving-tier tradeoff; batch/offline
-            # sessions use preload=False/True instead.
-            # NO repartition/sort after the decode (round-6): the
-            # segment scan is term-sorted within each bucket partition,
-            # and the decoder preserves row order — the decoded output
-            # is already term-clustered, so the in-memory cache's
-            # per-batch min/max stats prune just as well while the open
-            # skips a full 7.3M-row shuffle+sort (measured ~0.5 s of
-            # the open; probe latency unchanged in an interleaved A/B).
-            self._decoded_cached = (
-                self._segments_cached.select(*_MODE_COLS["postings_lang"])
-                .mapInArrow(
-                    _decode_map("postings_lang", avgdl=self.avgdl),
-                    _POSTING_LANG_SCHEMA,
-                )
-                .persist()
-            )
-            self._decoded_cached.count()  # materialize at open, not query 1
         # the shuffle-free single-term plan runs one task per partition of
         # the segment scan (pinned cache, or parquet splits), which can
         # outnumber spark.sql.shuffle.partitions; batch_query sizes its
@@ -514,35 +438,8 @@ class SearchEngine:
         mode: str = "score",
         lang_id: int | None = None,
     ) -> DataFrame:
-        """Decoded postings of ``terms`` (schema ``_SCHEMAS[mode]``), from
-        the pinned decoded cache when it can serve ``mode``, else
-        decoded from :meth:`_segment_scan`."""
-        if (
-            self._decoded_cached is not None
-            and block_join is None
-            and mode in ("score", "score_lang")
-        ):
-            # serving fast path: filter the pinned decoded postings
-            # (batch-stat pruned by term thanks to the term-clustered
-            # cache layout) and recompute wf as Column math in the
-            # EXACT bm25_wf evaluation order — long->double promotion
-            # and each IEEE op match the numpy expression bit-for-bit
-            base = self._decoded_cached.filter(F.col("term").isin(terms))
-            k1, b = BM25_K1, BM25_B
-            wf_col = (
-                F.col("tf") * F.lit(k1 + 1.0)
-                / (
-                    F.col("tf")
-                    + F.lit(k1)
-                    * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.lit(self.avgdl))
-                )
-            )
-            out = base.withColumn("wf", wf_col)
-            if mode == "score":
-                if lang_id is not None:
-                    out = out.filter(F.col("lang_id") == lang_id)
-                return out.select("term", "doc_id", "wf")
-            return out.select("term", "doc_id", "wf", "lang_id")
+        """Decoded postings of ``terms`` (schema ``_SCHEMAS[mode]``) from
+        :meth:`_segment_scan`."""
         return self._segment_scan(terms, mode, lang_id, block_join).mapInArrow(
             _decode_map(mode, lang_id, self.avgdl), _SCHEMAS[mode]
         )
@@ -588,7 +485,7 @@ class SearchEngine:
         )
         return term_ub, sel
 
-    # -- phrase search (round-4; fused single-decode round-6) -------------
+    # -- phrase search ---------------------------------------------------
 
     #: bounded-decode engagement for the phrase path: collecting the
     #: rarest terms' doc ids + the metadata block-selection pass cost
@@ -602,11 +499,36 @@ class SearchEngine:
     #: full-decode plan applies (same bound class as BROADCAST_IDS_MAX)
     PHRASE_CAND_CAP = 2_000_000
 
+    def _require_positions(self) -> None:
+        if not self.meta.get("has_positions"):
+            raise RuntimeError(
+                "phrase matching requires an index built with "
+                "with_positions=True (this index has no position stream)"
+            )
+
+    def _phrase_block_join(self, seqs: list[list[str]]) -> DataFrame | None:
+        """Block selection bounding the positional decode of a call whose
+        every branch is a multi-token phrase ``seqs``, or None when it
+        does not pay (``phrase_block_factor`` / ``PHRASE_CAND_CAP``).
+        Any match of a sequence contains its RAREST term (dfs ride the
+        driver-side cache idf_map fills), so for ``"the matrix"`` the
+        stopword's corpus-wide postings are never decoded at all.
+        Reference semantics: whereQuery.go:43-57."""
+        mterms = sorted({t for s in seqs for t in s})
+        df = self._df_cache
+        rarest = sorted({min(set(s), key=lambda t: (df.get(t, 0), t)) for s in seqs})
+        cand_cost = sum(df.get(t, 0) for t in rarest)
+        full_cost = sum(df.get(t, 0) for t in mterms)
+        if 0 < cand_cost <= self.PHRASE_CAND_CAP and full_cost >= (
+            self.phrase_block_factor * cand_cost
+        ):
+            return self._phrase_block_selection(rarest, mterms)
+        return None
+
     def _phrase_block_selection(
         self,
         rarest_terms: list[str],
         mterms: list[str],
-        lang_id: int | None,
     ) -> DataFrame:
         """(term, salt, allowed array<int>) selection: the blocks of
         every phrase term that contain at least one doc of the
@@ -617,8 +539,10 @@ class SearchEngine:
         sorted, and each segment-metadata row maps them to its blocks
         with one vectorized searchsorted over (block_first_doc,
         block_last_doc) — no decode of the frequent terms' streams and
-        no range join; driver state is bounded by the engagement cap."""
-        rdec = self._postings(rarest_terms, mode="score", lang_id=lang_id)
+        no range join; driver state is bounded by the engagement cap.
+        Lang filters are left to the evaluator, so one selection serves
+        every query of the call."""
+        rdec = self._postings(rarest_terms, mode="score")
         cdocs = np.unique(
             rdec.select("doc_id").toPandas()["doc_id"].to_numpy(dtype=np.int64)
         )
@@ -666,153 +590,6 @@ class SearchEngine:
 
         return meta.mapInArrow(fn, "term string, salt int, allowed array<int>")
 
-    def _phrase_core(
-        self,
-        seqs: dict[int, list[str]],
-        lang_id: int | None = None,
-    ) -> tuple[DataFrame, dict[int, "F.Column"]]:
-        """Fused core of phrase matching (round-6): ONE decode pass,
-        ONE per-doc aggregate, adjacency as array intersection.
-
-        Returns ``(base, conds)``: ``base`` is the lazy per-doc frame
-        with ``tp`` = map(term -> struct(wf, positions)) over every
-        decoded term of the doc, and ``conds[j]`` the match predicate
-        of sequence j over ``tp``. A sequence [t0..tm-1] matches iff
-        intersecting t0's positions with each ti's positions shifted by
-        -i is non-empty (a missing term nulls the intersection — size
-        -1 — so presence is implicit). Everything after the decode is
-        whole-stage-codegen Column math: no position explode, no
-        adjacency shuffle, no per-branch columns (scales past
-        MAX_BRANCHES to whole query batches).
-
-        Scale bound (VERDICT r5 next #1): when every sequence is
-        multi-token, any match must contain its sequence's RAREST term
-        (dfs ride the driver-side cache idf_map fills), so the
-        positional decode is restricted to blocks containing one of
-        those docs via :meth:`_phrase_block_selection` — for
-        ``"the matrix"`` the stopword's corpus-wide postings are never
-        decoded at all, in ANY stream. Engaged adaptively
-        (``phrase_block_factor`` / ``PHRASE_CAND_CAP``); with
-        single-token sequences present the full decode of their terms
-        is required anyway, so the dense plan applies.
-        Reference semantics: whereQuery.go:43-57.
-        """
-        seq_ids = sorted(seqs)
-        all_terms = sorted({t for s in seqs.values() for t in s})
-        multi = {j: seqs[j] for j in seq_ids if len(seqs[j]) > 1}
-        single_ids = [j for j in seq_ids if j not in multi]
-        if multi and not self.meta.get("has_positions"):
-            raise RuntimeError(
-                "phrase matching requires an index built with "
-                "with_positions=True (this index has no position stream)"
-            )
-        mterms = sorted({t for s in multi.values() for t in s})
-        sterms_only = sorted(set(all_terms) - set(mterms))
-        self.idf_map(all_terms)  # warm the driver-side df cache
-        block_join = None
-        if multi and not single_ids:
-            rarest = sorted(
-                {
-                    min(set(s), key=lambda t: (self._df_cache.get(t, 0), t))
-                    for s in multi.values()
-                }
-            )
-            cand_cost = sum(self._df_cache.get(t, 0) for t in rarest)
-            full_cost = sum(self._df_cache.get(t, 0) for t in mterms)
-            if (
-                0 < cand_cost <= self.PHRASE_CAND_CAP
-                and full_cost >= self.phrase_block_factor * cand_cost
-            ):
-                block_join = self._phrase_block_selection(rarest, mterms, lang_id)
-        parts = []
-        if multi:
-            parts.append(
-                self._postings(
-                    mterms, block_join=block_join, mode="score_pos", lang_id=lang_id
-                )
-            )
-        if sterms_only:
-            parts.append(
-                self._postings(sterms_only, mode="score", lang_id=lang_id).withColumn(
-                    "positions", F.lit(None).cast("array<int>")
-                )
-            )
-        rows = parts[0]
-        for p in parts[1:]:
-            rows = rows.unionByName(p)
-        # one row per (term, doc) — salts cover disjoint doc ranges —
-        # so the per-doc map has unique keys by construction
-        base = rows.groupBy("doc_id").agg(
-            F.map_from_entries(
-                F.collect_list(
-                    F.struct(F.col("term"), F.struct(F.col("wf"), F.col("positions")))
-                )
-            ).alias("tp")
-        )
-        conds: dict[int, F.Column] = {}
-        for j in seq_ids:
-            toks = seqs[j]
-            if len(toks) == 1:
-                conds[j] = F.map_contains_key(F.col("tp"), toks[0])
-            else:
-                starts = F.col("tp")[toks[0]]["positions"]
-                for i in range(1, len(toks)):
-                    starts = F.array_intersect(
-                        starts,
-                        _shift_positions(F.col("tp")[toks[i]]["positions"], i),
-                    )
-                conds[j] = F.size(starts) > 0
-        return base, conds
-
-    def _phrase_score_col(self, idf: dict[str, float]):
-        """Fixed-point BM25 over every decoded term of the doc, computed
-        from the ``tp`` map with one higher-order aggregate — the same
-        floor(idf*wf*1e9) int64 contributions as contrib_fx, summed as
-        longs (exact and order-independent, so it equals the grouped
-        sum bit-for-bit)."""
-        idf_m = self._idf_expr(idf)
-        fx = F.aggregate(
-            F.map_entries(F.col("tp")),
-            F.lit(0).cast("long"),
-            lambda acc, e: acc
-            + F.floor(idf_m[e["key"]] * e["value"]["wf"] * F.lit(SCORE_SCALE)).cast(
-                "long"
-            ),
-        )
-        return fx / F.lit(SCORE_SCALE)
-
-    def _phrase_sets(
-        self,
-        seqs: dict[int, list[str]],
-        lang_id: int | None = None,
-        idf: dict[str, float] | None = None,
-    ) -> tuple[DataFrame, DataFrame | None]:
-        """Materialized phrase matching for COMPOSITION (multi-field
-        branches, batched queries): returns ``(matches, scored)`` —
-        ``matches`` (seq_id, doc_id) distinct; ``scored`` (only when
-        ``idf`` is given) is (doc_id, score), fixed-point BM25 over ALL
-        of ``seqs``' decoded terms for every doc in some match. One
-        compact per-doc frame is materialized (localCheckpoint) and
-        both outputs are narrow views over it, so callers compose them
-        freely with no lifetime obligations. See :meth:`_phrase_core`
-        for the fused shape."""
-        base, conds = self._phrase_core(seqs, lang_id)
-        arr = F.filter(
-            F.array(*[F.when(conds[j], F.lit(j)) for j in sorted(seqs)]),
-            lambda x: x.isNotNull(),
-        )
-        cols = [F.col("doc_id"), arr.alias("_seqs")]
-        if idf is not None:
-            cols.append(self._phrase_score_col(idf).alias("score"))
-        flat = (
-            base.select(*cols)
-            .filter(F.size("_seqs") > 0)
-            .localCheckpoint(eager=True)
-        )
-        matches = flat.select(F.explode("_seqs").alias("seq_id"), "doc_id")
-        scored = flat.select("doc_id", "score") if idf is not None else None
-        return matches, scored
-
     def search_phrase(
         self,
         query_text: str,
@@ -824,45 +601,19 @@ class SearchEngine:
         ``field contains "multi word"`` on an index field
         (/root/reference/search-api/internal/repository/query/whereQuery.go:43-57):
         the query's tokens must appear CONSECUTIVELY in the document's
-        token stream. Requires an index built with
+        token stream. Synonyms expand as in :meth:`search`, each
+        multi-token branch being its own phrase
+        (convertSpotNameQuery.go:5-22). Requires an index built with
         ``with_positions=True``; scoring is standard BM25 over the
-        phrase's distinct terms (matching Vespa, which ranks phrase
-        hits with the same bm25 feature). The positional decode is
-        bounded by the AND-of-terms candidate set — see
-        :meth:`_phrase_sets` for the two-pass shape.
-        """
-        if limit < 1 or page < 1:
-            raise ValueError("limit and page are required and must be >= 1")
-        if not self.meta.get("has_positions"):
-            raise RuntimeError(
-                "search_phrase requires an index built with "
-                "with_positions=True (this index has no position stream)"
-            )
-        from micce_search_engine_spark.functions.tokenize import tokenize_text
-
-        qtokens = tokenize_text(query_text)
-        if not qtokens:
-            return {"total_hits": 0, "last_page": True, "results": []}
-        idf = self.idf_map(sorted(set(qtokens)))
-        k = limit * page
-        lid = self.lang_id_of(lang_filter)
-        # single-query fast shape: decode + per-doc map + phrase filter
-        # + score + fused count/top-k in ONE terminal action over the
-        # lazy plan — no persisted intermediates at all (round-6; the
-        # round-5 two-pass shape persisted two frames and re-decoded
-        # the position stream in a second Python pass)
-        base, conds = self._phrase_core({0: qtokens}, lang_id=lid)
-        cand = base.filter(conds[0]).select(
-            "doc_id", self._phrase_score_col(idf).alias("score")
+        query's distinct terms (matching Vespa, which ranks phrase hits
+        with the same bm25 feature). Runs as a phrase-flagged batch of
+        one through the shared evaluator, which checks adjacency per
+        doc; see operators/batch_query.py for the bounded decode."""
+        self._require_positions()
+        return self._search_one(
+            {"query_text": query_text, "lang_filter": lang_filter, "limit": limit,
+             "page": page, "phrase": True}
         )
-        total, top = _topk_and_count(cand, k)
-        offset = limit * (page - 1)
-        window = top[offset : offset + limit]
-        return {
-            "total_hits": total,
-            "last_page": total - limit * page <= 0,
-            "results": [(r["doc_id"], r["score"]) for r in window],
-        }
 
     # -- entry point ----------------------------------------------------
 
@@ -884,15 +635,16 @@ class SearchEngine:
         WAND path and reports no totals. Raises ValueError unless
         limit >= 1 and page >= 1.
         """
+        return self._search_one(
+            {"query_text": query_text, "lang_filter": lang_filter, "limit": limit,
+             "page": page},
+            topk_only=topk_only,
+        )
+
+    def _search_one(self, query: dict, topk_only: bool = False) -> dict:
         from micce_search_engine_spark.operators.batch_query import _batch_pages
 
-        query = {
-            "query_id": 0,
-            "query_text": query_text,
-            "lang_filter": lang_filter,
-            "limit": limit,
-            "page": page,
-        }
+        query = dict(query, query_id=0)
         totals, pages = _batch_pages(self, [query], topk_only=topk_only)
         results = [
             (int(d), float(s)) for d, s in zip(pages["doc_id"], pages["score"])
@@ -902,6 +654,6 @@ class SearchEngine:
         total = int(totals.get(0, 0))
         return {
             "total_hits": total,
-            "last_page": total - limit * page <= 0,
+            "last_page": total - query["limit"] * query["page"] <= 0,
             "results": results,
         }

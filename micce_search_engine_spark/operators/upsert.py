@@ -752,22 +752,3 @@ def _patch_partitions(
     swaps, tmp = _prepare_patch(df, table_path, part_col, part_vals, extra_parts)
     _apply_swaps(swaps)
     _drop_staging(swaps, [tmp])
-
-
-def _atomic_overwrite(df: DataFrame, path: str, partition_by: str | None = None) -> None:
-    tmp = path + f".__upd_{uuid.uuid4().hex[:8]}__"
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(partition_by)
-    w.parquet(tmp)
-    old = _bak_path(path)
-    # a crash between the two renames below leaves a stale __old__ dir;
-    # clear it first or os.rename(path, old) raises and wedges upserts
-    shutil.rmtree(old, ignore_errors=True)
-    if os.path.exists(path):
-        os.rename(path, old)
-    # NOTE: between these renames <path> briefly does not exist for
-    # concurrent readers — single-writer/zero-reader is assumed here
-    # (a real deployment uses Iceberg/Delta snapshot commits instead)
-    os.rename(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)

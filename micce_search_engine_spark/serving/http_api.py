@@ -17,7 +17,7 @@ The engine side is a :class:`~micce_search_engine_spark.operators.
 multifield.ConditionEngine` (multi-field keyword with synonym-branch
 OR; multi-word keywords PHRASE-match per field — the reference's
 ``contains "multi word"`` semantics, whereQuery.go:43-57) opened by
-the caller, typically with ``preload="decoded"`` engines for serving
+the caller, typically with ``preload=True`` engines for serving
 latency. ``spot_ids`` come from a caller-supplied ``id_of(doc_id)``
 mapping (default: decimal string of the doc_id — the engine's stable
 document identity; a deployment passes a doc_id->external-id lookup).

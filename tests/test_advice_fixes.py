@@ -1,7 +1,6 @@
 """Regression tests for the round-1 ADVICE findings:
-short-doc shingle crash, null-text insert in apply_upsert, stale
-__old__ dir wedging _atomic_overwrite, and latest-status (not
-lexicographic-max) manifest lineage."""
+short-doc shingle crash, null-text insert in apply_upsert and
+latest-status (not lexicographic-max) manifest lineage."""
 
 import os
 import time
@@ -15,7 +14,7 @@ from micce_search_engine_spark.operators.dedup import (
     shingles,
 )
 from micce_search_engine_spark.operators.index_build import build_index
-from micce_search_engine_spark.operators.upsert import _atomic_overwrite, apply_upsert
+from micce_search_engine_spark.operators.upsert import apply_upsert
 from micce_search_engine_spark.plans.manifest import COMPLETED, PROCESSING, Manifest
 
 
@@ -64,18 +63,6 @@ def test_upsert_inserts_null_text_url(spark, tmp_path):
     assert docs.select("doc_id").distinct().count() == 51
     row = docs.filter(F.col("url") == "https://zz.example/nulltext").collect()[0]
     assert row["doc_id"] == 50 and row["dl"] == 0
-
-
-def test_atomic_overwrite_clears_stale_old_dir(spark, tmp_path):
-    from micce_search_engine_spark.operators.upsert import _bak_path
-
-    path = str(tmp_path / "tbl")
-    df = spark.createDataFrame([(1,)], "x long")
-    _atomic_overwrite(df, path)
-    os.makedirs(_bak_path(path))  # simulate crash between the two renames
-    _atomic_overwrite(spark.createDataFrame([(2,)], "x long"), path)
-    assert [r["x"] for r in spark.read.parquet(path).collect()] == [2]
-    assert not os.path.exists(_bak_path(path))
 
 
 def test_manifest_latest_status_not_lexicographic(spark, tmp_path):
@@ -170,15 +157,18 @@ def test_adaptive_wand_skips_probe_at_small_scale(
 
 def test_topk_count_marker_survives_negative_doc_ids(spark):
     """ADVICE r3: doc_id == -1 was the count-marker sentinel; a corpus
-    with caller-supplied negative ids must not lose hits to it."""
-    from micce_search_engine_spark.operators.query import _topk_and_count
+    with caller-supplied negative ids must not lose hits to it. Checked
+    on the shared reducer and pager every scored frame goes through."""
+    from micce_search_engine_spark.operators.batch_query import _paged_pdf, _reduce_scored
 
     cand = spark.createDataFrame(
         [(-1, 5.0), (-2, 4.0), (3, 3.0)], "doc_id long, score double"
     )
-    total, top = _topk_and_count(cand, 10)
-    assert total == 3
-    assert [(r["doc_id"], r["score"]) for r in top] == [(-1, 5.0), (-2, 4.0), (3, 3.0)]
+    totals, top = _reduce_scored(cand, 10)
+    assert totals == {0: 3}
+    page = _paged_pdf(top, [{"query_id": 0, "limit": 10, "page": 1}], totals)
+    assert list(zip(page["doc_id"], page["score"])) == [(-1, 5.0), (-2, 4.0), (3, 3.0)]
+    assert list(page["total_hits"]) == [3, 3, 3]
 
 
 def test_staged_segment_overwrite_is_hidden_and_swept(spark, tmp_path):

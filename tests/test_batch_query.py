@@ -18,6 +18,25 @@ SPECS = [
 
 
 @pytest.fixture(scope="module")
+def pos_index(spark, tiny_pages_pdf, tmp_path_factory):
+    """The tiny corpus indexed with positions, for phrase queries."""
+    from micce_search_engine_spark.corpus import pages_spark_schema
+    from micce_search_engine_spark.operators.index_build import build_index
+
+    idx = str(tmp_path_factory.mktemp("batchphrase") / "idx")
+    pages = spark.createDataFrame(tiny_pages_pdf, schema=pages_spark_schema())
+    build_index(
+        spark, pages, idx, n_buckets=4, max_postings_per_row=300, with_positions=True
+    )
+    return idx
+
+
+def _phrase_spec(qid, text, limit=5, page=1, lang=None):
+    return {"query_id": qid, "query_text": text, "lang_filter": lang,
+            "limit": limit, "page": page, "phrase": True}
+
+
+@pytest.fixture(scope="module")
 def batch_env(spark, tiny_index, synonyms):
     eng = SearchEngine(spark, tiny_index, synonyms=synonyms)
     rows = search_batch(eng, SPECS).collect()
@@ -134,20 +153,13 @@ def test_batch_wand_adaptive_split_matches_exact(batch_env):
         eng.wand_engage_factor = old
 
 
-def test_batch_phrase_flag(spark, tiny_pages_pdf, synonyms, tmp_path_factory):
+def test_batch_phrase_flag(spark, pos_index, synonyms):
     """Round-5 phrase-in-batch: a phrase-flagged query's hits/totals in
     search_batch equal search_phrase; bag-of-words queries in the same
     batch are unaffected; totals_batch and search_batch_topk agree."""
-    from micce_search_engine_spark.corpus import pages_spark_schema
     from micce_search_engine_spark.operators.batch_query import search_batch_topk
-    from micce_search_engine_spark.operators.index_build import build_index
 
-    idx = str(tmp_path_factory.mktemp("batchphrase") / "idx")
-    pages = spark.createDataFrame(tiny_pages_pdf, schema=pages_spark_schema())
-    build_index(
-        spark, pages, idx, n_buckets=4, max_postings_per_row=300, with_positions=True
-    )
-    eng = SearchEngine(spark, idx, synonyms=synonyms)
+    eng = SearchEngine(spark, pos_index, synonyms=synonyms)
     specs = [
         {"query_id": 0, "query_text": "the of", "lang_filter": None,
          "limit": 5, "page": 1, "phrase": True},
@@ -277,11 +289,79 @@ def test_single_search_unknown_lang_matches_nothing(spark, tiny_index, synonyms)
     assert res == {"total_hits": 0, "last_page": True, "results": []}
 
 
-def _exchanges(df) -> list[str]:
+def test_search_phrase_expands_synonyms(spark, pos_index):
+    """search_phrase is a phrase-flagged batch of one: a synonym key
+    expands to OR branches, each multi-token branch its own phrase,
+    exactly as the same query in search_batch."""
+    syn = {"qalias": "the of", "the of": "w000001 the"}
+    eng = SearchEngine(spark, pos_index, synonyms=syn)
+    for text in ("qalias", "the of"):
+        rows = sorted(
+            search_batch(eng, [_phrase_spec(7, text)]).collect(), key=lambda r: r["rank"]
+        )
+        got = eng.search_phrase(text, limit=5, page=1)
+        assert rows and got["total_hits"] == rows[0]["total_hits"], text
+        assert got["results"] == [(r["doc_id"], r["score"]) for r in rows], text
+    plain = SearchEngine(spark, pos_index).search_phrase("the of", limit=5, page=1)
+    # the extra "w000001 the" branch only adds hits
+    assert eng.search_phrase("the of", limit=5, page=1)["total_hits"] >= plain["total_hits"] > 0
+
+
+def test_phrase_docs_matches_a_loop():
+    """The adjacency kernel against a per-doc scan of token streams, on
+    random docs with repeated tokens and postings in shuffled order."""
+    import numpy as np
+
+    from micce_search_engine_spark.operators.batch_query import _phrase_docs
+
+    rng = np.random.default_rng(5)
+    # many docs share the longest length, so a doc's last position sits
+    # right below the next doc's keys: a phrase must not run across docs
+    streams = [rng.integers(0, 4, size=int(rng.choice([1, 7, 12]))) for _ in range(60)]
+    postings = [  # (doc, term, positions): one per term present in a doc
+        (d, t, np.flatnonzero(st == t)) for d, st in enumerate(streams) for t in np.unique(st)
+    ]
+    postings = [postings[i] for i in rng.permutation(len(postings))]
+    inv = np.asarray([d for d, _, _ in postings])
+    tids = np.asarray([t for _, t, _ in postings])
+    pcnt = np.asarray([p.size for _, _, p in postings])
+    pos = np.concatenate([p for _, _, p in postings])
+    cand = rng.random(len(streams)) < 0.8
+    for seq in ([0, 1], [1, 1], [2, 0, 3], [3, 3, 3], [0]):
+        got = _phrase_docs(np.asarray(seq), cand, inv, tids, pcnt, pos)
+        exp = [
+            bool(cand[d]) and any(
+                st[i : i + len(seq)].tolist() == seq for i in range(len(st) - len(seq) + 1)
+            )
+            for d, st in enumerate(streams)
+        ]
+        assert got.tolist() == exp, seq
+
+
+def test_phrase_needs_positions(spark, tiny_index, synonyms):
+    """A multi-token phrase on an index without positions raises
+    RuntimeError at every entry; a 1-token phrase is bag-of-words."""
+    from micce_search_engine_spark.operators.multifield import multifield_scored
+
+    eng = SearchEngine(spark, tiny_index, synonyms=synonyms)
+    with pytest.raises(RuntimeError):
+        eng.search_phrase("the of", limit=5, page=1)
+    with pytest.raises(RuntimeError):
+        search_batch(eng, [_phrase_spec(0, "the of")])
+    with pytest.raises(RuntimeError):
+        multifield_scored({"text": eng}, "the of", {}, phrase=True)
+    rows = search_batch(eng, [_phrase_spec(0, "the")]).collect()
+    single = eng.search("the", limit=5, page=1)
+    assert [(r["doc_id"], r["score"]) for r in sorted(rows, key=lambda r: r["rank"])] == (
+        single["results"]
+    )
+
+
+def _final_plan(df) -> list[str]:
     df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
     final = plan.split("== Initial Plan ==")[0]  # AQE prints both plans
-    return [ln.strip() for ln in final.splitlines() if "Exchange" in ln]
+    return [ln.strip() for ln in final.splitlines()]
 
 
 @pytest.mark.parametrize(
@@ -291,18 +371,29 @@ def _exchanges(df) -> list[str]:
         (["the", "of"], 0),  # a batch of single-term queries
         (["the of"], 1),  # multi-term
         (["alias0"], 1),  # synonym: two branches, two terms
+        (['"the of"', "the"], 1),  # a phrase (quoted) and a term
     ],
 )
-def test_eval_plan_shape(spark, tiny_index, synonyms, texts, n_exchanges):
+def test_eval_plan_shape(request, spark, synonyms, texts, n_exchanges):
     """Single-term calls run shuffle-free; every other call repartitions
-    the decoded postings by doc_id exactly once."""
+    the decoded postings by doc_id exactly once. Every call decodes its
+    terms in ONE segment scan — a phrase call too, whose decode also
+    reads the position stream."""
     from micce_search_engine_spark.operators.batch_query import _eval_plan
 
-    eng = SearchEngine(spark, tiny_index, synonyms=synonyms)
+    phrase = any(t.startswith('"') for t in texts)
+    idx = request.getfixturevalue("pos_index" if phrase else "tiny_index")
+    eng = SearchEngine(spark, idx, synonyms=synonyms)
+    eng.phrase_block_factor = 10**9  # the unbounded plan: no block selection
     specs = [
-        {"query_id": i, "query_text": t, "lang_filter": None, "limit": 10, "page": 1}
+        {"query_id": i, "query_text": t.strip('"'), "lang_filter": None, "limit": 10,
+         "page": 1, "phrase": t.startswith('"')}
         for i, t in enumerate(texts)
     ]
-    ex = _exchanges(_eval_plan(eng, specs, 10))
+    plan = _final_plan(_eval_plan(eng, specs, 10))
+    ex = [ln for ln in plan if "Exchange" in ln]
     assert len(ex) == n_exchanges, ex
     assert all("hashpartitioning(doc_id" in ln for ln in ex), ex
+    scans = [ln for ln in plan if "FileScan parquet" in ln]
+    assert len(scans) == 1, plan
+    assert ("pos_blob" in scans[0]) == phrase, scans

@@ -79,7 +79,13 @@ def test_parallelism_invariance(spark, pages_pdf, tmp_path):
 
 def test_skew_salting_structure(spark, pages_pdf, tmp_path):
     """Zipf-head terms split into ceil(df/max) doc-range salts; ranges
-    are disjoint and ordered; union re-decodes to the full posting."""
+    are disjoint and ordered; union re-decodes to the full posting.
+    Every bucket's segment file holds its rows (term, salt)-sorted, so
+    row-group min/max stats on term can prune lookups."""
+    import os
+
+    import pyarrow.parquet as pq
+
     from micce_search_engine_spark.functions.codec import decode_postings
 
     path = tmp_path / "salted"
@@ -102,6 +108,17 @@ def test_skew_salting_structure(spark, pages_pdf, tmp_path):
     assert np.all(np.diff(all_docs) > 0), "salt ranges must be disjoint+sorted"
     assert all_docs.size == df_total
     assert sum(r["df"] for r in the_rows) == df_total
+
+    seg_root = str(path) + "/segments"
+    buckets = [b for b in os.listdir(seg_root) if b.startswith("bucket=")]
+    assert len(buckets) == 4
+    for b in buckets:
+        for f in os.listdir(os.path.join(seg_root, b)):
+            if not f.endswith(".parquet"):
+                continue
+            tbl = pq.read_table(os.path.join(seg_root, b, f), columns=["term", "salt"])
+            keys = list(zip(tbl.column("term").to_pylist(), tbl.column("salt").to_pylist()))
+            assert keys == sorted(keys), (b, f)
 
 
 def test_salted_vs_unsalted_results_identical(spark, pages_pdf, tmp_path):

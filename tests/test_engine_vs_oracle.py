@@ -196,12 +196,14 @@ def test_phrase_search_cjk_bigrams(spark, tmp_path):
 def test_phrase_positional_decode_is_bounded(spark, tiny_pages_pdf, tmp_path_factory):
     """VERDICT r5 next #1: when the bound engages, the frequent phrase
     terms' streams must never be fully decoded — the only full decode
-    is the RAREST term's cheap (score) stream, and the single
+    is the RAREST term's cheap (score) stream, and the evaluator's one
     positional decode carries a block_join restricting it to blocks
     holding a rarest-term doc. Structural spy on _postings; the
-    disengaged plan must return identical results. Also multi-sequence
-    matches agree with per-sequence single calls."""
+    disengaged plan must return identical results. Each phrase of a
+    batch (incl. a 1-token phrase, which needs the full decode) matches
+    exactly what it matches alone."""
     from micce_search_engine_spark.corpus import pages_spark_schema
+    from micce_search_engine_spark.operators.batch_query import search_batch
     from micce_search_engine_spark.operators.index_build import build_index
 
     idx = str(tmp_path_factory.mktemp("phrasebnd") / "idx")
@@ -218,37 +220,45 @@ def test_phrase_positional_decode_is_bounded(spark, tiny_pages_pdf, tmp_path_fac
         calls.append((tuple(terms), mode, block_join is not None))
         return orig(terms, block_join=block_join, mode=mode, lang_id=lang_id)
 
+    def positional(bounded):
+        pos_calls = [c for c in calls if c[1] == "score_lang_pos"]
+        assert pos_calls and all(b == bounded for _, _, b in pos_calls), calls
+        if bounded:  # the rarest term's cheap stream is the only full decode
+            score_calls = [c for c in calls if c[1] == "score"]
+            assert score_calls and all(len(ts) == 1 for ts, _, _ in score_calls), calls
+        assert all(m in ("score", "score_lang_pos") for _, m, _ in calls), calls
+        calls.clear()
+
     eng._postings = spy
     eng.phrase_block_factor = 0  # force block-selection engagement
     res = eng.search_phrase("the of", limit=10, page=1)
     assert res["total_hits"] > 0
-    pos_calls = [c for c in calls if c[1] == "score_pos"]
-    assert pos_calls and all(bounded for _, _, bounded in pos_calls), calls
-    # the rarest term's cheap stream is the only full decode
-    score_calls = [c for c in calls if c[1] == "score"]
-    assert score_calls and all(len(ts) == 1 for ts, _, _ in score_calls), calls
+    positional(bounded=True)
 
     # adaptive disengage (similar-df terms: nothing to prune) still
     # returns identical results, with the decode NOT block-restricted
-    calls.clear()
     eng.phrase_block_factor = 10**9
     res2 = eng.search_phrase("the of", limit=10, page=1)
     assert res2 == res
-    pos_calls = [c for c in calls if c[1] == "score_pos"]
-    assert pos_calls and not any(bounded for _, _, bounded in pos_calls), calls
-    eng.phrase_block_factor = SearchEngine.phrase_block_factor
+    positional(bounded=False)
 
-    # multi-sequence primitive: one decode, per-seq matches identical
-    # to running each sequence alone (incl. a 1-token sequence)
-    seqs = {0: ["the", "of"], 1: ["w000001"], 2: ["of", "the"]}
-    matches, scored = eng._phrase_sets(seqs, idf=eng.idf_map(["the", "of", "w000001"]))
-    got = {
-        j: sorted(r["doc_id"] for r in matches.filter(matches.seq_id == j).collect())
-        for j in seqs
-    }
-    for j, s in seqs.items():
-        alone, _ = eng._phrase_sets({j: s})
-        assert got[j] == sorted(r["doc_id"] for r in alone.collect()), (j, s)
-    # scored covers exactly the union of hit docs
-    hit_union = sorted({d for ds in got.values() for d in ds})
-    assert sorted(r["doc_id"] for r in scored.collect()) == hit_union
+    # several phrases in one call: one decode, per-phrase hits identical
+    # to each phrase alone; the bound engages only when every branch of
+    # the call is multi-token
+    eng.phrase_block_factor = 0
+    for texts, bounded in ((["the of", "of the"], True), (["the of", "w000001", "of the"], False)):
+        specs = [
+            {"query_id": j, "query_text": t, "lang_filter": None, "limit": 1000,
+             "page": 1, "phrase": True}
+            for j, t in enumerate(texts)
+        ]
+        rows = sorted(search_batch(eng, specs).collect(), key=lambda r: (r["query_id"], r["rank"]))
+        positional(bounded)
+        for s in specs:
+            got = [r for r in rows if r["query_id"] == s["query_id"]]
+            alone = eng.search_phrase(s["query_text"], limit=1000, page=1)
+            calls.clear()
+            assert alone["total_hits"] > 0, s
+            assert [(r["doc_id"], r["score"]) for r in got] == alone["results"], s
+            assert got[0]["total_hits"] == alone["total_hits"], s
+    eng.phrase_block_factor = SearchEngine.phrase_block_factor

@@ -82,38 +82,26 @@ def main() -> None:
         )
     )
 
-    # phrase plan (round-6: fused single decode, rarest-term bounded)
+    # phrase plan: the same evaluator, with positions and the rarest-term
+    # block bound
     eng.phrase_block_factor = 0  # force block-selection engagement
-    base_p, conds_p = eng._phrase_core({0: ["the", "of"]})
+    pspec = dict(spec(0, "the of"), phrase=True)
     sections.append(
         (
-            "Phrase matching (round-6: fused single decode, rarest-term bound)",
+            "BM25 evaluator, phrase query (positions, rarest-term bound)",
             "Look for: ONE positional scan (ReadSchema WITH pos_blob/"
             "block_pos_off) behind a BroadcastHashJoin against the "
             "rarest-term-derived block selection (term, salt, allowed) — the "
             "frequent terms' streams are never fully decoded in ANY mode "
             "(the only unrestricted decode is the rarest term's cheap "
-            "score scan feeding the selection); adjacency is array_intersect "
-            "Column math over a per-doc map aggregate — no position explode, "
-            "no adjacency shuffle, no window.",
-            explain(base_p.filter(conds_p[0]).select("doc_id")),
+            "score scan feeding the selection); then the same ONE Exchange "
+            "hashpartitioning(doc_id) + Sort and evaluator MapInArrow as any "
+            "multi-term query, which checks adjacency per doc — no position "
+            "explode, no per-doc map aggregate, no window.",
+            explain(_eval_plan(eng, [pspec], 10)),
         )
     )
     eng.phrase_block_factor = SearchEngine.phrase_block_factor
-
-    # serving mode: decoded-postings cache (round-4)
-    srv = SearchEngine(spark, idx, synonyms=syn, preload="decoded")
-    sections.append(
-        (
-            "Serving-mode decoded cache (round-4: preload='decoded')",
-            "Look for: InMemoryTableScan (no parquet, no decode) with the "
-            "term filter applied against the cached columnar batches; wf "
-            "recomputed as Column math feeding the evaluator MapInArrow.",
-            explain(_eval_plan(srv, [spec(0, "the")], 10)),
-        )
-    )
-    srv._decoded_cached.unpersist()
-    srv._segments_cached.unpersist()
 
     # batched plan
     specs = [spec(0, "the w000002", lang="en"), spec(1, "alias0", limit=5, page=2)]
