@@ -24,12 +24,22 @@ one — compiles into the same plan (SURVEY.md §2D):
      (search-api/internal/repository/query/queryBuilder.go:40-41,
       search-api/internal/presentation/model/response.go:40-42)
 
-A doc's branch candidacy needs all of its postings in one task, so the
-postings are repartitioned by ``doc_id`` once — unless every query of
-the call has exactly one distinct term: a doc holds at most one posting
-of a term, so decode and evaluation then fuse into one mapInArrow over
-the pruned segment scan, with no shuffle. Batches are split into chunks
-whose reduced frame fits DRIVER_MERGE_MAX_ROWS.
+A doc's branch candidacy needs all of its postings in one chunk of one
+task, so a call runs in one of three shapes, tried in this order:
+
+  * one task: the call's postings fit one evaluation chunk (sum of its
+    terms' df <= ``_chunk_rows``): decode and evaluation fuse into one
+    mapInArrow over the pruned segment scan coalesced to one partition,
+    which is evaluated as a single chunk — no shuffle, one Spark job;
+  * single-term: every query has exactly one distinct term. A doc holds
+    at most one posting of a term, so decode and evaluation fuse into
+    one mapInArrow per segment-scan partition, with no shuffle;
+  * doc_id shuffle: the decoded postings are repartitioned by
+    ``doc_id`` once and sorted, and chunks are cut at doc boundaries.
+
+Batches are split into chunks whose reduced frame fits
+DRIVER_MERGE_MAX_ROWS; each chunk's evaluation jobs carry the
+description ``search: <shape>``.
 
 A phrase-flagged query matches a multi-token branch only where its
 tokens occur at consecutive positions (whereQuery.go:43-57); its score
@@ -159,10 +169,11 @@ def _split(cols, cut: int):
     return head, tail
 
 
-def _doc_chunks(it, term_to_tid, chunk_rows: int, doc_sorted: bool):
+def _doc_chunks(it, term_to_tid, chunk_rows: int | None, doc_sorted: bool):
     """Arrow batches of decoded postings -> ``_posting_arrays`` chunks of
-    about ``chunk_rows`` postings. ``doc_sorted`` input is cut only at
-    doc boundaries, so each doc's postings land in one chunk."""
+    about ``chunk_rows`` postings (None: all of them in one chunk).
+    ``doc_sorted`` input is cut only at doc boundaries, so each doc's
+    postings land in one chunk."""
     bufs: list = []
     nbuf = 0
     for batch in it:
@@ -170,7 +181,7 @@ def _doc_chunks(it, term_to_tid, chunk_rows: int, doc_sorted: bool):
             continue
         bufs.append(_posting_arrays(batch, term_to_tid))
         nbuf += batch.num_rows
-        if nbuf < chunk_rows:
+        if chunk_rows is None or nbuf < chunk_rows:
             continue
         cols = tuple(np.concatenate(c) for c in zip(*bufs))
         cut = cols[1].size
@@ -264,7 +275,7 @@ class _TopK:
         )
 
 
-def _batch_eval_fn(programs, term_to_tid, maxk: int, doc_sorted: bool = True):
+def _batch_eval_fn(programs, term_to_tid, maxk: int, shape: str = "doc_id shuffle"):
     """mapInArrow evaluator: (term, doc_id, wf, lang_id[, positions])
     rows -> each query's partition-local top-maxk (score DESC, doc_id
     ASC) plus one count-marker row per query (``_REDUCED_SCHEMA``), for
@@ -274,10 +285,14 @@ def _batch_eval_fn(programs, term_to_tid, maxk: int, doc_sorted: bool = True):
     (docs x batch-vocabulary) wf panel; each query's branch candidacy
     is numpy boolean algebra over its term columns (``_matches``, with
     phrase adjacency over the positions) and its score the int64 sum of
-    floor(idf*wf*1e9) contributions. ``doc_sorted`` input keeps a doc's
-    postings in one chunk; unsorted input is only valid when every
-    query reads one term."""
+    floor(idf*wf*1e9) contributions. The plan ``shape`` (``_eval_plan``)
+    says how a doc's postings stay in one chunk: ``doc_id shuffle``
+    input is doc-sorted and cut at doc boundaries; ``one task`` input
+    holds the call's every posting and is evaluated as one chunk;
+    ``single-term`` input is cut anywhere, as each query reads one
+    term."""
     n_terms = len(term_to_tid)
+    chunk_rows = None if shape == "one task" else _chunk_rows(n_terms)
 
     def _eval_chunk(chunk, top):
         tids, docs, wfs, langs, pcnt, pos = chunk
@@ -301,7 +316,7 @@ def _batch_eval_fn(programs, term_to_tid, maxk: int, doc_sorted: bool = True):
 
     def fn(it):
         top = _TopK(maxk)
-        for chunk in _doc_chunks(it, term_to_tid, _chunk_rows(n_terms), doc_sorted):
+        for chunk in _doc_chunks(it, term_to_tid, chunk_rows, shape == "doc_id shuffle"):
             _eval_chunk(chunk, top)
         yield from top.batches()
 
@@ -329,9 +344,10 @@ def _phrase_hits_fn(term_to_tid, branches, seqs):
 
 def _eval_plan(
     engine: SearchEngine, queries: list[dict], maxk: int, block_join=None
-) -> DataFrame | None:
-    """The reduced frame (``_REDUCED_SCHEMA``) of one chunk, or None when
-    no query has a term. ``block_join``: optional WAND surviving-block
+) -> tuple[DataFrame, str] | None:
+    """(the reduced frame (``_REDUCED_SCHEMA``) of one chunk, its shape:
+    ``one task``, ``single-term`` or ``doc_id shuffle``), or None when no
+    query has a term. ``block_join``: optional WAND surviving-block
     selection (term, salt, allowed) restricting the decode."""
     programs, tid, terms = _compile(engine, queries)
     if not programs:
@@ -343,23 +359,38 @@ def _eval_plan(
         mode = "score_lang_pos"
         if block_join is None and all(s is not None for s in seqs):
             block_join = engine._phrase_block_join([[terms[t] for t in s] for s in seqs])
-    if all(len(p[2]) == 1 for p in programs):
+    # _compile's idf_map cached every term's df (a call with a term
+    # already evicted from the bounded cache never fits)
+    sum_df = sum(engine._df_cache.get(t, float("inf")) for t in terms)
+    if sum_df <= _chunk_rows(len(terms)):
+        # every posting of the call fits one evaluation chunk: read the
+        # whole scan in one task and evaluate it as one chunk, so each
+        # doc's postings are together with no shuffle (the df sum only
+        # picks the shape; one chunk is correct whatever it holds)
+        shape = "one task"
+    elif all(len(p[2]) == 1 for p in programs):
         # one distinct term per query: a doc holds at most one posting of
         # a term (salted rows cover disjoint doc ranges), so no query
         # needs a doc's postings co-located — evaluate where they are
         # decoded, in the same Python pass, with no shuffle
-        ev = _batch_eval_fn(programs, tid, maxk, doc_sorted=False)
-        dec = _decode_map(mode, avgdl=engine.avgdl)
-        return engine._segment_scan(terms, mode, block_join=block_join).mapInArrow(
-            lambda it: ev(dec(it)), _REDUCED_SCHEMA
+        shape = "single-term"
+    else:
+        shape = "doc_id shuffle"
+    ev = _batch_eval_fn(programs, tid, maxk, shape)
+    if shape == "doc_id shuffle":
+        n_shuf = int(engine.spark.conf.get("spark.sql.shuffle.partitions"))
+        plan = (
+            engine._postings(terms, block_join=block_join, mode=mode)
+            .repartition(n_shuf, "doc_id")
+            .sortWithinPartitions("doc_id")
+            .mapInArrow(ev, _REDUCED_SCHEMA)
         )
-    n_shuf = int(engine.spark.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        engine._postings(terms, block_join=block_join, mode=mode)
-        .repartition(n_shuf, "doc_id")
-        .sortWithinPartitions("doc_id")
-        .mapInArrow(_batch_eval_fn(programs, tid, maxk), _REDUCED_SCHEMA)
-    )
+        return plan, shape
+    scan = engine._segment_scan(terms, mode, block_join=block_join)
+    if shape == "one task":
+        scan = scan.coalesce(1)
+    dec = _decode_map(mode, avgdl=engine.avgdl)
+    return scan.mapInArrow(lambda it: ev(dec(it)), _REDUCED_SCHEMA), shape
 
 
 def _empty_top() -> pd.DataFrame:
@@ -381,11 +412,19 @@ def _reduce(
     engine: SearchEngine, queries: list[dict], maxk: int, block_join=None
 ) -> tuple[dict, pd.DataFrame]:
     """Evaluate one chunk and merge it on the driver (``_merge_reduced``);
-    the chunking bounds the collected frame."""
-    plan = _eval_plan(engine, queries, maxk, block_join)
-    if plan is None:
+    the chunking bounds the collected frame. Its jobs carry the
+    description ``search: <shape>``; the caller's is restored after."""
+    built = _eval_plan(engine, queries, maxk, block_join)
+    if built is None:
         return {}, _empty_top()
-    return _merge_reduced(plan)
+    plan, shape = built
+    sc = engine.spark.sparkContext
+    prev_desc = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(f"search: {shape}")
+    try:
+        return _merge_reduced(plan)
+    finally:
+        sc.setJobDescription(prev_desc)
 
 
 def _reduce_scored(cand: DataFrame, maxk: int) -> tuple[dict, pd.DataFrame]:

@@ -49,7 +49,7 @@ import json
 import math
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from micce_search_engine_spark import BM25_B, BM25_K1
@@ -249,6 +249,22 @@ def _decode_map(mode: str, lang_id: int | None = None, avgdl: float = 1.0):
     return fn
 
 
+def _sql_in(col: str, values) -> Column:
+    """``col IN (values)`` built by ONE ``F.expr`` call: ``Column.isin``
+    costs ~4 py4j round trips per literal, which a 100-query batch pays
+    for hundreds of terms. Strings become SQL literals with ``\\`` and
+    ``'`` escaped, ints are inlined; an empty list matches nothing."""
+    if not values:
+        return F.lit(False)
+
+    def lit(v) -> str:
+        if isinstance(v, str):
+            return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+        return str(int(v))
+
+    return F.expr(f"{col} IN ({', '.join(lit(v) for v in values)})")
+
+
 def contrib_fx(idf_col, wf_col):
     """Fixed-point per-term BM25 contribution: floor(idf*wf*1e9) long.
     Summed as int64 -> deterministic under ANY partitioning; mirrored
@@ -378,7 +394,7 @@ class SearchEngine:
         the cache needs no invalidation."""
         missing = [t for t in terms if t not in self._df_cache]
         if missing:
-            rows = self._term_stats.filter(F.col("term").isin(missing)).collect()
+            rows = self._term_stats.filter(_sql_in("term", missing)).collect()
             found = {r["term"]: int(r["df"]) for r in rows}
             for t in missing:
                 self._df_cache[t] = found.get(t, 0)
@@ -404,7 +420,7 @@ class SearchEngine:
             else self.spark.read.parquet(self.paths.segments)
         )
         # partition pruning on bucket=, then row-group pruning on term
-        df = base.filter(F.col("bucket").isin(buckets) & F.col("term").isin(terms))
+        df = base.filter(_sql_in("bucket", buckets) & _sql_in("term", terms))
         if cols is not None:
             df = df.select(*cols)  # prune blob columns the mode won't read
         return df

@@ -238,15 +238,19 @@ def test_single_term_chunks_fit_the_scan_partitions(spark, tiny_index, synonyms,
     """The shuffle-free single-term plan runs one task per segment-scan
     partition, not per shuffle partition: its chunks must keep
     partitions x queries x (maxk + 1) rows under DRIVER_MERGE_MAX_ROWS
-    for the real partition count, even with one shuffle partition."""
+    for the real partition count, even with one shuffle partition. The
+    tiny calls are pushed over the one-task bound."""
     import micce_search_engine_spark.operators.batch_query as bq
 
+    monkeypatch.setattr(bq, "_chunk_rows", lambda n_terms: 0)
     eng = SearchEngine(spark, tiny_index, synonyms=synonyms)
     specs = [  # distinct terms spread over the buckets: several scan partitions
         {"query_id": i, "query_text": f"w{i:06d}", "lang_filter": None, "limit": 10, "page": 1}
         for i in range(24)
     ]
-    n_parts = bq._eval_plan(eng, specs, 10).rdd.getNumPartitions()
+    plan, shape = bq._eval_plan(eng, specs, 10)
+    assert shape == "single-term"
+    n_parts = plan.rdd.getNumPartitions()
     assert n_parts > 1 and eng._scan_partitions >= n_parts
     expected = search_batch(eng, specs).collect()
     chunks = []
@@ -365,21 +369,24 @@ def _final_plan(df) -> list[str]:
 
 
 @pytest.mark.parametrize(
-    "texts, n_exchanges",
+    "texts, n_exchanges",  # n_exchanges: over the one-task bound
     [
-        (["the"], 0),  # one distinct term: decode + evaluate in one pass
+        (["the"], 0),  # one distinct term
         (["the", "of"], 0),  # a batch of single-term queries
         (["the of"], 1),  # multi-term
         (["alias0"], 1),  # synonym: two branches, two terms
         (['"the of"', "the"], 1),  # a phrase (quoted) and a term
     ],
 )
-def test_eval_plan_shape(request, spark, synonyms, texts, n_exchanges):
-    """Single-term calls run shuffle-free; every other call repartitions
-    the decoded postings by doc_id exactly once. Every call decodes its
-    terms in ONE segment scan — a phrase call too, whose decode also
-    reads the position stream."""
-    from micce_search_engine_spark.operators.batch_query import _eval_plan
+def test_eval_plan_shape(request, spark, synonyms, monkeypatch, texts, n_exchanges):
+    """A call whose postings fit one evaluation chunk (every call on the
+    tiny index) reads its scan coalesced to ONE task, with no Exchange.
+    Pushed over that bound, single-term calls run shuffle-free per scan
+    partition and every other call repartitions the decoded postings by
+    doc_id exactly once. Every shape decodes its terms in ONE segment
+    scan — a phrase call too, whose decode also reads the position
+    stream."""
+    import micce_search_engine_spark.operators.batch_query as bq
 
     phrase = any(t.startswith('"') for t in texts)
     idx = request.getfixturevalue("pos_index" if phrase else "tiny_index")
@@ -390,10 +397,187 @@ def test_eval_plan_shape(request, spark, synonyms, texts, n_exchanges):
          "page": 1, "phrase": t.startswith('"')}
         for i, t in enumerate(texts)
     ]
-    plan = _final_plan(_eval_plan(eng, specs, 10))
-    ex = [ln for ln in plan if "Exchange" in ln]
+
+    def shape_and_plan():
+        df, shape = bq._eval_plan(eng, specs, 10)
+        plan = _final_plan(df)
+        scans = [ln for ln in plan if "FileScan parquet" in ln]
+        assert len(scans) == 1, plan
+        assert ("pos_blob" in scans[0]) == phrase, scans
+        return shape, plan, [ln for ln in plan if "Exchange" in ln]
+
+    shape, plan, ex = shape_and_plan()
+    assert shape == "one task"
+    assert not ex, ex
+    assert [ln.lstrip("+- ") for ln in plan if "Coalesce" in ln] == ["Coalesce 1"], plan
+
+    monkeypatch.setattr(bq, "_chunk_rows", lambda n_terms: 0)
+    shape, plan, ex = shape_and_plan()
+    assert shape == ("doc_id shuffle" if n_exchanges else "single-term")
+    assert not [ln for ln in plan if "Coalesce" in ln], plan
     assert len(ex) == n_exchanges, ex
     assert all("hashpartitioning(doc_id" in ln for ln in ex), ex
-    scans = [ln for ln in plan if "FileScan parquet" in ln]
-    assert len(scans) == 1, plan
-    assert ("pos_blob" in scans[0]) == phrase, scans
+
+
+@pytest.fixture(scope="module")
+def salted_pos_index(spark, tiny_pages_pdf, tmp_path_factory):
+    """The tiny corpus indexed with positions and a small
+    max_postings_per_row, so hot terms split into several salted rows."""
+    from micce_search_engine_spark.corpus import pages_spark_schema
+    from micce_search_engine_spark.operators.index_build import build_index
+
+    idx = str(tmp_path_factory.mktemp("batchsalted") / "idx")
+    pages = spark.createDataFrame(tiny_pages_pdf, schema=pages_spark_schema())
+    build_index(
+        spark, pages, idx, n_buckets=4, max_postings_per_row=60, with_positions=True
+    )
+    return idx
+
+
+def test_small_multi_term_search_runs_one_job(spark, tiny_index, synonyms):
+    """A multi-term search on a pinned index whose postings fit one
+    evaluation chunk runs ONE Spark job: no doc_id shuffle stage in
+    front of the evaluator. A first call fills the engine's term-df
+    cache and the pinned segments, as a serving engine's are filled."""
+    eng = SearchEngine(spark, tiny_index, synonyms=synonyms, preload=True)
+    sc = spark.sparkContext
+    try:
+        first = eng.search("the of", limit=5, page=1)
+        sc.setJobGroup("one-task-search", "one multi-term search")
+        again = eng.search("the of", limit=5, page=1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        eng._segments_cached.unpersist()
+    assert again == first and first["total_hits"] > 0
+    assert len(sc.statusTracker().getJobIdsForGroup("one-task-search")) == 1
+
+
+def test_one_task_matches_doc_id_shuffle(spark, salted_pos_index, monkeypatch):
+    """Every call on the tiny index fits one evaluation chunk. The same
+    calls pushed over that bound (the doc_id shuffle; the single-term
+    plan for a single-term call) return the same pages and totals:
+    multi-term, synonym OR branches, lang filter, phrases with and
+    without the block bound, a salted hot term and topk_only (with WAND
+    engaged)."""
+    import micce_search_engine_spark.operators.batch_query as bq
+
+    eng = SearchEngine(spark, salted_pos_index, synonyms={"of the": "w000002 the"})
+    segs = spark.read.parquet(eng.paths.segments)
+    assert segs.filter("term = 'the'").count() > 3  # "the" is salted
+    wand_factor = eng.wand_engage_factor
+    specs = [
+        {"query_id": 0, "query_text": "the of", "lang_filter": None, "limit": 5, "page": 1},
+        {"query_id": 1, "query_text": "of the", "lang_filter": None, "limit": 4, "page": 2},
+        {"query_id": 2, "query_text": "the w000001", "lang_filter": "de", "limit": 5, "page": 1},
+        _phrase_spec(3, "the of", limit=3, page=2),
+        {"query_id": 4, "query_text": "the", "lang_filter": None, "limit": 3, "page": 3},
+    ]
+    shapes = []
+    eval_plan = bq._eval_plan
+
+    def spy(*args, **kwargs):
+        out = eval_plan(*args, **kwargs)
+        shapes.append(out[1])
+        return out
+
+    monkeypatch.setattr(bq, "_eval_plan", spy)
+
+    def run():
+        out = [sorted(search_batch(eng, specs).collect())]
+        for factor in (0, 10**9):  # phrase: bounded, then unbounded decode
+            eng.phrase_block_factor = factor
+            out.append(eng.search_phrase("the of", limit=5, page=2))
+        eng.phrase_block_factor = SearchEngine.phrase_block_factor
+        out.append(eng.search("of the", lang_filter="en", limit=5, page=1))
+        eng.wand_engage_factor = 0
+        out.append(eng.search("the of", limit=5, page=2, topk_only=True))
+        out.append(eng.search("the", limit=5, page=1, topk_only=True))
+        eng.wand_engage_factor = wand_factor
+        return out
+
+    one = run()
+    assert set(shapes) == {"one task"}, shapes
+    assert one[0] and all(r["results"] for r in one[1:]), one
+    shapes.clear()
+    monkeypatch.setattr(bq, "_chunk_rows", lambda n_terms: 0)
+    over = run()
+    assert "one task" not in shapes and {"doc_id shuffle", "single-term"} <= set(shapes)
+    assert over == one
+
+
+def test_reduce_labels_its_jobs_with_the_shape(spark, tiny_index, synonyms, monkeypatch):
+    """_reduce describes its jobs as ``search: <shape>`` and restores
+    the caller's description, also when the evaluation fails."""
+    import micce_search_engine_spark.operators.batch_query as bq
+
+    eng = SearchEngine(spark, tiny_index, synonyms=synonyms)
+    sc = spark.sparkContext
+    seen = []
+    merge = bq._merge_reduced
+
+    def spy(plan):
+        seen.append(sc.getLocalProperty("spark.job.description"))
+        return merge(plan)
+
+    def boom(plan):
+        raise RuntimeError("evaluation failed")
+
+    monkeypatch.setattr(bq, "_merge_reduced", spy)
+    sc.setJobDescription("caller")
+    try:
+        eng.search("the of", limit=5, page=1)
+        monkeypatch.setattr(bq, "_chunk_rows", lambda n_terms: 0)
+        eng.search("the", limit=5, page=1)
+        eng.search("the of", limit=5, page=1)
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+        monkeypatch.setattr(bq, "_merge_reduced", boom)
+        with pytest.raises(RuntimeError):
+            eng.search("the of", limit=5, page=1)
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setJobDescription(None)
+    assert seen == ["search: one task", "search: single-term", "search: doc_id shuffle"]
+
+
+def test_sql_in_matches_isin(spark):
+    """_sql_in quotes ' and \\ so every value matches exactly what
+    Column.isin matches; an empty list matches nothing."""
+    from pyspark.sql import functions as F
+
+    from micce_search_engine_spark.operators.query import _sql_in
+
+    want = ["a'b", "c\\d", "\\'", "'", "\\", "東京", "x\\n", "''", "plain"]
+    rows = want + ["ab", "cd", "x\n", "n", "東", "京都", "a\\'b", ""]
+    df = spark.createDataFrame([(v, i) for i, v in enumerate(rows)], "term string, i int")
+
+    def got(cond):
+        return sorted(r["term"] for r in df.filter(cond).collect())
+
+    assert got(_sql_in("term", want)) == got(F.col("term").isin(want)) == sorted(want)
+    assert got(_sql_in("i", [0, 3, 99])) == sorted([rows[0], rows[3]])
+    assert got(_sql_in("term", [])) == [] == got(_sql_in("i", []))
+
+
+def test_segments_for_keeps_pushed_filters(spark, tiny_index):
+    """The scan filters built by _sql_in still prune: on parquet the
+    bucket IN is a partition filter and the term IN a pushed filter;
+    on the pinned cache both are InMemoryTableScan predicates."""
+    import re
+
+    terms = ["of", "the", "w000003"]  # buckets 2, 6, 4 of 8
+    for preload in (False, True):
+        eng = SearchEngine(spark, tiny_index, preload=preload)
+        try:
+            plan = _final_plan(eng._segments_for(terms, ["term", "salt"]))
+        finally:
+            if preload:
+                eng._segments_cached.unpersist()
+        text = "\n".join(plan)
+        if preload:
+            scan = next(ln for ln in plan if "InMemoryTableScan" in ln)
+            assert re.search(r"bucket#\d+ IN \(2,4,6\)", scan), scan
+            assert re.search(r"term#\d+ IN \(of,the,w000003\)", scan), scan
+        else:
+            assert re.search(r"PartitionFilters: \[[^\]]*bucket#\d+ IN \(2,4,6\)", text), text
+            assert re.search(r"PushedFilters: \[[^\]]*In\(term, \[of,the,w000003\]\)", text), text

@@ -198,7 +198,8 @@ def test_phrase_positional_decode_is_bounded(spark, tiny_pages_pdf, tmp_path_fac
     terms' streams must never be fully decoded — the only full decode
     is the RAREST term's cheap (score) stream, and the evaluator's one
     positional decode carries a block_join restricting it to blocks
-    holding a rarest-term doc. Structural spy on _postings; the
+    holding a rarest-term doc. Structural spy on _segment_scan, which
+    every decode reads (the fused shapes bypass _postings); the
     disengaged plan must return identical results. Each phrase of a
     batch (incl. a 1-token phrase, which needs the full decode) matches
     exactly what it matches alone."""
@@ -214,11 +215,11 @@ def test_phrase_positional_decode_is_bounded(spark, tiny_pages_pdf, tmp_path_fac
     eng = SearchEngine(spark, idx)
 
     calls = []
-    orig = eng._postings
+    orig = eng._segment_scan
 
-    def spy(terms, block_join=None, mode="score", lang_id=None):
+    def spy(terms, mode, lang_id=None, block_join=None):
         calls.append((tuple(terms), mode, block_join is not None))
-        return orig(terms, block_join=block_join, mode=mode, lang_id=lang_id)
+        return orig(terms, mode, lang_id, block_join)
 
     def positional(bounded):
         pos_calls = [c for c in calls if c[1] == "score_lang_pos"]
@@ -229,7 +230,7 @@ def test_phrase_positional_decode_is_bounded(spark, tiny_pages_pdf, tmp_path_fac
         assert all(m in ("score", "score_lang_pos") for _, m, _ in calls), calls
         calls.clear()
 
-    eng._postings = spy
+    eng._segment_scan = spy
     eng.phrase_block_factor = 0  # force block-selection engagement
     res = eng.search_phrase("the of", limit=10, page=1)
     assert res["total_hits"] > 0

@@ -5,7 +5,8 @@ Evidence that the plans are the ones you'd want at 100 TB:
     ReadSchema (no blob columns in metadata-only scans);
   * small sides broadcast (BroadcastHashJoin / BroadcastExchange);
   * every keyword query runs through one vectorized BM25 evaluator
-    (MapInArrow) with at most one doc_id Exchange in front of it;
+    (MapInArrow): in one task when the call's postings fit one
+    evaluation chunk, else with at most one doc_id Exchange in front;
   * the LSH ANN indexed path shows bucket partition pruning.
 
 Usage: python tools/explain_plans.py [n_docs]
@@ -34,6 +35,7 @@ def main() -> None:
     import shutil
 
     from micce_search_engine_spark.corpus import gen_pages, gen_synonyms, pages_spark_schema
+    from micce_search_engine_spark.operators import batch_query as bq
     from micce_search_engine_spark.operators.batch_query import (
         _batch_wand_selection,
         _eval_plan,
@@ -60,61 +62,101 @@ def main() -> None:
         return {"query_id": qid, "query_text": text, "lang_filter": lang,
                 "limit": limit, "page": page}
 
+    def plan(queries, block_join=None):
+        return explain(_eval_plan(eng, queries, 10, block_join=block_join)[0])
+
     # the one BM25 evaluator, in its three plan shapes
     sections.append(
         (
-            "BM25 evaluator, single-term query (shuffle-free)",
-            "Look for: NO Exchange anywhere — a doc holds exactly one posting "
-            "of a term, so decode and evaluation run as ONE MapInArrow over the "
-            "bucket-pruned segment scan (PartitionFilters [bucket IN ...], "
-            "PushedFilters on term, ReadSchema WITHOUT unused blob columns).",
-            explain(_eval_plan(eng, [spec(0, "the")], 10)),
-        )
-    )
-    sections.append(
-        (
-            "BM25 evaluator, multi-term query (one doc_id shuffle)",
-            "Look for: the decode MapInArrow, then exactly ONE Exchange "
-            "hashpartitioning(doc_id) + Sort, then the evaluator MapInArrow "
-            "emitting per-partition top-k + count markers — no aggregate, no "
-            "window.",
-            explain(_eval_plan(eng, [spec(0, "the w000001", lang="en")], 10)),
+            "BM25 evaluator, a call that fits one evaluation chunk (one task)",
+            "Look for: NO Exchange anywhere — the call's postings (sum of its "
+            "terms' df) fit one evaluation chunk, so the bucket-pruned segment "
+            "scan (PartitionFilters [bucket IN ...], PushedFilters In(term, "
+            "...), ReadSchema WITHOUT unused blob columns) is read through "
+            "Coalesce 1 into ONE MapInArrow that decodes and evaluates the "
+            "whole task as one chunk: one task, one Spark job.",
+            plan([spec(0, "the w000001", lang="en")]),
         )
     )
 
-    # phrase plan: the same evaluator, with positions and the rarest-term
-    # block bound
-    eng.phrase_block_factor = 0  # force block-selection engagement
-    pspec = dict(spec(0, "the of"), phrase=True)
-    sections.append(
-        (
-            "BM25 evaluator, phrase query (positions, rarest-term bound)",
-            "Look for: ONE positional scan (ReadSchema WITH pos_blob/"
-            "block_pos_off) behind a BroadcastHashJoin against the "
-            "rarest-term-derived block selection (term, salt, allowed) — the "
-            "frequent terms' streams are never fully decoded in ANY mode "
-            "(the only unrestricted decode is the rarest term's cheap "
-            "score scan feeding the selection); then the same ONE Exchange "
-            "hashpartitioning(doc_id) + Sort and evaluator MapInArrow as any "
-            "multi-term query, which checks adjacency per doc — no position "
-            "explode, no per-doc map aggregate, no window.",
-            explain(_eval_plan(eng, [pspec], 10)),
+    # every small call on this index fits one chunk: push the calls below
+    # over the one-task bound to show the shapes larger calls take
+    chunk_rows = bq._chunk_rows
+    bq._chunk_rows = lambda n_terms: 0
+    try:
+        sections.append(
+            (
+                "BM25 evaluator, single-term query over the one-task bound "
+                "(shuffle-free)",
+                "Look for: NO Exchange and NO Coalesce — a doc holds exactly "
+                "one posting of a term, so decode and evaluation run as ONE "
+                "MapInArrow per partition of the bucket-pruned segment scan.",
+                plan([spec(0, "the")]),
+            )
         )
-    )
-    eng.phrase_block_factor = SearchEngine.phrase_block_factor
+        sections.append(
+            (
+                "BM25 evaluator, multi-term query over the one-task bound "
+                "(one doc_id shuffle)",
+                "Look for: the decode MapInArrow, then exactly ONE Exchange "
+                "hashpartitioning(doc_id) + Sort, then the evaluator "
+                "MapInArrow emitting per-partition top-k + count markers — no "
+                "aggregate, no window.",
+                plan([spec(0, "the w000001", lang="en")]),
+            )
+        )
 
-    # batched plan
-    specs = [spec(0, "the w000002", lang="en"), spec(1, "alias0", limit=5, page=2)]
-    sections.append(
-        (
-            "BM25 evaluator, batch (N queries, one plan)",
-            "Look for: the same shape as the multi-term query — ONE Exchange "
-            "hashpartitioning(doc_id) of the decoded postings, no per-query "
-            "fan-out join — then a single MapInArrow evaluating every query's "
-            "candidacy + fixed-point score vectorized per doc chunk.",
-            explain(_eval_plan(eng, specs, 10)),
+        # phrase plan: the same evaluator, with positions and the
+        # rarest-term block bound
+        eng.phrase_block_factor = 0  # force block-selection engagement
+        sections.append(
+            (
+                "BM25 evaluator, phrase query over the one-task bound "
+                "(positions, rarest-term bound)",
+                "Look for: ONE positional scan (ReadSchema WITH pos_blob/"
+                "block_pos_off) behind a BroadcastHashJoin against the "
+                "rarest-term-derived block selection (term, salt, allowed) — "
+                "the frequent terms' streams are never fully decoded in ANY "
+                "mode (the only unrestricted decode is the rarest term's "
+                "cheap score scan feeding the selection); then the same ONE "
+                "Exchange hashpartitioning(doc_id) + Sort and evaluator "
+                "MapInArrow as any multi-term query, which checks adjacency "
+                "per doc — no position explode, no per-doc map aggregate, no "
+                "window.",
+                plan([dict(spec(0, "the of"), phrase=True)]),
+            )
         )
-    )
+        eng.phrase_block_factor = SearchEngine.phrase_block_factor
+
+        sections.append(
+            (
+                "BM25 evaluator, batch over the one-task bound (N queries, "
+                "one plan)",
+                "Look for: the same shape as the multi-term query — ONE "
+                "Exchange hashpartitioning(doc_id) of the decoded postings, "
+                "no per-query fan-out join — then a single MapInArrow "
+                "evaluating every query's candidacy + fixed-point score "
+                "vectorized per doc chunk.",
+                plan([spec(0, "the w000002", lang="en"), spec(1, "alias0", limit=5, page=2)]),
+            )
+        )
+
+        # WAND: surviving-block selection joined into the segment scan
+        wspec = [spec(0, "the")]
+        sel = _batch_wand_selection(eng, wspec, 10)
+        if sel is not None:
+            sections.append(
+                (
+                    "WAND surviving-block decode (relational selection)",
+                    "Look for: the (term, salt, allowed) selection joined into "
+                    "the bucket-pruned segment scan (no driver-side block "
+                    "lists; the join side is an aggregate Spark can broadcast "
+                    "at runtime); decode restricted by the allowed column.",
+                    plan(wspec, block_join=sel),
+                )
+            )
+    finally:
+        bq._chunk_rows = chunk_rows
 
     # dedup: minhash banding
     from micce_search_engine_spark.operators.dedup import minhash_lsh_pairs
@@ -152,21 +194,6 @@ def main() -> None:
             explain(lsh_topk_indexed(spark, ann_dir, q)),
         )
     )
-
-    # WAND: surviving-block selection joined into the segment scan
-    wspec = [spec(0, "the")]
-    sel = _batch_wand_selection(eng, wspec, 10)
-    if sel is not None:
-        sections.append(
-            (
-                "WAND surviving-block decode (relational selection)",
-                "Look for: the (term, salt, allowed) selection joined into the "
-                "bucket-pruned segment scan (no driver-side block lists; the "
-                "join side is an aggregate Spark can broadcast at runtime); "
-                "decode restricted by the allowed column.",
-                explain(_eval_plan(eng, wspec, 10, block_join=sel)),
-            )
-        )
 
     # IVF: trained centroids, persisted list-partitioned index
     from micce_search_engine_spark.operators.ann import (
