@@ -241,8 +241,9 @@ qbranch(query_id, branch_id, branch_size, term) AS (VALUES {qbranch_vals}),
 qterms AS (SELECT DISTINCT query_id, term FROM qbranch),
 contrib AS (
   -- fixed-point int64 contribution: floor(idf * wf * 1e9), the exact
-  -- expression order the engine uses (bm25_wf numpy + contrib_fx) so
-  -- IEEE doubles match bit-for-bit and integer sums are order-free
+  -- expression order the engine uses (bm25_wf, then the evaluator's
+  -- numpy floor) so IEEE doubles match bit-for-bit and integer sums
+  -- are order-free
   SELECT q.query_id, f.doc_id,
          floor(
            ln((s.n - coalesce(d.df, 0) + 0.5) / (coalesce(d.df, 0) + 0.5) + 1.0)

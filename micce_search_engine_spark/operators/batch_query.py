@@ -15,10 +15,11 @@ one — compiles into the same plan (SURVEY.md §2D):
      selection of blocks when one applies; positions are decoded only
      when the call holds a multi-token phrase branch
   -> ONE vectorized mapInArrow evaluator (_batch_eval_fn): per chunk of
-     docs, a dense docs x vocabulary wf panel; branch AND/OR candidacy,
-     phrase adjacency (_phrase_docs), exact lang filter and the
-     fixed-point score are numpy over it; it emits each query's
-     partition-local top-maxk plus a count marker (_TopK)
+     docs, the kernel _chunk_hits builds a dense docs x vocabulary wf
+     panel; branch AND/OR candidacy, phrase adjacency (_phrase_docs),
+     exact lang filter and the fixed-point score are numpy over it; it
+     emits each query's partition-local top-maxk plus a count marker
+     (_TopK)
   -> one Arrow collect, merged and paged on the driver (_paged_pdf)
      with the reference's limit*page / offset=limit*(page-1) quirk
      (search-api/internal/repository/query/queryBuilder.go:40-41,
@@ -48,6 +49,10 @@ all single tokens is plain bag-of-words. When every branch of the call
 is such a phrase, the decode is bounded to the blocks holding a doc of
 each phrase's rarest term (SearchEngine._phrase_block_join).
 
+``multifield.multifield_scored`` runs the same kernel over a
+field-qualified vocabulary and emits every match unreduced
+(``_hits_fn``), for ``ConditionEngine`` to filter, join and reduce.
+
 ``search_batch_topk`` is the WAND-pruned variant: one probe pass over
 every term's best block yields per-query k-th-best lower bounds,
 per-term decode thresholds take the weakest constraint across queries,
@@ -57,6 +62,8 @@ weakAnd's estimated totalCount).
 """
 
 from __future__ import annotations
+
+from contextlib import contextmanager
 
 import numpy as np
 import pandas as pd
@@ -275,69 +282,71 @@ class _TopK:
         )
 
 
+def _chunk_hits(programs, n_terms: int, chunk):
+    """The evaluator kernel over one chunk of whole docs: yields
+    (query_id, docs, scores) of every program with a match.
+
+    Postings are scattered into a dense (docs x vocabulary) wf panel;
+    each program's branch candidacy is numpy boolean algebra over its
+    term columns (``_matches``, with phrase adjacency over the
+    positions), its lang filter an equality on the docs' ``lang_id``,
+    and its score the int64 sum of floor(idf*wf*1e9) contributions."""
+    tids, docs, wfs, langs, pcnt, pos = chunk
+    uniq, inv = np.unique(docs, return_inverse=True)
+    W = np.zeros((uniq.size, n_terms), dtype=np.float64)
+    W[inv, tids] = wfs
+    present = W > 0
+    lang_doc = np.empty(uniq.size, dtype=np.int64)
+    lang_doc[inv] = langs
+    for qid, lid, sterms, branches, seqs in programs:
+        matched = _matches(present, branches, seqs, inv, tids, pcnt, pos)
+        if lid != -1:
+            matched &= lang_doc == lid
+        idx = np.flatnonzero(matched)
+        if not idx.size:
+            continue
+        fx = np.zeros(idx.size, dtype=np.int64)
+        for t, idf in sterms:
+            fx += np.floor(idf * W[idx, t] * SCORE_SCALE).astype(np.int64)
+        yield qid, uniq[idx], fx.astype(np.float64) / SCORE_SCALE
+
+
 def _batch_eval_fn(programs, term_to_tid, maxk: int, shape: str = "doc_id shuffle"):
     """mapInArrow evaluator: (term, doc_id, wf, lang_id[, positions])
     rows -> each query's partition-local top-maxk (score DESC, doc_id
     ASC) plus one count-marker row per query (``_REDUCED_SCHEMA``), for
-    EVERY query of the batch in one vectorized pass.
-
-    Per chunk of whole docs, postings are scattered into a dense
-    (docs x batch-vocabulary) wf panel; each query's branch candidacy
-    is numpy boolean algebra over its term columns (``_matches``, with
-    phrase adjacency over the positions) and its score the int64 sum of
-    floor(idf*wf*1e9) contributions. The plan ``shape`` (``_eval_plan``)
-    says how a doc's postings stay in one chunk: ``doc_id shuffle``
-    input is doc-sorted and cut at doc boundaries; ``one task`` input
-    holds the call's every posting and is evaluated as one chunk;
-    ``single-term`` input is cut anywhere, as each query reads one
-    term."""
+    EVERY query of the batch in one vectorized pass of ``_chunk_hits``
+    per chunk. The plan ``shape`` (``_eval_plan``) says how a doc's
+    postings stay in one chunk: ``doc_id shuffle`` input is doc-sorted
+    and cut at doc boundaries; ``one task`` input holds the call's every
+    posting and is evaluated as one chunk; ``single-term`` input is cut
+    anywhere, as each query reads one term."""
     n_terms = len(term_to_tid)
     chunk_rows = None if shape == "one task" else _chunk_rows(n_terms)
-
-    def _eval_chunk(chunk, top):
-        tids, docs, wfs, langs, pcnt, pos = chunk
-        uniq, inv = np.unique(docs, return_inverse=True)
-        W = np.zeros((uniq.size, n_terms), dtype=np.float64)
-        W[inv, tids] = wfs
-        present = W > 0
-        lang_doc = np.empty(uniq.size, dtype=np.int64)
-        lang_doc[inv] = langs
-        for qid, lid, sterms, branches, seqs in programs:
-            matched = _matches(present, branches, seqs, inv, tids, pcnt, pos)
-            if lid != -1:
-                matched &= lang_doc == lid
-            idx = np.flatnonzero(matched)
-            if not idx.size:
-                continue
-            fx = np.zeros(idx.size, dtype=np.int64)
-            for t, idf in sterms:
-                fx += np.floor(idf * W[idx, t] * SCORE_SCALE).astype(np.int64)
-            top.add(qid, uniq[idx], fx.astype(np.float64) / SCORE_SCALE)
 
     def fn(it):
         top = _TopK(maxk)
         for chunk in _doc_chunks(it, term_to_tid, chunk_rows, shape == "doc_id shuffle"):
-            _eval_chunk(chunk, top)
+            for qid, docs, scores in _chunk_hits(programs, n_terms, chunk):
+                top.add(qid, docs, scores)
         yield from top.batches()
 
     return fn
 
 
-def _phrase_hits_fn(term_to_tid, branches, seqs):
-    """mapInArrow over doc-sorted decoded postings with positions ->
-    (doc_id) of every doc where some branch matches, by the evaluator's
-    own candidacy and adjacency test (``_matches``)."""
+def _hits_fn(program, term_to_tid):
+    """mapInArrow over doc-sorted decoded postings -> (doc_id, score) of
+    EVERY doc that ``program`` matches (``_chunk_hits``), unreduced."""
     n_terms = len(term_to_tid)
 
     def fn(it):
         import pyarrow as pa
 
         for chunk in _doc_chunks(it, term_to_tid, _chunk_rows(n_terms), True):
-            uniq, inv = np.unique(chunk[1], return_inverse=True)
-            present = np.zeros((uniq.size, n_terms), dtype=bool)
-            present[inv, chunk[0]] = True
-            m = _matches(present, branches, seqs, inv, chunk[0], chunk[4], chunk[5])
-            yield pa.RecordBatch.from_arrays([pa.array(uniq[m])], names=["doc_id"])
+            for _, docs, scores in _chunk_hits([program], n_terms, chunk):
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(docs), pa.array(scores)], names=["doc_id", "score"]
+                )
 
     return fn
 
@@ -408,23 +417,32 @@ def _merge_reduced(plan: DataFrame) -> tuple[dict, pd.DataFrame]:
     return totals, pdf.loc[~mk]
 
 
+@contextmanager
+def _described(spark, desc: str):
+    """Label the Spark jobs run inside the block with the job
+    description ``desc``; the caller's is restored after, also when a
+    job fails."""
+    sc = spark.sparkContext
+    prev_desc = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(desc)
+    try:
+        yield
+    finally:
+        sc.setJobDescription(prev_desc)
+
+
 def _reduce(
     engine: SearchEngine, queries: list[dict], maxk: int, block_join=None
 ) -> tuple[dict, pd.DataFrame]:
     """Evaluate one chunk and merge it on the driver (``_merge_reduced``);
     the chunking bounds the collected frame. Its jobs carry the
-    description ``search: <shape>``; the caller's is restored after."""
+    description ``search: <shape>``."""
     built = _eval_plan(engine, queries, maxk, block_join)
     if built is None:
         return {}, _empty_top()
     plan, shape = built
-    sc = engine.spark.sparkContext
-    prev_desc = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(f"search: {shape}")
-    try:
+    with _described(engine.spark, f"search: {shape}"):
         return _merge_reduced(plan)
-    finally:
-        sc.setJobDescription(prev_desc)
 
 
 def _reduce_scored(cand: DataFrame, maxk: int) -> tuple[dict, pd.DataFrame]:

@@ -18,12 +18,14 @@ Engine realization:
   * one posting space (index dir) PER FIELD — the per-field analog of
     Vespa's per-field inverted indexes; doc_ids are shared across
     fields (assigned once);
-  * keyword candidates: per field, one decode + one int64 aggregate
-    (fixed-point score + per-branch matched-term counts), then a union
-    + second aggregate sums scores across fields and ORs the match
-    flags — a doc is a hit iff SOME field fully matched SOME branch;
-    phrase candidacy per field comes from the BM25 evaluator's own
-    adjacency kernel (operators/batch_query.py ``_phrase_hits_fn``);
+  * keyword candidates: the keyword compiles into ONE program of the
+    BM25 evaluator (operators/batch_query.py ``_chunk_hits``) over a
+    field-qualified vocabulary — a branch per field x OR branch, a
+    score term per field x term with that field's idf. Each field is
+    decoded once (its lang filter on its own lang ids), the fields are
+    unioned and repartitioned by doc_id once, and one mapInArrow emits
+    every doc where SOME field fully matched SOME branch (adjacency for
+    phrase branches), scored by the cross-field fixed-point BM25 sum;
   * attributes (geo position, category, bools) live in an attribute
     store table joined by doc_id (Vespa ``attribute``/``fast-search``,
     spot.sd:19-31) — at cluster scale both sides are bucketed by
@@ -33,6 +35,8 @@ Engine realization:
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
@@ -44,13 +48,7 @@ from micce_search_engine_spark.functions.geo import (
     geo_radius_filter,
 )
 from micce_search_engine_spark.operators.index_build import build_index
-from micce_search_engine_spark.operators.query import (
-    SCORE_SCALE,
-    SearchEngine,
-    branch_count_aggs,
-    branch_match_pred,
-    contrib_fx,
-)
+from micce_search_engine_spark.operators.query import SearchEngine
 from micce_search_engine_spark.oracle import expand_branches
 
 
@@ -103,74 +101,45 @@ def multifield_scored(
     ranks phrase hits with the same bm25 features), so phrase only
     SHRINKS the candidate set. Single-token branches need no position
     stream; multi-token branches require with_positions indexes
-    (RuntimeError otherwise)."""
-    from micce_search_engine_spark.operators.batch_query import _phrase_hits_fn
+    (RuntimeError otherwise).
+
+    Runs as ONE program of the BM25 evaluator over the field-qualified
+    vocabulary ``"<field index>:<term>"`` (see "Engine realization")."""
+    from micce_search_engine_spark.operators.batch_query import _hits_fn
 
     branches = expand_branches(query_text, synonyms)
     if not branches:
         return None
-    if phrase and all(len(b) == 1 for b in branches):
-        # a 1-token phrase is exactly term presence, which the plain
-        # branch aggregate already computes — skip the positional
-        # decode when no branch is multi-token (ADVICE r5)
-        phrase = False
-    all_terms = sorted({t for b in branches for t in b})
-    if phrase:
-        tid = {t: i for i, t in enumerate(all_terms)}
-        hits_fn = _phrase_hits_fn(
-            tid,
-            [np.asarray(sorted({tid[t] for t in b}), dtype=np.int64) for b in branches],
-            [np.asarray([tid[t] for t in b], dtype=np.int64) if len(b) > 1 else None
-             for b in branches],
-        )
-    parts = []
-    for fname, eng in sorted(engines.items()):
-        idf = eng.idf_map(all_terms)
-        lid = eng.lang_id_of(lang_filter)
-        postings = eng._postings(all_terms, mode="score", lang_id=lid)
-        per_term = postings.withColumn(
-            "w_fx", contrib_fx(eng._idf_expr(idf)[F.col("term")], F.col("wf"))
-        )
+    # a 1-token phrase is exactly term presence: only a multi-token
+    # branch needs the position stream
+    phrase = phrase and any(len(b) > 1 for b in branches)
+    mode = "score_lang_pos" if phrase else "score_lang"
+    terms = sorted({t for b in branches for t in b})
+    fields = [eng for _, eng in sorted(engines.items())]
+    keys = [f"{fi}:{t}" for fi in range(len(fields)) for t in terms]
+    tid = {k: i for i, k in enumerate(keys)}
+    sterms, fbranches, seqs, parts = [], [], [], []
+    for fi, eng in enumerate(fields):
         if phrase:
-            # phrase candidacy per field: one positional decode of the
-            # field's postings by doc, every branch tested by the
-            # evaluator's kernel; each hit doc is emitted once
             eng._require_positions()
-            n_shuf = int(eng.spark.conf.get("spark.sql.shuffle.partitions"))
-            flag = (
-                eng._postings(all_terms, mode="score_lang_pos", lang_id=lid)
-                .repartition(n_shuf, "doc_id")
-                .sortWithinPartitions("doc_id")
-                .mapInArrow(hits_fn, "doc_id long")
-                .withColumn("matched", F.lit(True))
-            )
-            agg = per_term.groupBy("doc_id").agg(F.sum("w_fx").alias("score_fx"))
-            parts.append(
-                agg.join(flag, "doc_id", "left").select(
-                    "doc_id",
-                    "score_fx",
-                    F.coalesce("matched", F.lit(False)).alias("matched"),
-                )
-            )
-        else:
-            agg = per_term.groupBy("doc_id").agg(
-                F.sum("w_fx").alias("score_fx"), *branch_count_aggs(branches)
-            )
-            parts.append(
-                agg.select(
-                    "doc_id",
-                    "score_fx",
-                    branch_match_pred(branches).alias("matched"),
-                )
-            )
-    un = parts[0]
-    for p in parts[1:]:
-        un = un.unionByName(p)
+        idf = eng.idf_map(terms)
+        sterms += [(tid[f"{fi}:{t}"], float(idf[t])) for t in terms]
+        for b in branches:
+            ids = [tid[f"{fi}:{t}"] for t in b]
+            fbranches.append(np.asarray(sorted(set(ids)), dtype=np.int64))
+            seqs.append(np.asarray(ids, dtype=np.int64) if phrase and len(b) > 1 else None)
+        post = eng._postings(terms, mode=mode).withColumn(
+            "term", F.concat(F.lit(f"{fi}:"), F.col("term"))
+        )
+        if lang_filter is not None:  # each field index has its own lang ids
+            post = post.filter(F.col("lang_id") == F.lit(eng.lang_id_of(lang_filter)))
+        parts.append(post)
+    n_shuf = int(fields[0].spark.conf.get("spark.sql.shuffle.partitions"))
     return (
-        un.groupBy("doc_id")
-        .agg(F.sum("score_fx").alias("score_fx"), F.max("matched").alias("matched"))
-        .filter(F.col("matched"))
-        .select("doc_id", (F.col("score_fx") / F.lit(SCORE_SCALE)).alias("score"))
+        reduce(DataFrame.union, parts)
+        .repartition(n_shuf, "doc_id")
+        .sortWithinPartitions("doc_id")
+        .mapInArrow(_hits_fn((0, -1, sterms, fbranches, seqs), tid), "doc_id long, score double")
     )
 
 
@@ -280,13 +249,15 @@ class ConditionEngine:
         lazy candidate frame, with the keyword evaluator's reducer
         (partition-local top-k + count marker) and pager."""
         from micce_search_engine_spark.operators.batch_query import (
+            _described,
             _paged_pdf,
             _reduce_scored,
         )
 
         limit, page = int(condition["limit"]), int(condition["page"])
         cand = self.search_frame(condition)
-        totals, top = _reduce_scored(cand, limit * page)
+        with _described(self.spark, "search: condition"):
+            totals, top = _reduce_scored(cand, limit * page)
         window = _paged_pdf(top, [{"query_id": 0, "limit": limit, "page": page}], None)
         total = int(totals.get(0, 0))
         return {

@@ -8,18 +8,19 @@ Re-expresses the reference's query path (SURVEY.md §3.1):
   (presentation/model/response.go:8-42).
 
 Every keyword query — ``search`` (exact and ``topk_only``) and
-``search_phrase`` as much as the batch entry points — is ranked by ONE
-evaluator: each runs as a batch of one through
-operators/batch_query.py, whose vectorized mapInArrow evaluator scores
-OR-of-AND branches over decoded postings, checks phrase adjacency,
-applies the lang filter, and emits each partition's top-k plus a count
-marker; the driver merges and pages them. This module holds what that
-evaluator reads: the bucket/term-pruned segment scan (optionally pinned
-in executor memory with ``preload=True``), the Arrow-batched zero-copy
-posting decode (it emits the idf-free BM25 weight ``wf``, the
-per-posting lang attribute and, for phrase calls, the positions — NO
-join against a docs table, which at 10^12 docs is a full shuffle per
-query), and the block selections that bound a decode: block-max WAND
+``search_phrase`` as much as the batch entry points and the multi-field
+``multifield_scored`` — is ranked by ONE evaluator: each runs through
+operators/batch_query.py (a single query as a batch of one), whose
+vectorized mapInArrow kernel scores OR-of-AND branches over decoded
+postings, checks phrase adjacency and applies the lang filter; keyword
+calls then emit each partition's top-k plus a count marker, which the
+driver merges and pages. This module holds what that evaluator reads:
+the bucket/term-pruned segment scan (optionally pinned in executor
+memory with ``preload=True``), the Arrow-batched zero-copy posting
+decode (it emits the idf-free BM25 weight ``wf``, the per-posting lang
+id and, for phrase calls, the positions — NO join against a docs table,
+which at 10^12 docs is a full shuffle per query; no decode filters by
+lang), and the block selections that bound a decode: block-max WAND
 bounds and the rarest-term blocks of a phrase.
 
 Determinism (SURVEY.md §4.2 item 4): per-term contributions are
@@ -69,7 +70,6 @@ _SCHEMAS = {
 
 # fixed-point scale: contributions are floor(idf * wf * 1e9) int64
 SCORE_SCALE = 1e9
-MAX_BRANCHES = 8
 
 # segment columns each decode mode needs (column-pruned parquet scan)
 _SEG_COLS = [
@@ -93,15 +93,6 @@ _MODE_COLS = {
     "score_lang": _SEG_COLS + _LANG_COLS,
     "score_lang_pos": _SEG_COLS + _LANG_COLS + _POS_COLS,
 }
-
-
-def _scan_cols(mode: str, lang_id: int | None) -> list[str]:
-    """Segment columns ``mode`` reads; a decode-side lang filter on the
-    lang-free score modes adds the lang stream."""
-    cols = _MODE_COLS[mode]
-    if lang_id is not None and "block_lang_off" not in cols:
-        cols = cols + _LANG_COLS
-    return cols
 
 
 def _batch_row_views(batch, names: list[str]):
@@ -147,17 +138,19 @@ def _batch_row_views(batch, names: list[str]):
     return rows
 
 
-def _decode_map(mode: str, lang_id: int | None = None, avgdl: float = 1.0):
+def _decode_map(mode: str, avgdl: float = 1.0):
     """mapInArrow decoder factory; output schema ``_SCHEMAS[mode]``.
 
     modes:
       * ``postings_lang`` / ``postings_lang_pos`` -> (term, doc_id, tf,
         dl, lang_id[, positions])  [upsert rewrite]
-      * ``score`` -> (term, doc_id, wf)  [multifield, phrase block
-                     selection; optional decode-side exact lang filter]
+      * ``score`` -> (term, doc_id, wf)  [phrase block selection]
       * ``score_lang`` / ``score_lang_pos`` -> (term, doc_id, wf,
-        lang_id[, positions])  [the BM25 evaluator, per-query lang
-        filters; positions for phrase calls]
+        lang_id[, positions])  [the BM25 evaluator, single-field and
+        multifield; positions for phrase calls]
+
+    No mode filters by lang: lang filters apply downstream of the
+    decode, to its ``lang_id`` column.
 
     Block-max WAND restriction rides the DATA, not the closure: when
     the incoming batch carries an ``allowed`` array<int> column (added
@@ -170,10 +163,9 @@ def _decode_map(mode: str, lang_id: int | None = None, avgdl: float = 1.0):
     per row).
     """
     scoring = mode.startswith("score")
-    emit_lang = "lang" in mode
-    want_lang = emit_lang or lang_id is not None
+    want_lang = "lang" in mode
     want_pos = mode.endswith("_pos")
-    cols = _scan_cols(mode, lang_id)
+    cols = _MODE_COLS[mode]
 
     def fn(it):
         import pyarrow as pa
@@ -197,11 +189,6 @@ def _decode_map(mode: str, lang_id: int | None = None, avgdl: float = 1.0):
                 docs, tfs, dls = dec[0], dec[1], dec[2]
                 langs = dec[3] if want_lang else None
                 pos = dec[-1] if want_pos else None
-                if lang_id is not None:
-                    keep = langs == lang_id
-                    if want_pos:
-                        pos = pos[np.repeat(keep, tfs)]
-                    docs, tfs, dls = docs[keep], tfs[keep], dls[keep]
                 if not docs.size:
                     continue
                 terms.append(row["term"])
@@ -212,7 +199,7 @@ def _decode_map(mode: str, lang_id: int | None = None, avgdl: float = 1.0):
                 else:
                     a_out.append(tfs)
                     b_out.append(dls)
-                if emit_lang:
+                if want_lang:
                     lang_out.append(langs)
                 if want_pos:
                     pos_out.append(pos)
@@ -231,7 +218,7 @@ def _decode_map(mode: str, lang_id: int | None = None, avgdl: float = 1.0):
             if not scoring:
                 arrays.append(pa.array(np.concatenate(b_out)))
                 names.append("dl")
-            if emit_lang:
+            if want_lang:
                 arrays.append(pa.array(np.concatenate(lang_out)))
                 names.append("lang_id")
             if want_pos:
@@ -263,38 +250,6 @@ def _sql_in(col: str, values) -> Column:
         return str(int(v))
 
     return F.expr(f"{col} IN ({', '.join(lit(v) for v in values)})")
-
-
-def contrib_fx(idf_col, wf_col):
-    """Fixed-point per-term BM25 contribution: floor(idf*wf*1e9) long.
-    Summed as int64 -> deterministic under ANY partitioning; mirrored
-    verbatim in the DuckDB oracle (floor of the identically-ordered
-    double expression)."""
-    return F.floor(idf_col * wf_col * F.lit(SCORE_SCALE)).cast("long")
-
-
-def branch_count_aggs(branches: list[list[str]]):
-    """One conditional-count aggregate per OR branch: how many of branch
-    i's distinct terms matched this doc."""
-    assert len(branches) <= MAX_BRANCHES, "query expands to too many OR branches"
-    return [
-        F.sum(
-            F.when(F.col("term").isin(sorted(set(b))), F.lit(1)).otherwise(F.lit(0))
-        ).alias(f"_b{i}")
-        for i, b in enumerate(branches)
-    ]
-
-
-def branch_match_pred(branches: list[list[str]]):
-    """Doc is a candidate iff SOME branch matched ALL its terms
-    (whereQuery.go:13-41)."""
-    preds = [
-        F.col(f"_b{i}") == F.lit(len(set(b))) for i, b in enumerate(branches)
-    ]
-    out = preds[0]
-    for p in preds[1:]:
-        out = out | p
-    return out
 
 
 class SearchEngine:
@@ -429,14 +384,13 @@ class SearchEngine:
         self,
         terms: list[str],
         mode: str,
-        lang_id: int | None = None,
         block_join: DataFrame | None = None,
     ) -> DataFrame:
         """Pruned segment rows of ``terms`` carrying the columns ``mode``
         decodes. ``block_join``: optional (term, salt, allowed
         array<int>) selection — inner-joined so only surviving blocks are
         decoded (segment rows with no selection row drop out entirely)."""
-        seg = self._segments_for(terms, _scan_cols(mode, lang_id))
+        seg = self._segments_for(terms, _MODE_COLS[mode])
         if block_join is not None:
             # FORCE broadcast of the selection side: it is small by
             # construction (one row per (term,salt) of the query's
@@ -452,12 +406,11 @@ class SearchEngine:
         terms: list[str],
         block_join: DataFrame | None = None,
         mode: str = "score",
-        lang_id: int | None = None,
     ) -> DataFrame:
         """Decoded postings of ``terms`` (schema ``_SCHEMAS[mode]``) from
         :meth:`_segment_scan`."""
-        return self._segment_scan(terms, mode, lang_id, block_join).mapInArrow(
-            _decode_map(mode, lang_id, self.avgdl), _SCHEMAS[mode]
+        return self._segment_scan(terms, mode, block_join).mapInArrow(
+            _decode_map(mode, self.avgdl), _SCHEMAS[mode]
         )
 
     def _idf_expr(self, idf: dict[str, float]):

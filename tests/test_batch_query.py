@@ -507,11 +507,15 @@ def test_one_task_matches_doc_id_shuffle(spark, salted_pos_index, monkeypatch):
 
 
 def test_reduce_labels_its_jobs_with_the_shape(spark, tiny_index, synonyms, monkeypatch):
-    """_reduce describes its jobs as ``search: <shape>`` and restores
-    the caller's description, also when the evaluation fails."""
+    """_reduce describes its jobs as ``search: <shape>``, and
+    ConditionEngine.search its collect as ``search: condition``; both
+    restore the caller's description, also when the evaluation fails."""
     import micce_search_engine_spark.operators.batch_query as bq
+    from micce_search_engine_spark.operators.multifield import ConditionEngine
 
     eng = SearchEngine(spark, tiny_index, synonyms=synonyms)
+    ce = ConditionEngine({"text": eng}, synonyms=synonyms)
+    cond = {"keyword": "the of", "rank_profile": "bm25", "limit": 5, "page": 1}
     sc = spark.sparkContext
     seen = []
     merge = bq._merge_reduced
@@ -527,6 +531,7 @@ def test_reduce_labels_its_jobs_with_the_shape(spark, tiny_index, synonyms, monk
     sc.setJobDescription("caller")
     try:
         eng.search("the of", limit=5, page=1)
+        ce.search(cond)
         monkeypatch.setattr(bq, "_chunk_rows", lambda n_terms: 0)
         eng.search("the", limit=5, page=1)
         eng.search("the of", limit=5, page=1)
@@ -535,9 +540,14 @@ def test_reduce_labels_its_jobs_with_the_shape(spark, tiny_index, synonyms, monk
         with pytest.raises(RuntimeError):
             eng.search("the of", limit=5, page=1)
         assert sc.getLocalProperty("spark.job.description") == "caller"
+        with pytest.raises(RuntimeError):
+            ce.search(cond)
+        assert sc.getLocalProperty("spark.job.description") == "caller"
     finally:
         sc.setJobDescription(None)
-    assert seen == ["search: one task", "search: single-term", "search: doc_id shuffle"]
+    assert seen == [
+        "search: one task", "search: condition", "search: single-term", "search: doc_id shuffle"
+    ]
 
 
 def test_sql_in_matches_isin(spark):

@@ -217,9 +217,9 @@ def test_phrase_positional_decode_is_bounded(spark, tiny_pages_pdf, tmp_path_fac
     calls = []
     orig = eng._segment_scan
 
-    def spy(terms, mode, lang_id=None, block_join=None):
+    def spy(terms, mode, block_join=None):
         calls.append((tuple(terms), mode, block_join is not None))
-        return orig(terms, mode, lang_id, block_join)
+        return orig(terms, mode, block_join)
 
     def positional(bounded):
         pos_calls = [c for c in calls if c[1] == "score_lang_pos"]

@@ -245,3 +245,125 @@ def test_multifield_phrase_matches_oracle(spark, tmp_path_factory):
     assert res["total_hits"] == len(exp)
     top = sorted(exp.items(), key=lambda kv: (-kv[1], kv[0]))[:5]
     assert res["results"] == [(d, s) for d, s in top]
+
+
+SYN_PHRASE = {"qalias": "the of"}
+
+
+@pytest.fixture(scope="module")
+def mf_lang_env(spark, tmp_path_factory):
+    """Positional text and title indexes sharing doc ids, the title one
+    built from the pages whose lang is not "de": the two fields' lang
+    dictionaries then differ ("en" is id 1 in text, id 0 in title)."""
+    pdf = gen_pages(N, seed=23).sort_values("url").reset_index(drop=True)
+    pdf["title"] = [_title(t) for t in pdf["text"]]
+    pdf["doc_id"] = range(N)
+    sub = pdf[pdf["lang"] != "de"]
+    base = str(tmp_path_factory.mktemp("mfl") / "idx")
+    kw = dict(doc_id_col="doc_id", n_buckets=4, max_postings_per_row=10**9, with_positions=True)
+    idxs = {}
+    for field, part in (("text", pdf), ("title", sub)):
+        pages = spark.createDataFrame(part[["url", "text", "title", "lang", "doc_id"]])
+        idxs.update(build_field_indexes(spark, pages, [field], base, **kw))
+    engines = {f: SearchEngine(spark, d, synonyms=SYN_PHRASE) for f, d in idxs.items()}
+    assert engines["text"].langs != engines["title"].langs
+    fields = {
+        "text": pdf[["doc_id", "text"]],
+        "title": sub[["doc_id", "title"]].rename(columns={"title": "text"}),
+    }
+    return pdf, fields, engines
+
+
+def _fields_oracle(fields, query, synonyms, phrase=False):
+    """Brute force over per-field corpora {field: (doc_id, text)}, each
+    with its own N/avgdl/df: candidacy = some branch in some field (its
+    tokens consecutive when ``phrase``); score = cross-field sum of
+    fixed-point BM25 over all expanded terms."""
+    branches = expand_branches(query, synonyms)
+    qterms = sorted({t for b in branches for t in b})
+    hits, scores = set(), Counter()
+    for fpdf in fields.values():
+        toks = [tokenize_text(t) for t in fpdf["text"]]
+        avgdl = sum(map(len, toks)) / len(toks)
+        tfs = [Counter(t) for t in toks]
+        df = Counter(t for c in tfs for t in c)
+        for d, tk, tf in zip(fpdf["doc_id"], toks, tfs):
+            for t in qterms:
+                if tf[t]:
+                    idf = math.log((len(toks) - df[t] + 0.5) / (df[t] + 0.5) + 1.0)
+                    wf = tf[t] * (BM25_K1 + 1.0) / (
+                        tf[t] + BM25_K1 * (1.0 - BM25_B + BM25_B * len(tk) / avgdl)
+                    )
+                    scores[d] += math.floor(idf * wf * 1e9)
+            for b in branches:
+                if phrase:
+                    m = any(tk[i : i + len(b)] == b for i in range(len(tk) - len(b) + 1))
+                else:
+                    m = all(t in tf for t in b)
+                if m:
+                    hits.add(d)
+    return {d: scores[d] / 1e9 for d in hits}
+
+
+def _final_plan(df) -> list[str]:
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return [ln.strip() for ln in plan.split("== Initial Plan ==")[0].splitlines()]
+
+
+@pytest.mark.parametrize("phrase", [False, True])
+def test_multifield_plan_is_one_evaluator_pass(spark, mf_lang_env, monkeypatch, phrase):
+    """Bag and phrase queries over two fields decode each field once, in
+    the evaluator's lang-carrying mode (never the lang-free ``score``
+    mode), and run one doc_id Exchange with no Aggregate: the fields'
+    postings meet in one evaluator pass, not in per-field aggregates."""
+    _, _, engines = mf_lang_env
+    calls = []
+    for f, eng in engines.items():
+
+        def spy(terms, mode, block_join=None, f=f, orig=eng._segment_scan):
+            calls.append((f, mode))
+            return orig(terms, mode, block_join)
+
+        monkeypatch.setattr(eng, "_segment_scan", spy)
+    plan = _final_plan(multifield_scored(engines, "the of", SYN_PHRASE, phrase=phrase))
+    ex = [ln for ln in plan if "Exchange" in ln]
+    assert len(ex) == 1 and "hashpartitioning(doc_id" in ex[0], plan
+    assert not [ln for ln in plan if "Aggregate" in ln], plan
+    mode = "score_lang_pos" if phrase else "score_lang"
+    assert sorted(calls) == [(f, mode) for f in sorted(engines)], calls
+
+
+@pytest.mark.parametrize("lang", ["en", "de", "ko"])
+def test_multifield_lang_filter_matches_oracle(spark, mf_lang_env, lang):
+    """A lang filter keeps exactly the lang's docs of the unfiltered
+    bag and phrase results, scores unchanged, though the fields map the
+    lang to different ids ("de" is absent from the title field). An
+    unknown lang matches nothing."""
+    pdf, fields, engines = mf_lang_env
+    of_lang = set(pdf.loc[pdf["lang"] == lang, "doc_id"])
+    for query, phrase in (("the", False), ("w000001 the", False), ("the of", True),
+                          ("qalias", True)):
+        got_df = multifield_scored(engines, query, SYN_PHRASE, lang_filter=lang, phrase=phrase)
+        got = {r["doc_id"]: r["score"] for r in got_df.collect()}
+        exp = {
+            d: s
+            for d, s in _fields_oracle(fields, query, SYN_PHRASE, phrase).items()
+            if d in of_lang
+        }
+        assert got == exp and (exp or phrase), (query, lang)
+    assert multifield_scored(engines, "the", SYN_PHRASE, lang_filter="xx").collect() == []
+
+
+def test_condition_engine_lang_filter(spark, mf_lang_env):
+    """ConditionEngine.search pages the lang-filtered multifield hits."""
+    pdf, fields, engines = mf_lang_env
+    ce = ConditionEngine(engines, synonyms=SYN_PHRASE)
+    of_lang = set(pdf.loc[pdf["lang"] == "en", "doc_id"])
+    exp = {d: s for d, s in _fields_oracle(fields, "the of", SYN_PHRASE, True).items()
+           if d in of_lang}
+    res = ce.search({"keyword": "the of", "lang_filter": "en", "rank_profile": "bm25",
+                     "limit": 5, "page": 2, "phrase": True})
+    top = sorted(exp.items(), key=lambda kv: (-kv[1], kv[0]))
+    assert res["total_hits"] == len(exp) > 10
+    assert res["results"] == top[5:10]
