@@ -166,7 +166,7 @@ def run_suite(spark, pages, sf_dir: str, cpus: int, n_docs: int) -> tuple[dict, 
         eng.search("the w000001", limit=10, page=1, topk_only=True)
         timings["q_wand_and2"] = time.monotonic() - t0
 
-    eng._segments_cached.unpersist()
+    eng._segments.unpersist()
     eng._term_stats.unpersist()
 
     # phrase legs (round-5): positional index build cost (the opt-in
@@ -209,7 +209,7 @@ def run_suite(spark, pages, sf_dir: str, cpus: int, n_docs: int) -> tuple[dict, 
             "w000001 w000002", limit=10, page=1
         )["total_hits"]
         timings["q_phrase"] = time.monotonic() - t0
-        eng_pos._segments_cached.unpersist()
+        eng_pos._segments.unpersist()
         eng_pos._term_stats.unpersist()
         shutil.rmtree(pos_dir, ignore_errors=True)
 

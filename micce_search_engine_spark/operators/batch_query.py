@@ -40,7 +40,9 @@ task, so a call runs in one of three shapes, tried in this order:
 
 Batches are split into chunks whose reduced frame fits
 DRIVER_MERGE_MAX_ROWS; each chunk's evaluation jobs carry the
-description ``search: <shape>``.
+description ``search: <shape>``, and the jobs that bound its decode
+before it ``search: phrase bound`` (the phrase block selection) or
+``search: wand probe`` (the WAND per-term bound aggregate).
 
 A phrase-flagged query matches a multi-token branch only where its
 tokens occur at consecutive positions (whereQuery.go:43-57); its score
@@ -51,7 +53,8 @@ each phrase's rarest term (SearchEngine._phrase_block_join).
 
 ``multifield.multifield_scored`` runs the same kernel over a
 field-qualified vocabulary and emits every match unreduced
-(``_hits_fn``), for ``ConditionEngine`` to filter, join and reduce.
+(``_hits_fn``), for ``ConditionEngine`` to filter, join and reduce; it
+takes the one-task shape on the same bound, else the doc_id shuffle.
 
 ``search_batch_topk`` is the WAND-pruned variant: one probe pass over
 every term's best block yields per-query k-th-best lower bounds,
@@ -334,15 +337,17 @@ def _batch_eval_fn(programs, term_to_tid, maxk: int, shape: str = "doc_id shuffl
     return fn
 
 
-def _hits_fn(program, term_to_tid):
-    """mapInArrow over doc-sorted decoded postings -> (doc_id, score) of
-    EVERY doc that ``program`` matches (``_chunk_hits``), unreduced."""
+def _hits_fn(program, term_to_tid, chunk_rows: int | None):
+    """mapInArrow over decoded postings -> (doc_id, score) of EVERY doc
+    that ``program`` matches (``_chunk_hits``), unreduced. Input is
+    doc-sorted and cut into chunks of about ``chunk_rows`` postings at
+    doc boundaries, or (None) holds all of its postings in one chunk."""
     n_terms = len(term_to_tid)
 
     def fn(it):
         import pyarrow as pa
 
-        for chunk in _doc_chunks(it, term_to_tid, _chunk_rows(n_terms), True):
+        for chunk in _doc_chunks(it, term_to_tid, chunk_rows, True):
             for _, docs, scores in _chunk_hits([program], n_terms, chunk):
                 yield pa.RecordBatch.from_arrays(
                     [pa.array(docs), pa.array(scores)], names=["doc_id", "score"]
@@ -367,7 +372,8 @@ def _eval_plan(
         engine._require_positions()
         mode = "score_lang_pos"
         if block_join is None and all(s is not None for s in seqs):
-            block_join = engine._phrase_block_join([[terms[t] for t in s] for s in seqs])
+            with _described(engine.spark, "search: phrase bound"):
+                block_join = engine._phrase_block_join([[terms[t] for t in s] for s in seqs])
     # _compile's idf_map cached every term's df (a call with a term
     # already evicted from the bounded cache never fits)
     sum_df = sum(engine._df_cache.get(t, float("inf")) for t in terms)
@@ -483,7 +489,8 @@ def _batch_wand_selection(engine: SearchEngine, queries: list[dict], maxk: int):
     qterms = {int(q["query_id"]): _query_terms(engine, q) for q in queries}
     terms = sorted({t for ts in qterms.values() for t in ts})
     blocks = engine._wand_blocks(terms, engine.idf_map(terms))
-    term_ub, best_sel = engine._term_ub_and_best(blocks)
+    with _described(engine.spark, "search: wand probe"):
+        term_ub, best_sel = engine._term_ub_and_best(blocks)
     if not term_ub:
         return best_sel  # empty: no segments -> decode nothing
     _, probe = _reduce(engine, queries, maxk, block_join=best_sel)

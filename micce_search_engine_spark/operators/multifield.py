@@ -23,9 +23,11 @@ Engine realization:
     field-qualified vocabulary — a branch per field x OR branch, a
     score term per field x term with that field's idf. Each field is
     decoded once (its lang filter on its own lang ids), the fields are
-    unioned and repartitioned by doc_id once, and one mapInArrow emits
-    every doc where SOME field fully matched SOME branch (adjacency for
-    phrase branches), scored by the cross-field fixed-point BM25 sum;
+    unioned — coalesced to one task when the call's postings fit one
+    evaluation chunk, else repartitioned by doc_id once — and one
+    mapInArrow emits every doc where SOME field fully matched SOME
+    branch (adjacency for phrase branches), scored by the cross-field
+    fixed-point BM25 sum;
   * attributes (geo position, category, bools) live in an attribute
     store table joined by doc_id (Vespa ``attribute``/``fast-search``,
     spot.sd:19-31) — at cluster scale both sides are bucketed by
@@ -50,6 +52,9 @@ from micce_search_engine_spark.functions.geo import (
 from micce_search_engine_spark.operators.index_build import build_index
 from micce_search_engine_spark.operators.query import SearchEngine
 from micce_search_engine_spark.oracle import expand_branches
+
+
+_HITS_SCHEMA = "doc_id long, score double"
 
 
 def build_field_indexes(
@@ -104,8 +109,9 @@ def multifield_scored(
     (RuntimeError otherwise).
 
     Runs as ONE program of the BM25 evaluator over the field-qualified
-    vocabulary ``"<field index>:<term>"`` (see "Engine realization")."""
-    from micce_search_engine_spark.operators.batch_query import _hits_fn
+    vocabulary ``"<field index>:<term>"`` (see "Engine realization"), in
+    one task when the call's postings fit one evaluation chunk."""
+    from micce_search_engine_spark.operators.batch_query import _chunk_rows, _hits_fn
 
     branches = expand_branches(query_text, synonyms)
     if not branches:
@@ -134,12 +140,19 @@ def multifield_scored(
         if lang_filter is not None:  # each field index has its own lang ids
             post = post.filter(F.col("lang_id") == F.lit(eng.lang_id_of(lang_filter)))
         parts.append(post)
+    program = (0, -1, sterms, fbranches, seqs)
+    union = reduce(DataFrame.union, parts)
+    # idf_map cached every field's dfs: when all the postings fit one
+    # evaluation chunk, evaluate them in one task as one chunk, with no
+    # doc_id shuffle (batch_query's "one task" shape)
+    rows = _chunk_rows(len(keys))
+    if sum(eng._df_cache.get(t, float("inf")) for eng in fields for t in terms) <= rows:
+        return union.coalesce(1).mapInArrow(_hits_fn(program, tid, None), _HITS_SCHEMA)
     n_shuf = int(fields[0].spark.conf.get("spark.sql.shuffle.partitions"))
     return (
-        reduce(DataFrame.union, parts)
-        .repartition(n_shuf, "doc_id")
+        union.repartition(n_shuf, "doc_id")
         .sortWithinPartitions("doc_id")
-        .mapInArrow(_hits_fn((0, -1, sterms, fbranches, seqs), tid), "doc_id long, score double")
+        .mapInArrow(_hits_fn(program, tid, rows), _HITS_SCHEMA)
     )
 
 

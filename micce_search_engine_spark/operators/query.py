@@ -48,6 +48,7 @@ from __future__ import annotations
 
 import json
 import math
+import os
 
 import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -60,6 +61,8 @@ from micce_search_engine_spark.operators.index_build import IndexPaths, bucket_o
 _POSTING_LANG_SCHEMA = "term string, doc_id long, tf long, dl long, lang_id long"
 _POSTING_LANG_POS_SCHEMA = _POSTING_LANG_SCHEMA + ", positions array<int>"
 _SCORE_LANG_SCHEMA = "term string, doc_id long, wf double, lang_id long"
+#: a block selection: the block indices ``allowed`` of a segment row
+_SEL_SCHEMA = "term string, salt int, allowed array<int>"
 _SCHEMAS = {
     "postings_lang": _POSTING_LANG_SCHEMA,
     "postings_lang_pos": _POSTING_LANG_POS_SCHEMA,
@@ -252,8 +255,18 @@ def _sql_in(col: str, values) -> Column:
     return F.expr(f"{col} IN ({', '.join(lit(v) for v in values)})")
 
 
+def _stamp(path: str) -> tuple[int, int]:
+    """(mtime ns, size) of ``path``: changes when the file is rewritten."""
+    st = os.stat(path)
+    return st.st_mtime_ns, st.st_size
+
+
 class SearchEngine:
-    """Load index artifacts and answer SearchCondition-shaped queries."""
+    """Load index artifacts and answer SearchCondition-shaped queries.
+
+    An engine serves the index as of its open: N, avgdl, the term-df
+    cache and the segment relation are read once. After ``apply_upsert``
+    open a new engine; a scan on the old one raises RuntimeError."""
 
     def __init__(
         self,
@@ -270,6 +283,9 @@ class SearchEngine:
         from micce_search_engine_spark.operators.upsert import recover_upsert
 
         recover_upsert(index_dir)
+        # apply_upsert rewrites meta.json: _segments_for compares this
+        # stamp before every scan (see the class docstring)
+        self._meta_stamp = _stamp(self.paths.meta)
         with open(self.paths.meta) as f:
             self.meta = json.load(f)
         # v1 indexes have no per-posting lang stream: the score_lang
@@ -293,24 +309,22 @@ class SearchEngine:
         # true web scale this stays a filter-pushdown parquet lookup;
         # persist() is a no-op benefit there and a big one locally)
         self._term_stats = spark.read.parquet(self.paths.term_stats).persist()
-        # ``preload``: pin the segments table in executor memory — the
-        # analog of Vespa serving its index from memory. Queries then
-        # filter the in-memory columnar cache instead of re-opening
-        # parquet. At 10^12 docs a serving tier holds its shard the
-        # same way; batch/offline sessions leave this off and rely on
-        # bucket partition pruning.
-        self._segments_cached = None
+        # the segments relation is resolved ONCE: listing the partitioned
+        # directory and inferring its schema is a Spark job, which every
+        # scan would otherwise pay. ``preload`` also pins it in executor
+        # memory — the analog of Vespa serving its index from memory —
+        # so queries filter the in-memory columnar cache instead of
+        # re-opening parquet. At 10^12 docs a serving tier holds its
+        # shard the same way; batch/offline sessions leave this off and
+        # rely on bucket partition pruning.
+        self._segments = spark.read.parquet(self.paths.segments)
         if preload:
-            self._segments_cached = spark.read.parquet(self.paths.segments).persist()
+            self._segments = self._segments.persist()
         # the shuffle-free single-term plan runs one task per partition of
         # the segment scan (pinned cache, or parquet splits), which can
         # outnumber spark.sql.shuffle.partitions; batch_query sizes its
         # driver-merge chunks by the larger of the two
-        self._scan_partitions = (
-            self._segments_cached
-            if self._segments_cached is not None
-            else spark.read.parquet(self.paths.segments)
-        ).rdd.getNumPartitions()
+        self._scan_partitions = self._segments.rdd.getNumPartitions()
         # lossless WAND after incremental upserts: stored block bounds
         # were encoded with a possibly-smaller avgdl; scaling them by
         # avgdl_now/min_avgdl_encoded keeps them true upper bounds
@@ -368,16 +382,18 @@ class SearchEngine:
         }
 
     def _segments_for(self, terms: list[str], cols: list[str] | None = None) -> DataFrame:
+        if _stamp(self.paths.meta) != self._meta_stamp:
+            raise RuntimeError(
+                f"index at {self.paths.root} changed since this engine was "
+                "opened (apply_upsert); open a new SearchEngine to read it"
+            )
         buckets = sorted({bucket_of(t, self.meta["n_buckets"]) for t in terms})
-        base = (
-            self._segments_cached
-            if self._segments_cached is not None
-            else self.spark.read.parquet(self.paths.segments)
-        )
         # partition pruning on bucket=, then row-group pruning on term
-        df = base.filter(_sql_in("bucket", buckets) & _sql_in("term", terms))
+        df = self._segments.filter(_sql_in("bucket", buckets) & _sql_in("term", terms))
         if cols is not None:
-            df = df.select(*cols)  # prune blob columns the mode won't read
+            # prune blob columns the mode won't read; one py4j call,
+            # where select(*cols) makes one per column name
+            df = df.selectExpr(*cols)
         return df
 
     def _segment_scan(
@@ -450,7 +466,7 @@ class SearchEngine:
         term_ub = {r["term"]: float(r["ub"]) for r in rows}
         sel = self.spark.createDataFrame(
             [(r["term"], int(r["s"]["salt"]), [int(r["s"]["bi"])]) for r in rows],
-            "term string, salt int, allowed array<int>",
+            _SEL_SCHEMA,
         )
         return term_ub, sel
 
@@ -508,17 +524,18 @@ class SearchEngine:
         sorted, and each segment-metadata row maps them to its blocks
         with one vectorized searchsorted over (block_first_doc,
         block_last_doc) — no decode of the frequent terms' streams and
-        no range join; driver state is bounded by the engagement cap.
-        Lang filters are left to the evaluator, so one selection serves
-        every query of the call."""
+        no range join. The selection is collected and rebuilt
+        driver-side, so both of its jobs run here rather than inside
+        the evaluation; driver state is bounded by the engagement cap
+        (a doc lies in one block per term, so <= PHRASE_CAND_CAP block
+        ids per phrase term). Lang filters are left to the evaluator, so
+        one selection serves every query of the call."""
         rdec = self._postings(rarest_terms, mode="score")
         cdocs = np.unique(
             rdec.select("doc_id").toPandas()["doc_id"].to_numpy(dtype=np.int64)
         )
         if cdocs.size == 0:
-            return self.spark.createDataFrame(
-                [], "term string, salt int, allowed array<int>"
-            )
+            return self.spark.createDataFrame([], _SEL_SCHEMA)
         bc = self.spark.sparkContext.broadcast(cdocs)
         meta = self._segments_for(
             mterms, cols=["term", "salt", "block_first_doc", "block_last_doc"]
@@ -557,7 +574,7 @@ class SearchEngine:
                         names=["term", "salt", "allowed"],
                     )
 
-        return meta.mapInArrow(fn, "term string, salt int, allowed array<int>")
+        return self.spark.createDataFrame(meta.mapInArrow(fn, _SEL_SCHEMA).collect(), _SEL_SCHEMA)
 
     def search_phrase(
         self,

@@ -200,7 +200,7 @@ def test_staged_segment_overwrite_is_hidden_and_swept(spark, tmp_path):
     eng2 = SearchEngine(spark, idx, preload=True)
     again = eng2.search("the", limit=5, page=1)
     assert again == baseline
-    eng2._segments_cached.unpersist()
+    eng2._segments.unpersist()
 
     # the sweep clears both leaked dirs (runs inside the next upsert)
     up._sweep_stale_tmp(idx)

@@ -435,22 +435,53 @@ def salted_pos_index(spark, tiny_pages_pdf, tmp_path_factory):
 
 
 def test_small_multi_term_search_runs_one_job(spark, tiny_index, synonyms):
-    """A multi-term search on a pinned index whose postings fit one
-    evaluation chunk runs ONE Spark job: no doc_id shuffle stage in
-    front of the evaluator. A first call fills the engine's term-df
-    cache and the pinned segments, as a serving engine's are filled."""
-    eng = SearchEngine(spark, tiny_index, synonyms=synonyms, preload=True)
+    """A multi-term search whose postings fit one evaluation chunk runs
+    ONE Spark job, on a pinned and on an unpinned index: no doc_id
+    shuffle stage in front of the evaluator, and no listing or schema
+    inference of the segments (resolved once, at open). A first call
+    fills the engine's term-df cache and the pinned segments, as a
+    serving engine's are filled."""
     sc = spark.sparkContext
-    try:
-        first = eng.search("the of", limit=5, page=1)
-        sc.setJobGroup("one-task-search", "one multi-term search")
-        again = eng.search("the of", limit=5, page=1)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-        eng._segments_cached.unpersist()
-    assert again == first and first["total_hits"] > 0
-    assert len(sc.statusTracker().getJobIdsForGroup("one-task-search")) == 1
+    for preload in (True, False):
+        eng = SearchEngine(spark, tiny_index, synonyms=synonyms, preload=preload)
+        group = f"one-task-search-{preload}"
+        try:
+            first = eng.search("the of", limit=5, page=1)
+            sc.setJobGroup(group, "one multi-term search")
+            again = eng.search("the of", limit=5, page=1)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+            eng._segments.unpersist()
+        assert again == first and first["total_hits"] > 0
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1, preload
+
+
+def test_queries_do_not_reopen_the_segments(spark, pos_index, synonyms, monkeypatch):
+    """An unpinned engine resolves the segments relation once, at open:
+    no search entry point reads parquet again — the single, phrase
+    (block bound engaged), batch and WAND-pruned (probe engaged) paths
+    each filter the relation the engine holds."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from micce_search_engine_spark.operators.batch_query import search_batch_topk
+
+    eng = SearchEngine(spark, pos_index, synonyms=synonyms)
+    eng.phrase_block_factor = 0
+    eng.wand_engage_factor = 0
+    reads = []
+    orig = DataFrameReader.parquet
+
+    def spy(self, *paths, **kw):
+        reads.append(paths)
+        return orig(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spy)
+    assert eng.search("the of", limit=5, page=1)["results"]
+    assert eng.search_phrase("the of", limit=5, page=1)["results"]
+    assert search_batch(eng, SPECS).collect()
+    assert search_batch_topk(eng, SPECS[:3]).collect()
+    assert reads == []
 
 
 def test_one_task_matches_doc_id_shuffle(spark, salted_pos_index, monkeypatch):
@@ -506,10 +537,15 @@ def test_one_task_matches_doc_id_shuffle(spark, salted_pos_index, monkeypatch):
     assert over == one
 
 
-def test_reduce_labels_its_jobs_with_the_shape(spark, tiny_index, synonyms, monkeypatch):
+def test_reduce_labels_its_jobs_with_the_shape(
+    spark, tiny_index, pos_index, synonyms, monkeypatch
+):
     """_reduce describes its jobs as ``search: <shape>``, and
-    ConditionEngine.search its collect as ``search: condition``; both
-    restore the caller's description, also when the evaluation fails."""
+    ConditionEngine.search its collect as ``search: condition``; the
+    jobs before the evaluation are ``search: phrase bound`` (the phrase
+    block selection) and ``search: wand probe`` (the WAND bound
+    aggregate). Each restores the caller's description, also when the
+    evaluation fails."""
     import micce_search_engine_spark.operators.batch_query as bq
     from micce_search_engine_spark.operators.multifield import ConditionEngine
 
@@ -527,11 +563,29 @@ def test_reduce_labels_its_jobs_with_the_shape(spark, tiny_index, synonyms, monk
     def boom(plan):
         raise RuntimeError("evaluation failed")
 
+    def labelled(obj, name):
+        orig = getattr(obj, name)
+
+        def wrapped(*args):
+            seen.append(sc.getLocalProperty("spark.job.description"))
+            return orig(*args)
+
+        monkeypatch.setattr(obj, name, wrapped)
+
     monkeypatch.setattr(bq, "_merge_reduced", spy)
     sc.setJobDescription("caller")
     try:
         eng.search("the of", limit=5, page=1)
         ce.search(cond)
+        peng = SearchEngine(spark, pos_index, synonyms=synonyms)
+        peng.phrase_block_factor = 0
+        labelled(peng, "_phrase_block_join")
+        peng.search_phrase("the of", limit=5, page=1)
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+        peng.wand_engage_factor = 0
+        labelled(peng, "_term_ub_and_best")
+        peng.search("the of", limit=5, page=1, topk_only=True)
+        assert sc.getLocalProperty("spark.job.description") == "caller"
         monkeypatch.setattr(bq, "_chunk_rows", lambda n_terms: 0)
         eng.search("the", limit=5, page=1)
         eng.search("the of", limit=5, page=1)
@@ -546,7 +600,10 @@ def test_reduce_labels_its_jobs_with_the_shape(spark, tiny_index, synonyms, monk
     finally:
         sc.setJobDescription(None)
     assert seen == [
-        "search: one task", "search: condition", "search: single-term", "search: doc_id shuffle"
+        "search: one task", "search: condition",
+        "search: phrase bound", "search: one task",
+        "search: wand probe", "search: one task", "search: one task",
+        "search: single-term", "search: doc_id shuffle",
     ]
 
 
@@ -582,7 +639,7 @@ def test_segments_for_keeps_pushed_filters(spark, tiny_index):
             plan = _final_plan(eng._segments_for(terms, ["term", "salt"]))
         finally:
             if preload:
-                eng._segments_cached.unpersist()
+                eng._segments.unpersist()
         text = "\n".join(plan)
         if preload:
             scan = next(ln for ln in plan if "InMemoryTableScan" in ln)

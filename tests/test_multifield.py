@@ -315,8 +315,12 @@ def _final_plan(df) -> list[str]:
 def test_multifield_plan_is_one_evaluator_pass(spark, mf_lang_env, monkeypatch, phrase):
     """Bag and phrase queries over two fields decode each field once, in
     the evaluator's lang-carrying mode (never the lang-free ``score``
-    mode), and run one doc_id Exchange with no Aggregate: the fields'
-    postings meet in one evaluator pass, not in per-field aggregates."""
+    mode), with no Aggregate: the fields' postings meet in one evaluator
+    pass, not in per-field aggregates. A call whose postings fit one
+    evaluation chunk reads them in ONE task (one ``Coalesce 1``, no
+    Exchange); over that bound it runs one doc_id Exchange."""
+    import micce_search_engine_spark.operators.batch_query as bq
+
     _, _, engines = mf_lang_env
     calls = []
     for f, eng in engines.items():
@@ -326,12 +330,47 @@ def test_multifield_plan_is_one_evaluator_pass(spark, mf_lang_env, monkeypatch, 
             return orig(terms, mode, block_join)
 
         monkeypatch.setattr(eng, "_segment_scan", spy)
-    plan = _final_plan(multifield_scored(engines, "the of", SYN_PHRASE, phrase=phrase))
-    ex = [ln for ln in plan if "Exchange" in ln]
-    assert len(ex) == 1 and "hashpartitioning(doc_id" in ex[0], plan
-    assert not [ln for ln in plan if "Aggregate" in ln], plan
     mode = "score_lang_pos" if phrase else "score_lang"
-    assert sorted(calls) == [(f, mode) for f in sorted(engines)], calls
+
+    def plan_and_exchanges():
+        calls.clear()
+        plan = _final_plan(multifield_scored(engines, "the of", SYN_PHRASE, phrase=phrase))
+        assert not [ln for ln in plan if "Aggregate" in ln], plan
+        assert sorted(calls) == [(f, mode) for f in sorted(engines)], calls
+        return plan, [ln for ln in plan if "Exchange" in ln]
+
+    plan, ex = plan_and_exchanges()
+    assert not ex, plan
+    assert [ln.lstrip("+- ") for ln in plan if "Coalesce" in ln] == ["Coalesce 1"], plan
+
+    monkeypatch.setattr(bq, "_chunk_rows", lambda n_terms: 0)
+    plan, ex = plan_and_exchanges()
+    assert len(ex) == 1 and "hashpartitioning(doc_id" in ex[0], plan
+    assert not [ln for ln in plan if "Coalesce" in ln], plan
+
+
+def test_multifield_one_task_matches_doc_id_shuffle(spark, mf_lang_env, monkeypatch):
+    """The one-task shape and the doc_id shuffle (forced by a zero
+    chunk bound) return the same rows for bag, synonym, phrase and
+    lang-filtered calls."""
+    import micce_search_engine_spark.operators.batch_query as bq
+
+    _, _, engines = mf_lang_env
+    cases = [("the of", None, False), ("qalias", None, False),
+             ("the of", None, True), ("qalias", None, True),
+             ("w000001 the", "de", False), ("the of", "en", True)]
+
+    def run():
+        return [
+            sorted(multifield_scored(engines, q, SYN_PHRASE, lang_filter=lang,
+                                     phrase=phrase).collect())
+            for q, lang, phrase in cases
+        ]
+
+    one = run()
+    assert all(one), [len(r) for r in one]
+    monkeypatch.setattr(bq, "_chunk_rows", lambda n_terms: 0)
+    assert run() == one
 
 
 @pytest.mark.parametrize("lang", ["en", "de", "ko"])

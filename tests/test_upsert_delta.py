@@ -79,6 +79,40 @@ def test_wand_still_lossless_after_delta(spark, delta_env):
         assert [d for d, _ in wand["results"]] == [d for d, _ in exact["results"]], q
 
 
+def test_engine_opened_before_upsert_asks_to_reopen(spark, tmp_path):
+    """An engine serves the index as of its open. Unpinned and pinned
+    engines opened before an upsert raise (rather than reading swapped
+    files or mixing new segments with old stats); an engine opened
+    after it answers like the oracle over the merged corpus."""
+    idx = str(tmp_path / "idx_stale")
+    pdf = gen_pages(120, seed=37)
+    pages = spark.createDataFrame(pdf, schema=pages_spark_schema())
+    build_index(spark, pages, idx, n_buckets=4, max_postings_per_row=10**9)
+    cold, hot = SearchEngine(spark, idx), SearchEngine(spark, idx, preload=True)
+    try:
+        assert cold.search("the", limit=5, page=1) == hot.search("the", limit=5, page=1)
+        updates = spark.createDataFrame(
+            [(pdf.url[0], "zzfresh the words", "en"), ("https://zz.example/n", "the zzfresh", "en")],
+            "url string, text string, lang string",
+        )
+        merged = apply_upsert(spark, idx, pages, updates).select("url", "text", "lang").toPandas()
+        for eng in (cold, hot):
+            with pytest.raises(RuntimeError, match="open a new SearchEngine"):
+                eng.search("the", limit=5, page=1)
+    finally:
+        hot._segments.unpersist()
+    eng = SearchEngine(spark, idx)
+    url_of = {r["doc_id"]: r["url"] for r in spark.read.parquet(os.path.join(idx, "docs")).collect()}
+    oracle = BruteForceBM25(merged)
+    for q in ["zzfresh", "the", "the words"]:
+        got = eng.search(q, limit=10, page=1)
+        exp = oracle.search(q, limit=10, page=1)
+        assert got["total_hits"] == exp["total_hits"] > 0, q
+        assert sorted((url_of[d], round(s, 9)) for d, s in got["results"]) == sorted(
+            (oracle.urls[d], round(s, 9)) for d, s in exp["results"]
+        ), q
+
+
 def test_unaffected_buckets_untouched(spark, tmp_path):
     """Delta rebuild must not rewrite buckets of unaffected terms."""
     idx = str(tmp_path / "idx2")

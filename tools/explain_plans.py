@@ -8,7 +8,8 @@ Evidence that the plans are the ones you'd want at 100 TB:
     (MapInArrow): in one task when the call's postings fit one
     evaluation chunk, else with at most one doc_id Exchange in front;
   * a multi-field keyword query is one evaluator program too: one
-    decode per field, one doc_id Exchange, no aggregate;
+    decode per field, no aggregate, and in one task (Coalesce 1, no
+    Exchange) when its postings fit one evaluation chunk;
   * the LSH ANN indexed path shows bucket partition pruning.
 
 Usage: python tools/explain_plans.py [n_docs]
@@ -117,7 +118,9 @@ def main() -> None:
                 "(positions, rarest-term bound)",
                 "Look for: ONE positional scan (ReadSchema WITH pos_blob/"
                 "block_pos_off) behind a BroadcastHashJoin against the "
-                "rarest-term-derived block selection (term, salt, allowed) — "
+                "rarest-term-derived block selection (term, salt, allowed), "
+                "computed and collected before the evaluation, so its side "
+                "is a Scan ExistingRDD of the collected rows — "
                 "the frequent terms' streams are never fully decoded in ANY "
                 "mode (the only unrestricted decode is the rarest term's "
                 "cheap score scan feeding the selection); then the same ONE "
@@ -176,10 +179,11 @@ def main() -> None:
             "Multi-field keyword query (two fields, lang filter)",
             "Look for: one bucket-pruned segment scan + decode MapInArrow per "
             "field, each followed by the Filter on that field's own lang_id and "
-            "the Project prefixing term with the field index; a Union; then "
-            "exactly ONE Exchange hashpartitioning(doc_id) + Sort and ONE "
-            "evaluator MapInArrow emitting every matched (doc_id, score) — no "
-            "aggregate, no join.",
+            "the Project prefixing term with the field index; a Union; then, "
+            "as the call's postings fit one evaluation chunk, Coalesce 1 and "
+            "ONE evaluator MapInArrow emitting every matched (doc_id, score) "
+            "— no Exchange, no aggregate, no join. Over that bound the Union "
+            "is repartitioned by doc_id once (one Exchange + Sort) instead.",
             explain(multifield_scored(fields, "the w000001", syn, lang_filter="en")),
         )
     )
