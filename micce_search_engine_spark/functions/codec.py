@@ -237,126 +237,59 @@ def decode_postings(
     """
     first = np.asarray(row["block_first_doc"], dtype=np.int64)
     block_n = np.asarray(row["block_n"], dtype=np.int64)
-    doc_off = np.asarray(row["block_doc_off"], dtype=np.int64)
-    tf_off = np.asarray(row["block_tf_off"], dtype=np.int64)
-    dl_off = np.asarray(row["block_dl_off"], dtype=np.int64)
-    doc_blob = np.frombuffer(bytes(row["doc_blob"]), dtype=np.uint8)
-    tf_blob = np.frombuffer(bytes(row["tf_blob"]), dtype=np.uint8)
-    dl_blob = np.frombuffer(bytes(row["dl_blob"]), dtype=np.uint8)
     has_lang = want_lang and row.get("lang_blob") is not None
-    if has_lang:
-        lang_off = np.asarray(row["block_lang_off"], dtype=np.int64)
-        lang_blob = np.frombuffer(bytes(row["lang_blob"]), dtype=np.uint8)
-    if want_positions:
-        if row.get("pos_blob") is None:
-            raise ValueError(
-                "decode_postings: positions requested but this segment row "
-                "has no position stream (index built without positions)"
-            )
-        pos_off = np.asarray(row["block_pos_off"], dtype=np.int64)
-        pos_blob = np.frombuffer(bytes(row["pos_blob"]), dtype=np.uint8)
-    n_blocks = first.size
-    if block_mask is None:
-        # FULL decode fast path (round-6): decode each stream with ONE
-        # varbyte call over the whole blob instead of one per block —
-        # a hot term's row previously made ~4 x n_blocks small numpy
-        # calls, which dominated full-row decode time. Doc ids are
-        # reconstructed from the global delta cumsum with a per-block
-        # base correction (v is 0 at block-first positions, so
-        # cs[start_b] is the sum of deltas before block b and
-        # ids = cs + (first_b - cs[start_b]) restarts each block at its
-        # absolute first doc). Bit-identical to the per-block path
-        # (covered by codec roundtrip tests + the posting_roundtrip
-        # oracle entry).
-        n = int(block_n.sum())
-        starts = np.concatenate(([0], np.cumsum(block_n)))[:-1].astype(np.int64)
-        blk_of = np.repeat(np.arange(n_blocks, dtype=np.int64), block_n)
-        deltas = varbyte_decode(doc_blob).astype(np.int64)
-        v = np.zeros(n, dtype=np.int64)
-        isfirst = np.zeros(n, dtype=bool)
-        isfirst[starts] = True
-        v[~isfirst] = deltas
-        cs = np.cumsum(v)
-        docs = cs + (first - cs[starts])[blk_of]
-        tfs = varbyte_decode(tf_blob).astype(np.int64)
-        dls = varbyte_decode(dl_blob).astype(np.int64)
-        out = (docs, tfs, dls)
-        if want_lang:
-            if has_lang:
-                out = out + (varbyte_decode(lang_blob).astype(np.int64),)
-            else:
-                out = out + (np.zeros_like(docs),)
-        if want_positions:
-            pd_ = varbyte_decode(pos_blob).astype(np.int64)
-            if pd_.size:
-                tcum = np.concatenate(([0], np.cumsum(tfs)))
-                firsts = tcum[:-1]
-                run = np.cumsum(pd_)
-                base = np.zeros(pd_.size, dtype=np.int64)
-                base[firsts] = run[firsts] - pd_[firsts]
-                np.maximum.accumulate(base, out=base)
-                out = out + (run - base,)
-            else:
-                out = out + (pd_,)
-        return out
-    sel = np.flatnonzero(block_mask)
-    empty = np.empty(0, dtype=np.int64)
-    if sel.size == 0:
-        out = (empty, empty.copy(), empty.copy())
-        if want_lang:
-            out = out + (empty.copy(),)
-        if want_positions:
-            out = out + (empty.copy(),)
-        return out
-
-    docs_out = []
-    tfs_out = []
-    dls_out = []
-    langs_out = []
-    pos_out = []
-    for bi in sel:
-        d = varbyte_decode(doc_blob[doc_off[bi] : doc_off[bi + 1]]).astype(np.int64)
-        ids = np.empty(block_n[bi], dtype=np.int64)
-        ids[0] = first[bi]
-        if d.size:
-            ids[1:] = first[bi] + np.cumsum(d)
-        docs_out.append(ids)
-        tfs = varbyte_decode(tf_blob[tf_off[bi] : tf_off[bi + 1]]).astype(np.int64)
-        tfs_out.append(tfs)
-        dls_out.append(
-            varbyte_decode(dl_blob[dl_off[bi] : dl_off[bi + 1]]).astype(np.int64)
+    if want_positions and row.get("pos_blob") is None:
+        raise ValueError(
+            "decode_postings: positions requested but this segment row "
+            "has no position stream (index built without positions)"
         )
-        if has_lang:
-            langs_out.append(
-                varbyte_decode(lang_blob[lang_off[bi] : lang_off[bi + 1]]).astype(
-                    np.int64
-                )
+    streams = ["doc", "tf", "dl"] + (["lang"] if has_lang else []) + (
+        ["pos"] if want_positions else []
+    )
+    blobs = {k: np.frombuffer(bytes(row[f"{k}_blob"]), dtype=np.uint8) for k in streams}
+    if block_mask is not None:
+        # a masked decode is the whole-stream decode over the selected
+        # blocks: gather each stream's selected byte ranges (one index
+        # build per stream) and subset the block metadata
+        sel = np.flatnonzero(block_mask)
+        for k in streams:
+            off = np.asarray(row[f"block_{k}_off"], dtype=np.int64)
+            lo, n_b = off[sel], off[sel + 1] - off[sel]
+            idx = np.arange(int(n_b.sum()), dtype=np.int64) + np.repeat(
+                lo - (np.cumsum(n_b) - n_b), n_b
             )
-        if want_positions:
-            pd_ = varbyte_decode(pos_blob[pos_off[bi] : pos_off[bi + 1]]).astype(
-                np.int64
-            )
-            # undo within-posting deltas: cumsum, reset at posting firsts
-            if pd_.size:
-                tcum = np.concatenate(([0], np.cumsum(tfs)))
-                firsts = tcum[:-1]
-                # subtract each posting's running base so a plain cumsum
-                # restarts per posting: cumsum of deltas, then at each
-                # posting-first the absolute value is already stored
-                run = np.cumsum(pd_)
-                base = np.zeros(pd_.size, dtype=np.int64)
-                base[firsts] = run[firsts] - pd_[firsts]
-                np.maximum.accumulate(base, out=base)
-                pos_out.append(run - base)
-            else:
-                pos_out.append(pd_)
-    docs = np.concatenate(docs_out)
-    out = (docs, np.concatenate(tfs_out), np.concatenate(dls_out))
+            blobs[k] = blobs[k][idx]
+        first, block_n = first[sel], block_n[sel]
+    # each stream is decoded with ONE varbyte call over its whole blob
+    # (round-6: one call per block dominated the decode of hot terms).
+    # Doc ids are rebuilt from the global delta cumsum with a per-block
+    # base correction (v is 0 at block-first positions, so cs[start_b]
+    # is the sum of deltas before block b and ids = cs + (first_b -
+    # cs[start_b]) restarts each block at its absolute first doc).
+    n = int(block_n.sum())
+    starts = np.concatenate(([0], np.cumsum(block_n)))[:-1].astype(np.int64)
+    blk_of = np.repeat(np.arange(first.size, dtype=np.int64), block_n)
+    v = np.zeros(n, dtype=np.int64)
+    isfirst = np.zeros(n, dtype=bool)
+    isfirst[starts] = True
+    v[~isfirst] = varbyte_decode(blobs["doc"]).astype(np.int64)
+    cs = np.cumsum(v)
+    docs = cs + (first - cs[starts])[blk_of]
+    tfs = varbyte_decode(blobs["tf"]).astype(np.int64)
+    out = (docs, tfs, varbyte_decode(blobs["dl"]).astype(np.int64))
     if want_lang:
-        langs = np.concatenate(langs_out) if has_lang else np.zeros_like(docs)
-        out = out + (langs,)
+        langs = varbyte_decode(blobs["lang"]) if has_lang else np.zeros_like(docs)
+        out = out + (langs.astype(np.int64),)
     if want_positions:
-        out = out + (np.concatenate(pos_out),)
+        # undo within-posting deltas: a running cumsum, restarted at
+        # each posting's first (stored absolute) value
+        pd_ = varbyte_decode(blobs["pos"]).astype(np.int64)
+        firsts = np.concatenate(([0], np.cumsum(tfs)))[:-1]
+        run = np.cumsum(pd_)
+        base = np.zeros(pd_.size, dtype=np.int64)
+        base[firsts] = run[firsts] - pd_[firsts]
+        np.maximum.accumulate(base, out=base)
+        out = out + (run - base,)
     return out
 
 

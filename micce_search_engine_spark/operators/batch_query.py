@@ -48,8 +48,9 @@ A phrase-flagged query matches a multi-token branch only where its
 tokens occur at consecutive positions (whereQuery.go:43-57); its score
 is the usual BM25 over all its terms, and a phrase whose branches are
 all single tokens is plain bag-of-words. When every branch of the call
-is such a phrase, the decode is bounded to the blocks holding a doc of
-each phrase's rarest term (SearchEngine._phrase_block_join).
+is such a phrase and the call does not fit one chunk, the decode is
+bounded to the blocks holding a doc of each phrase's rarest term
+(SearchEngine._phrase_block_join).
 
 ``multifield.multifield_scored`` runs the same kernel over a
 field-qualified vocabulary and emits every match unreduced
@@ -366,18 +367,21 @@ def _eval_plan(
     programs, tid, terms = _compile(engine, queries)
     if not programs:
         return None
+    # _compile's idf_map cached every term's df (a call with a term
+    # already evicted from the bounded cache never fits)
+    sum_df = sum(engine._df_cache.get(t, float("inf")) for t in terms)
+    fits = sum_df <= _chunk_rows(len(terms))
     seqs = [s for p in programs for s in p[4]]
     mode = "score_lang"
     if any(s is not None for s in seqs):
         engine._require_positions()
         mode = "score_lang_pos"
-        if block_join is None and all(s is not None for s in seqs):
+        # the phrase bound's own jobs cost more than the unbounded decode
+        # of a call that fits one chunk
+        if not fits and block_join is None and all(s is not None for s in seqs):
             with _described(engine.spark, "search: phrase bound"):
                 block_join = engine._phrase_block_join([[terms[t] for t in s] for s in seqs])
-    # _compile's idf_map cached every term's df (a call with a term
-    # already evicted from the bounded cache never fits)
-    sum_df = sum(engine._df_cache.get(t, float("inf")) for t in terms)
-    if sum_df <= _chunk_rows(len(terms)):
+    if fits:
         # every posting of the call fits one evaluation chunk: read the
         # whole scan in one task and evaluate it as one chunk, so each
         # doc's postings are together with no shuffle (the df sum only

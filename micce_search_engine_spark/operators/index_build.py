@@ -6,6 +6,8 @@ as an explicit, checkpoint-resumable Spark pipeline (SURVEY.md §3.3):
   S2_stats     corpus stats (N, avgdl) + per-term stats (df, cf)
   S3_segments  salted groupBy(term) -> delta+varbyte posting blocks with
                block-max metadata, bucket-partitioned parquet
+               (``write_segments``: the one segment encoder, which
+               ``upsert.apply_upsert`` re-encodes its delta with too)
 
 Scale notes (designed for 10^12 docs / 1000 executors, tested local):
   * the only wide shuffles are groupBy(doc_id,term) [S1], groupBy(term)
@@ -39,7 +41,6 @@ from pyspark.sql import functions as F
 
 from micce_search_engine_spark import BLOCK_SIZE, BM25_B, BM25_K1
 from micce_search_engine_spark.functions.codec import bm25_wf, encode_many
-from micce_search_engine_spark.operators.docids import assign_doc_ids
 from micce_search_engine_spark.plans.manifest import Manifest, atomic_stage
 
 SEGMENT_SCHEMA = (
@@ -63,19 +64,24 @@ def bucket_of(term: str, n_buckets: int) -> int:
     return zlib.crc32(term.encode("utf-8")) % n_buckets
 
 
-def _parquet_row_count(path: str) -> int:
-    """Row count from parquet FOOTERS (driver-side metadata walk, no
-    Spark job) — a zero-column count() still pays a full job's
-    scheduling for what the footers already know. Used only to SIZE the
-    encode partitioning, never for correctness."""
-    import pyarrow.parquet as pq
+def _crc_bucket(col: str, n: int):
+    """``crc32(col) % n`` as int, evaluated by Spark (the Spark-side twin
+    of :func:`bucket_of`): over ``term``, term_stats' ``tbucket`` and the
+    segments' ``bucket``; over ``url``, url_map's ``ubucket`` and the
+    live pages store's ``pbucket``."""
+    return (F.crc32(F.encode(F.col(col), "UTF-8")) % n).cast("int")
 
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            if f.endswith(".parquet"):
-                total += pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
-    return total
+
+def _dbucket(docs_per_bucket: int):
+    """Doc bucket of terms and docs: fixed-capacity doc_id ranges."""
+    return F.floor(F.col("doc_id") / F.lit(docs_per_bucket)).cast("long")
+
+
+def _lang_id(langs: list[str], col: str):
+    """``langs`` index of the ``col`` language (null reads as ""): the
+    lang_id stored per posting."""
+    lang_map = F.create_map(*[x for i, l in enumerate(langs) for x in (F.lit(l), F.lit(i))])
+    return lang_map[F.coalesce(F.col(col), F.lit(""))].cast("long")
 
 
 class IndexPaths:
@@ -88,6 +94,14 @@ class IndexPaths:
         self.segments = os.path.join(index_dir, "segments")
         self.url_map = os.path.join(index_dir, "url_map")
         self.meta = os.path.join(index_dir, "meta.json")
+
+
+def read_stats(p: IndexPaths) -> dict:
+    """The one-row corpus stats table (N, avgdl, sum_dl, max_doc_id),
+    read on the driver: a Spark read of one row costs a job."""
+    import pyarrow.parquet as pq
+
+    return pq.read_table(p.stats).to_pylist()[0]
 
 
 TERMS_SCHEMA = "doc_id long, term string, tf long, dl long, lang_id long"
@@ -105,19 +119,17 @@ TERMS_POS_SCHEMA = TERMS_SCHEMA + ", positions array<int>"
 ENCODE_ROWS_PER_PARTITION = 250_000
 
 
-def _tokenize_count(it):
-    """mapInArrow wrapper without positions (TERMS_SCHEMA)."""
-    yield from _tokenize_count_impl(it, with_positions=False)
+def _tokenized(df: DataFrame, has_pos: bool) -> DataFrame:
+    """(doc_id, text, lang_id) rows -> terms-table rows: TERMS_SCHEMA,
+    or TERMS_POS_SCHEMA with per-(doc, term) token positions."""
+    if has_pos:
+        return df.mapInArrow(lambda it: _tokenize_count(it, True), TERMS_POS_SCHEMA)
+    return df.mapInArrow(_tokenize_count, TERMS_SCHEMA)
 
 
-def _tokenize_count_pos(it):
-    """mapInArrow wrapper WITH per-(doc,term) token positions
-    (TERMS_POS_SCHEMA) — round-4 phrase support."""
-    yield from _tokenize_count_impl(it, with_positions=True)
-
-
-def _tokenize_count_impl(it, with_positions: bool):
-    """mapInArrow: pages RecordBatches -> (doc_id, term, tf, dl, lang_id).
+def _tokenize_count(it, with_positions: bool = False):
+    """mapInArrow: pages RecordBatches -> (doc_id, term, tf, dl, lang_id),
+    plus ``positions`` when ``with_positions`` (see :func:`_tokenized`).
 
     Tokenizing AND term-counting in one pass emits one row per unique
     (doc, term) instead of shipping every token occurrence through an
@@ -421,6 +433,82 @@ def _make_grouped_encoder(avgdl: float, n_buckets: int, with_positions: bool = F
     return encode_groups
 
 
+def write_segments(
+    spark: SparkSession,
+    postings: DataFrame,
+    term_dfs: DataFrame,
+    write,
+    *,
+    n_docs: int,
+    avgdl: float,
+    n_buckets: int,
+    max_postings_per_row: int,
+    has_pos: bool,
+    keep: DataFrame | None = None,
+    n_parts: int | None = None,
+):
+    """The one segment encoder (build S3 and the upsert re-encode):
+    terms-table rows ``postings`` -> segment rows, handed to
+    ``write(frame)``; returns what ``write`` returns.
+
+    ``term_dfs`` holds (term, df) for every term of ``postings``; one
+    collect over it gives Σ df and the hot terms. A term with df over
+    ``max_postings_per_row`` is range-salted by doc_id into
+    ceil(df / max) contiguous sub-ranges of [0, ``n_docs``), so no
+    group holds more postings than that (AQE skew handling does not
+    apply to aggregations). The hot rows are rebuilt driver-side for
+    the broadcast join, as ``F.broadcast`` would collect them anyway.
+
+    Σ df is the encode's input row count. It sizes the encode
+    partitions at ``ENCODE_ROWS_PER_PARTITION`` rows (an explicit count:
+    with AQE on, ``repartition(cols)`` may coalesce to one partition
+    and serialize the encode), rounded up to a multiple of the core
+    count so the CPU-bound encode does not end on a straggler wave.
+
+    The encoded rows, plus the segment rows ``keep`` (left as they
+    are), are clustered into ``n_parts`` (default ``n_buckets``)
+    partitions by bucket, so the partitioned writer emits one file per
+    bucket, and sorted by (bucket, term, salt), so row-group min/max
+    stats on ``term`` prune lookups. The sort leads with bucket: the
+    partitioned writer needs its input ordered by the partition column,
+    and on any other ordering Spark plans its own sort by bucket alone
+    and drops the (term, salt) sort below it."""
+    agg = term_dfs.agg(
+        F.sum("df").alias("n"),
+        F.collect_list(
+            F.when(F.col("df") > max_postings_per_row, F.struct("term", "df"))
+        ).alias("hot"),
+    ).collect()[0]
+    if agg["hot"]:
+        hot = spark.createDataFrame([tuple(r) for r in agg["hot"]], "term string, _hot_df long")
+        postings = postings.join(F.broadcast(hot), "term", "left")
+    else:  # an empty broadcast side would still cost a Spark job
+        postings = postings.withColumn("_hot_df", F.lit(None).cast("long"))
+    n_rows = F.ceil(F.col("_hot_df") / F.lit(max_postings_per_row))
+    salt = F.when(
+        F.col("_hot_df").isNotNull(),
+        F.floor(F.col("doc_id") * n_rows / F.lit(n_docs)),
+    ).otherwise(F.lit(0))
+    salted = postings.withColumn("salt", salt.cast("int")).drop("_hot_df")
+    n_enc = max(
+        int(spark.conf.get("spark.sql.shuffle.partitions")),
+        -(-(agg["n"] or 0) // ENCODE_ROWS_PER_PARTITION),
+    )
+    par = max(spark.sparkContext.defaultParallelism, 1)
+    n_enc = -(-n_enc // par) * par
+    seg = _grouped_postings(salted, n_enc, has_pos).mapInArrow(
+        _make_grouped_encoder(avgdl, n_buckets, has_pos),
+        SEGMENT_POS_SCHEMA if has_pos else SEGMENT_SCHEMA,
+    )
+    if keep is not None:
+        seg = keep.unionByName(seg)
+    seg = seg.repartition(n_parts or n_buckets, "bucket").sortWithinPartitions(
+        "bucket", "term", "salt"
+    )
+    with _sort_based_group_agg(spark, has_pos):
+        return write(seg)
+
+
 def build_index(
     spark: SparkSession,
     pages: DataFrame,
@@ -483,7 +571,6 @@ def build_index(
             .distinct()
             .collect()
         )
-        lang_to_id = {l: i for i, l in enumerate(langs)}
         with st:
             from micce_search_engine_spark.operators.docids import (
                 BROADCAST_IDS_MAX,
@@ -507,12 +594,7 @@ def build_index(
                     ids = None  # shuffle-join path: recompute too costly
             else:
                 with_ids = pages.withColumn("doc_id", F.col(doc_id_col).cast("long"))
-            lang_map = F.create_map(
-                *[x for l, i in lang_to_id.items() for x in (F.lit(l), F.lit(i))]
-            )
-            with_ids = with_ids.withColumn(
-                "lang_id", lang_map[F.coalesce(F.col("lang"), F.lit(""))].cast("long")
-            )
+            with_ids = with_ids.withColumn("lang_id", _lang_id(langs, "lang"))
             if ids is None and doc_id_col is None:
                 with_ids = with_ids.persist()
             # no eager count: the terms write below materializes any
@@ -531,7 +613,7 @@ def build_index(
                 int(spark.conf.get("spark.sql.shuffle.partitions")),
                 spark.sparkContext.defaultParallelism,
             )
-            dbucket = F.floor(F.col("doc_id") / F.lit(docs_per_bucket)).cast("long")
+            dbucket = _dbucket(docs_per_bucket)
             # one Python pass: tokenize + per-doc term counts.
             # Partitioning strategy for the dbucket-partitioned write:
             #   few buckets (tests/bench; fan-out <= 8 dirs/task is
@@ -554,10 +636,8 @@ def build_index(
                 sel = sel.repartition(n_tok)
             else:
                 sel = sel.repartitionByRange(n_tok, "doc_id")
-            tok_fn = _tokenize_count_pos if with_positions else _tokenize_count
-            tok_schema = TERMS_POS_SCHEMA if with_positions else TERMS_SCHEMA
             (
-                sel.mapInArrow(tok_fn, tok_schema)
+                _tokenized(sel, with_positions)
                 .withColumn("dbucket", dbucket)
                 .write.mode("overwrite")
                 .partitionBy("dbucket")
@@ -588,10 +668,7 @@ def build_index(
             def _write_url_map():
                 um_src = ids if ids is not None else with_ids.select("url", "doc_id")
                 (
-                    um_src.withColumn(
-                        "ubucket",
-                        (F.crc32(F.encode(F.col("url"), "UTF-8")) % url_buckets).cast("int"),
-                    )
+                    um_src.withColumn("ubucket", _crc_bucket("url", url_buckets))
                     .repartition(n_shuf, "ubucket")
                     .write.mode("overwrite")
                     .partitionBy("ubucket")
@@ -641,10 +718,7 @@ def build_index(
                 (
                     terms.groupBy("term")
                     .agg(F.count(F.lit(1)).alias("df"), F.sum("tf").alias("cf"))
-                    .withColumn(
-                        "tbucket",
-                        (F.crc32(F.encode(F.col("term"), "UTF-8")) % n_buckets).cast("int"),
-                    )
+                    .withColumn("tbucket", _crc_bucket("term", n_buckets))
                     .write.mode("overwrite")
                     .partitionBy("tbucket")
                     .parquet(p.term_stats + ".__tmp__")
@@ -659,7 +733,7 @@ def build_index(
     st = atomic_stage(m, "S3_segments", [p.segments])
     if not st.skipped:
         with st:
-            stats_row = spark.read.parquet(p.stats).collect()[0]
+            stats_row = read_stats(p)
             n_docs, avgdl = int(stats_row["N"]), float(stats_row["avgdl"])
             terms = spark.read.parquet(p.terms)
             if with_positions and "positions" not in terms.columns:
@@ -668,66 +742,23 @@ def build_index(
                     "table built WITHOUT positions; delete the index dir "
                     "and rebuild"
                 )
-            # row count straight from the parquet FOOTERS (driver-side
-            # metadata walk — round-6; even a zero-column count() paid a
-            # full Spark job's scheduling per build). Used only to size
-            # the encode partitioning below.
-            n_term_rows = _parquet_row_count(p.terms)
-            # Explicit skew handling: broadcast only the Zipf head.
-            hot = (
-                spark.read.parquet(p.term_stats)
-                .filter(F.col("df") > max_postings_per_row)
-                .select("term", F.col("df").alias("_hot_df"))
+            write_segments(
+                spark,
+                terms.drop("dbucket"),
+                spark.read.parquet(p.term_stats).select("term", "df"),
+                lambda seg: seg.write.mode("overwrite")
+                .partitionBy("bucket")
+                .parquet(p.segments + ".__tmp__"),
+                n_docs=n_docs,
+                avgdl=avgdl,
+                n_buckets=n_buckets,
+                max_postings_per_row=max_postings_per_row,
+                has_pos=with_positions,
             )
-            terms = terms.join(F.broadcast(hot), "term", "left")
-            n_rows = F.ceil(F.col("_hot_df") / F.lit(max_postings_per_row))
-            salt = F.when(
-                F.col("_hot_df").isNotNull(),
-                F.floor(F.col("doc_id") * n_rows / F.lit(n_docs)),
-            ).otherwise(F.lit(0))
-            terms = terms.withColumn("salt", salt.cast("int")).drop("_hot_df")
-            # explicit partition count: with AQE on, repartition(cols)
-            # may coalesce to 1 tiny partition and serialize the encode.
-            # DATA-AWARE: cap posting rows per partition so the
-            # grouped-encode aggregation state fits per-task memory —
-            # see ENCODE_ROWS_PER_PARTITION for the derivation (the
-            # round-6 grouped boundary made the old 2M sort-sized cap
-            # an OOM at 1M docs: collect_list state is JVM objects,
-            # not spill-managed Tungsten sort pages)
-            n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-            n_enc = max(n_shuffle, -(-n_term_rows // ENCODE_ROWS_PER_PARTITION))
-            # wave-align (round-4): round UP to a multiple of the core
-            # count so the CPU-bound encode doesn't end on a straggler
-            # wave (18 tasks on 16 cores = one full wave + a 2-task
-            # tail; 32 = two balanced waves)
-            par = max(spark.sparkContext.defaultParallelism, 1)
-            n_enc = -(-n_enc // par) * par
-            seg_schema = SEGMENT_POS_SCHEMA if with_positions else SEGMENT_SCHEMA
-            with _sort_based_group_agg(spark, with_positions):
-                (
-                    _grouped_postings(terms, n_enc, with_positions)
-                    .mapInArrow(
-                        _make_grouped_encoder(avgdl, n_buckets, with_positions),
-                        seg_schema,
-                    )
-                    # cluster encoded rows by bucket so the dynamic-
-                    # partition writer emits one file per bucket instead
-                    # of every task fanning out to all n_buckets dirs
-                    # (and sort by term so parquet row-group min/max
-                    # stats prune term lookups). The sort leads with
-                    # bucket: the partitioned write adds its own local
-                    # sort by bucket and drops any sort that does not
-                    # start with it
-                    .repartition(n_buckets, "bucket")
-                    .sortWithinPartitions("bucket", "term", "salt")
-                    .write.mode("overwrite")
-                    .partitionBy("bucket")
-                    .parquet(p.segments + ".__tmp__")
-                )
     if fail_after == "S3_segments":
         raise RuntimeError("injected failure after S3_segments")
 
-    avgdl_built = float(spark.read.parquet(p.stats).collect()[0]["avgdl"])
+    avgdl_built = float(read_stats(p)["avgdl"])
     with open(p.meta, "w") as f:
         json.dump(
             {

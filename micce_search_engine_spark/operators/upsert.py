@@ -15,7 +15,10 @@ MATCHED THEN INSERT`` — those runtimes aren't in this image, so
 ``merge_pages`` emulates the same semantics with a full-outer-join
 rewrite (equivalent output table; atomic swap by path rename), and
 ``affected_terms`` computes the index delta: the set of terms whose
-posting lists a rebuild must touch.
+posting lists a rebuild must touch. ``apply_upsert`` re-encodes those
+posting lists with the build's segment encoder
+(``index_build.write_segments``), so an upserted index stores what a
+rebuild over the merged pages would.
 """
 
 from __future__ import annotations
@@ -303,12 +306,13 @@ def _apply_upsert_locked(
     The set-oriented analog of the reference's per-doc re-feed loop
     (/root/reference/indexer/internal/service/index_service.go:159-172),
     O(delta) end to end on the v3 layout. It runs a FIXED sequence of
-    at most 14 Spark actions, independent of ``n_buckets`` and of how
+    at most 13 Spark actions, independent of ``n_buckets`` and of how
     many partitions the delta touches:
 
-    1. resolve ids (3 collects + the doc-id ranking pass): the stats
-       row; one aggregate over the changed urls for their url_map
-       ubuckets and newly seen langs; one aggregate over the persisted
+    1. resolve ids (2 collects + the doc-id ranking pass): the stats
+       row, read on the driver with no Spark job; one aggregate over
+       the changed urls for their url_map ubuckets and newly seen
+       langs; one aggregate over the persisted
        ``changed`` frame for its dbuckets, insert count, max doc_id and
        the new urls' ubuckets. Changed docs keep their doc_ids; new
        urls get append-only ids max_id+1+rank;
@@ -322,12 +326,13 @@ def _apply_upsert_locked(
     4. stage url_map (1 write, only when urls are new);
     5. stage term_stats (1 collect, 1 write): the affected term
        buckets, then per-term df/cf deltas in those buckets;
-    6. re-encode segments (1 collect, 1 write): the encode partition
-       count comes from Σ post-delta ``df`` over the affected terms
-       (the re-encode's exact input row count, with no decode pass);
-       old postings of affected terms are DECODED from the segments
-       themselves (bucket-pruned), re-encoded with the delta, and every
-       touched bucket is staged in ONE partitioned write: one
+    6. re-encode segments (1 collect, 1 write) through the build's own
+       encoder, ``index_build.write_segments``: old postings of
+       affected terms are DECODED from the segments themselves
+       (bucket-pruned) and joined with the delta's; one collect of the
+       affected terms' post-delta ``df`` gives Σ df (the encode's exact
+       input row count, with no decode pass) and the hot terms to salt;
+       every touched bucket is staged in ONE partitioned write: one
        (term, salt)-sorted file per bucket.
 
     Every read and write is pruned to partitions the delta touches;
@@ -347,17 +352,13 @@ def _apply_upsert_locked(
     """
     from micce_search_engine_spark.operators.docids import assign_doc_ids
     from micce_search_engine_spark.operators.index_build import (
-        ENCODE_ROWS_PER_PARTITION,
         IndexPaths,
-        SEGMENT_POS_SCHEMA,
-        SEGMENT_SCHEMA,
-        TERMS_POS_SCHEMA,
-        TERMS_SCHEMA,
-        _grouped_postings,
-        _make_grouped_encoder,
-        _sort_based_group_agg,
-        _tokenize_count,
-        _tokenize_count_pos,
+        _crc_bucket,
+        _dbucket,
+        _lang_id,
+        _tokenized,
+        read_stats,
+        write_segments,
     )
     from micce_search_engine_spark.operators.query import (
         _MODE_COLS,
@@ -424,11 +425,11 @@ def _apply_upsert_locked(
 
     # -- resolve ids: url_map pruned to the delta's ubuckets -----------
     phase("resolve ids")
-    stats_row = spark.read.parquet(p.stats).collect()[0]
+    stats_row = read_stats(p)
     n_old = int(stats_row["N"])
     sum_dl_old = int(stats_row["sum_dl"])
     max_id = int(stats_row["max_doc_id"]) if stats_row["max_doc_id"] is not None else -1
-    ub_col = (F.crc32(F.encode(F.col("url"), "UTF-8")) % url_buckets).cast("int")
+    ub_col = _crc_bucket("url", url_buckets)
     new_lang = F.coalesce(F.col("_new_lang"), F.lit(""))
     # one pass over the changed urls: touched ubuckets + every lang
     cu = changed_urls.agg(
@@ -456,7 +457,7 @@ def _apply_upsert_locked(
         .withColumn("_is_new", F.lit(False))
     )
     changed = old_ids.union(new_ids).persist()
-    dbucket_col = F.floor(F.col("doc_id") / F.lit(cap)).cast("long")
+    dbucket_col = _dbucket(cap)
     # one pass over the delta (and its first action, which materializes
     # the persisted frame): touched dbuckets, inserts, max id, and the
     # ubuckets the new urls land in
@@ -475,9 +476,6 @@ def _apply_upsert_locked(
     # -- language dictionary: append newly-seen langs (ids are stable) --
     langs: list[str] = list(meta.get("langs", []))
     langs += sorted(set(cu["langs"]) - set(langs))
-    lang_map = F.create_map(
-        *[x for i, l in enumerate(langs) for x in (F.lit(l), F.lit(i))]
-    )
 
     # -- delta-scoped reads: only the dbuckets holding changed docs ----
     phase("stage terms")
@@ -492,16 +490,13 @@ def _apply_upsert_locked(
         .select(*term_cols)
         .persist()
     )
-    new_terms_rows = (
+    new_terms_rows = _tokenized(
         changed.select(
             "doc_id",
             F.col("_new_text").alias("text"),
-            lang_map[new_lang].cast("long").alias("lang_id"),
-        )
-        .mapInArrow(
-            _tokenize_count_pos if has_pos else _tokenize_count,
-            TERMS_POS_SCHEMA if has_pos else TERMS_SCHEMA,
-        )
+            _lang_id(langs, "_new_lang").alias("lang_id"),
+        ),
+        has_pos,
     ).persist()
     # the affected-term set is kept DISTRIBUTED (parquet spill + read
     # back): a 1% delta of a 10^12-doc corpus has millions of distinct
@@ -598,7 +593,7 @@ def _apply_upsert_locked(
     # term_stats' tbucket and the segments' bucket are the same hash
     # (crc32(term) % n_buckets), so one collect serves both patches
     phase("stage term_stats")
-    tb_col = (F.crc32(F.encode(F.col("term"), "UTF-8")) % n_buckets).cast("int")
+    tb_col = _crc_bucket("term", n_buckets)
     aff_buckets = sorted(
         r["b"] for r in affected.select(tb_col.alias("b")).distinct().collect()
     )
@@ -641,65 +636,36 @@ def _apply_upsert_locked(
     # postings sourced by DECODING the old segments (bucket-pruned) —
     # no full terms-table scan (round-2's O(corpus) read)
     phase("re-encode segments")
-    # post-delta dfs of the affected terms, from the PATCHED term_stats
-    # plan (it reads only live pre-swap tables; the staged tmp can be
-    # empty for a no-op delta, so it is not re-read here)
-    aff_stats = ts_patched.join(affected, "term", "left_semi")
-    # the re-encode's input has one row per post-delta posting of an
-    # affected term, so Σ df sizes the encode partitions exactly like
-    # the build's S3 (bounds the per-task group-collect OBJECT state on
-    # wide deltas; see ENCODE_ROWS_PER_PARTITION) without a decode pass
-    n_postings = aff_stats.agg(F.sum("df")).collect()[0][0] or 0
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    n_enc = max(n_shuffle, -(-n_postings // ENCODE_ROWS_PER_PARTITION))
-    max_rows = int(meta.get("max_postings_per_row", 200_000))
-    dec_mode = "postings_lang_pos" if has_pos else "postings_lang"
-    seg_aff = spark.read.parquet(p.segments).filter(F.col("bucket").isin(aff_buckets))
-    old_postings = (
-        seg_aff.join(affected, "term", "left_semi")
-        .select(*_MODE_COLS[dec_mode])
-        .mapInArrow(
-            _decode_map(mode=dec_mode),
-            _POSTING_LANG_POS_SCHEMA if has_pos else _POSTING_LANG_SCHEMA,
-        )
-    )
-    postings = (
-        old_postings.join(changed_ids, "doc_id", "left_anti")
-        .unionByName(new_terms_rows)
-    )
-    # hot terms among the affected only (delta-sized)
-    hot = aff_stats.filter(F.col("df") > max_rows).select(
-        "term", F.col("df").alias("_hot_df")
-    )
-    postings = postings.join(F.broadcast(hot), "term", "left")
-    n_rows_exp = F.ceil(F.col("_hot_df") / F.lit(max_rows))
-    salt = F.when(
-        F.col("_hot_df").isNotNull(),
-        F.floor(F.col("doc_id") * n_rows_exp / F.lit(n_now)),
-    ).otherwise(F.lit(0))
-    re_encoded = _grouped_postings(
-        postings.withColumn("salt", salt.cast("int")).drop("_hot_df"), n_enc, has_pos
-    ).mapInArrow(
-        _make_grouped_encoder(avgdl_now, n_buckets, has_pos),
-        SEGMENT_POS_SCHEMA if has_pos else SEGMENT_SCHEMA,
-    )
     if aff_buckets:
-        # kept rows of the touched buckets + the re-encoded rows: one
-        # (term, salt)-sorted file per bucket. A bucket left with no rows
-        # becomes a src=None swap entry. The sort leads with "bucket":
-        # the partitioned writer needs its input ordered by the
-        # partition column, and on any other ordering Spark plans its
-        # own sort by bucket alone and drops a (term, salt) sort below.
-        seg_patched = (
-            seg_aff.join(affected, "term", "left_anti")
-            .unionByName(re_encoded)
-            .repartition(len(aff_buckets), "bucket")
-            .sortWithinPartitions("bucket", "term", "salt")
+        dec_mode = "postings_lang_pos" if has_pos else "postings_lang"
+        seg_aff = spark.read.parquet(p.segments).filter(F.col("bucket").isin(aff_buckets))
+        old_postings = (
+            seg_aff.join(affected, "term", "left_semi")
+            .select(*_MODE_COLS[dec_mode])
+            .mapInArrow(
+                _decode_map(mode=dec_mode),
+                _POSTING_LANG_POS_SCHEMA if has_pos else _POSTING_LANG_SCHEMA,
+            )
         )
-        # positional grouped encode runs sort-based (see
-        # _sort_based_group_agg); the conf must be live while it runs
-        with _sort_based_group_agg(spark, has_pos):
-            e, t = _prepare_patch(seg_patched, p.segments, "bucket", aff_buckets)
+        # post-delta dfs of the affected terms, from the PATCHED
+        # term_stats plan (it reads only live pre-swap tables; the staged
+        # tmp can be empty for a no-op delta, so it is not re-read here).
+        # Kept rows of the touched buckets + the re-encoded rows: one
+        # (term, salt)-sorted file per bucket; a bucket left with no rows
+        # becomes a src=None swap entry.
+        e, t = write_segments(
+            spark,
+            old_postings.join(changed_ids, "doc_id", "left_anti").unionByName(new_terms_rows),
+            ts_patched.join(affected, "term", "left_semi"),
+            lambda seg: _prepare_patch(seg, p.segments, "bucket", aff_buckets),
+            n_docs=n_now,
+            avgdl=avgdl_now,
+            n_buckets=n_buckets,
+            max_postings_per_row=int(meta.get("max_postings_per_row", 200_000)),
+            has_pos=has_pos,
+            keep=seg_aff.join(affected, "term", "left_anti"),
+            n_parts=len(aff_buckets),
+        )
         swaps += e
         tmp_roots.append(t)
 

@@ -32,14 +32,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from micce_search_engine_spark.corpus import pages_spark_schema
+from micce_search_engine_spark.operators.index_build import _crc_bucket
 from micce_search_engine_spark.operators.upsert import apply_upsert
 from micce_search_engine_spark.plans.manifest import COMPLETED, Manifest
 
 PAGES_BUCKETS = 64
-
-
-def _pbucket_col(n_buckets: int):
-    return (F.crc32(F.encode(F.col("url"), "UTF-8")) % n_buckets).cast("int")
 
 
 def init_pages_store(
@@ -53,7 +50,7 @@ def init_pages_store(
 
     n_shuf = int(spark.conf.get("spark.sql.shuffle.partitions"))
     (
-        pages.withColumn("pbucket", _pbucket_col(n_buckets))
+        pages.withColumn("pbucket", _crc_bucket("url", n_buckets))
         .repartition(n_shuf, "pbucket")
         .write.mode("overwrite")
         .partitionBy("pbucket")
@@ -98,7 +95,7 @@ def run_live_index_once(
 
         pbuckets = sorted(
             r["b"]
-            for r in updates.select(_pbucket_col(pages_buckets).alias("b"))
+            for r in updates.select(_crc_bucket("url", pages_buckets).alias("b"))
             .distinct()
             .collect()
         )
@@ -110,7 +107,7 @@ def run_live_index_once(
         merged_sub = apply_upsert(spark, index_dir, old_sub, updates).persist()
         merged_sub.count()  # materialize before swapping source buckets
         _patch_partitions(
-            merged_sub.withColumn("pbucket", _pbucket_col(pages_buckets)),
+            merged_sub.withColumn("pbucket", _crc_bucket("url", pages_buckets)),
             pages_path,
             "pbucket",
             pbuckets,

@@ -457,6 +457,29 @@ def test_small_multi_term_search_runs_one_job(spark, tiny_index, synonyms):
         assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1, preload
 
 
+def test_small_phrase_skips_the_bound(spark, pos_index, synonyms):
+    """A phrase call whose postings fit one evaluation chunk runs ONE
+    Spark job, even where its df ratio meets ``phrase_block_factor``:
+    the bound's rarest-term and metadata jobs cost more than the
+    unbounded one-task decode they would bound."""
+    sc = spark.sparkContext
+    eng = SearchEngine(spark, pos_index, synonyms=synonyms)
+    eng.phrase_block_factor = 0
+    calls = []
+    orig = eng._phrase_block_join
+    eng._phrase_block_join = lambda seqs: calls.append(seqs) or orig(seqs)
+    first = eng.search_phrase("the of", limit=5, page=1)
+    try:
+        sc.setJobGroup("small-phrase", "one small phrase search")
+        again = eng.search_phrase("the of", limit=5, page=1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert again == first and first["total_hits"] > 0
+    assert calls == []
+    assert len(sc.statusTracker().getJobIdsForGroup("small-phrase")) == 1
+
+
 def test_queries_do_not_reopen_the_segments(spark, pos_index, synonyms, monkeypatch):
     """An unpinned engine resolves the segments relation once, at open:
     no search entry point reads parquet again — the single, phrase
@@ -464,9 +487,11 @@ def test_queries_do_not_reopen_the_segments(spark, pos_index, synonyms, monkeypa
     each filter the relation the engine holds."""
     from pyspark.sql.readwriter import DataFrameReader
 
+    import micce_search_engine_spark.operators.batch_query as bq
     from micce_search_engine_spark.operators.batch_query import search_batch_topk
 
     eng = SearchEngine(spark, pos_index, synonyms=synonyms)
+    monkeypatch.setattr(bq, "_chunk_rows", lambda n_terms: 0)  # the bound engages
     eng.phrase_block_factor = 0
     eng.wand_engage_factor = 0
     reads = []
@@ -580,7 +605,9 @@ def test_reduce_labels_its_jobs_with_the_shape(
         peng = SearchEngine(spark, pos_index, synonyms=synonyms)
         peng.phrase_block_factor = 0
         labelled(peng, "_phrase_block_join")
-        peng.search_phrase("the of", limit=5, page=1)
+        with monkeypatch.context() as m:  # the bound engages over one chunk
+            m.setattr(bq, "_chunk_rows", lambda n_terms: 0)
+            peng.search_phrase("the of", limit=5, page=1)
         assert sc.getLocalProperty("spark.job.description") == "caller"
         peng.wand_engage_factor = 0
         labelled(peng, "_term_ub_and_best")
@@ -601,7 +628,7 @@ def test_reduce_labels_its_jobs_with_the_shape(
         sc.setJobDescription(None)
     assert seen == [
         "search: one task", "search: condition",
-        "search: phrase bound", "search: one task",
+        "search: phrase bound", "search: doc_id shuffle",
         "search: wand probe", "search: one task", "search: one task",
         "search: single-term", "search: doc_id shuffle",
     ]

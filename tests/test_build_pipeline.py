@@ -149,3 +149,64 @@ def test_manifest_schema_and_metrics(spark, pages_pdf, tmp_path):
     # per-partition metric rows exist with real byte counts
     parts = m[(m.partition_id >= 0) & (m.stage == "S3_segments")]
     assert len(parts) > 0 and (parts["bytes_out"] > 0).all()
+
+
+def test_build_walks_no_directories_to_size_the_encode(spark, pages_pdf, tmp_path, monkeypatch):
+    """The segment encoder sizes its partitions from term_stats' Σ df:
+    no module under operators/ walks the index's directories. (The
+    manifest's per-file metrics, plans/manifest.py, still list each
+    stage's output files.)"""
+    import os
+    import sys
+
+    walk = os.walk
+
+    def guarded(top, *args, **kwargs):
+        caller = sys._getframe(1).f_globals.get("__name__", "")
+        assert not caller.startswith("micce_search_engine_spark.operators"), caller
+        return walk(top, *args, **kwargs)
+
+    monkeypatch.setattr(os, "walk", guarded)
+    _build(spark, pages_pdf, tmp_path / "nowalk")
+    assert _segments_canon(spark, tmp_path / "nowalk")
+
+
+def test_encode_partition_count_changes_no_segment(spark, pages_pdf, tmp_path, monkeypatch):
+    """A build and an upsert whose encode runs over many wave-aligned
+    partitions (ENCODE_ROWS_PER_PARTITION cut to 1000 rows) write the
+    same segments as at the default size."""
+    import micce_search_engine_spark.operators.index_build as ib
+    from micce_search_engine_spark.operators.upsert import apply_upsert
+
+    pages = spark.createDataFrame(pages_pdf, schema=pages_spark_schema())
+    updates = spark.createDataFrame(
+        [
+            (pages_pdf.url[0], "rewritten text the of alpha", None),
+            (pages_pdf.url[1], None, "de"),
+            ("https://zz.example/sizing", "fresh sizing page the", "en"),
+        ],
+        "url string, text string, lang string",
+    )
+    sizes = []
+    grouped = ib._grouped_postings
+
+    def spy(df, n_enc, with_positions):
+        sizes.append(n_enc)
+        return grouped(df, n_enc, with_positions)
+
+    canon = {}
+    for name in ("default", "small"):
+        if name == "small":
+            monkeypatch.setattr(ib, "ENCODE_ROWS_PER_PARTITION", 1000)
+            monkeypatch.setattr(ib, "_grouped_postings", spy)
+        path = tmp_path / name
+        _build(spark, pages_pdf, path, with_positions=True)
+        built = _segments_canon(spark, path)
+        apply_upsert(spark, str(path), pages, updates)
+        canon[name] = (built, _segments_canon(spark, path))
+    assert canon["small"] == canon["default"]
+    assert canon["default"][0] != canon["default"][1]
+    par = spark.sparkContext.defaultParallelism
+    n_shuf = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert len(sizes) == 2 and all(n % par == 0 for n in sizes), sizes
+    assert sizes[0] > n_shuf, sizes

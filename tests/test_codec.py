@@ -55,6 +55,37 @@ def test_block_subset_decode():
     assert np.array_equal(t, tfs[128:256])
 
 
+@given(st.integers(min_value=1, max_value=1200), st.randoms(use_true_random=False))
+@settings(max_examples=60, deadline=None)
+def test_masked_decode_is_filtered_full_decode(n, rng):
+    """A masked decode equals the full decode filtered to the selected
+    blocks, on every stream (doc, tf, dl, lang, positions): for the
+    empty, first, last, non-contiguous and all-blocks masks, and a
+    random one."""
+    docs = np.array(sorted(rng.sample(range(10 * n), n)), dtype=np.int64)
+    tfs = np.array([rng.randint(1, 6) for _ in docs], dtype=np.int64)
+    dls = np.array([rng.randint(1, 900) for _ in docs], dtype=np.int64)
+    langs = np.array([rng.randint(0, 200) for _ in docs], dtype=np.int64)
+    positions = [np.array(sorted(rng.sample(range(3000), int(t))), dtype=np.int64) for t in tfs]
+    enc = encode_postings(docs, tfs, tfs * 1.0, dls, langs, positions)
+    full = decode_postings(enc, want_lang=True, want_positions=True)
+    n_blocks = len(enc["block_first_doc"])
+    blk = np.arange(n) // 128  # block of each posting
+    pos_blk = np.repeat(blk, tfs)  # block of each position value
+    masks = [np.zeros(n_blocks, dtype=bool) for _ in range(5)]
+    masks[1][0] = True
+    masks[2][-1] = True
+    masks[3][::2] = True
+    masks[4][:] = True
+    masks.append(np.array([rng.random() < 0.5 for _ in range(n_blocks)]))
+    for mask in masks:
+        got = decode_postings(enc, mask, want_lang=True, want_positions=True)
+        keep = mask[blk]
+        want = [a[keep] for a in full[:4]] + [full[4][mask[pos_blk]]]
+        for g, w in zip(got, want):
+            assert g.dtype == np.int64 and np.array_equal(g, w), mask
+
+
 def test_blockmax_is_true_upper_bound():
     rng = np.random.default_rng(42)
     docs = np.sort(rng.choice(10**6, size=5000, replace=False)).astype(np.int64)
@@ -166,18 +197,16 @@ def test_lang_stream_roundtrip():
 
 
 def test_crc32_bucket_parity_with_spark(spark):
-    """upsert computes affected buckets with F.crc32 — must equal
-    bucket_of (zlib.crc32)."""
+    """upsert computes affected buckets with F.crc32 (_crc_bucket) —
+    must equal bucket_of (zlib.crc32)."""
     import zlib
 
-    from pyspark.sql import functions as F
-
-    from micce_search_engine_spark.operators.index_build import bucket_of
+    from micce_search_engine_spark.operators.index_build import _crc_bucket, bucket_of
 
     terms = ["the", "w000001", "日本語テスト", "naïve", "", "a" * 300]
     rows = (
         spark.createDataFrame([(t,) for t in terms], "term string")
-        .select("term", (F.crc32(F.encode(F.col("term"), "UTF-8")) % 16).alias("b"))
+        .select("term", _crc_bucket("term", 16).alias("b"))
         .collect()
     )
     for r in rows:

@@ -193,7 +193,9 @@ def test_phrase_search_cjk_bigrams(spark, tmp_path):
     assert sorted(url_of[d] for d, _ in res["results"]) == ["j0", "j3"], res
 
 
-def test_phrase_positional_decode_is_bounded(spark, tiny_pages_pdf, tmp_path_factory):
+def test_phrase_positional_decode_is_bounded(
+    spark, tiny_pages_pdf, tmp_path_factory, monkeypatch
+):
     """VERDICT r5 next #1: when the bound engages, the frequent phrase
     terms' streams must never be fully decoded — the only full decode
     is the RAREST term's cheap (score) stream, and the evaluator's one
@@ -202,7 +204,9 @@ def test_phrase_positional_decode_is_bounded(spark, tiny_pages_pdf, tmp_path_fac
     every decode reads (the fused shapes bypass _postings); the
     disengaged plan must return identical results. Each phrase of a
     batch (incl. a 1-token phrase, which needs the full decode) matches
-    exactly what it matches alone."""
+    exactly what it matches alone. The bound is tried only for calls
+    over the one-chunk bound, so the tiny index is pushed over it."""
+    import micce_search_engine_spark.operators.batch_query as bq
     from micce_search_engine_spark.corpus import pages_spark_schema
     from micce_search_engine_spark.operators.batch_query import search_batch
     from micce_search_engine_spark.operators.index_build import build_index
@@ -231,6 +235,7 @@ def test_phrase_positional_decode_is_bounded(spark, tiny_pages_pdf, tmp_path_fac
         calls.clear()
 
     eng._segment_scan = spy
+    monkeypatch.setattr(bq, "_chunk_rows", lambda n_terms: 0)
     eng.phrase_block_factor = 0  # force block-selection engagement
     res = eng.search_phrase("the of", limit=10, page=1)
     assert res["total_hits"] > 0

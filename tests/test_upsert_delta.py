@@ -343,6 +343,64 @@ def test_upsert_preserves_positions(spark, tmp_path):
     assert res["total_hits"] == 3
 
 
+def _decoded_postings(spark, idx):
+    """Every posting of an index: (term, doc_id, tf, dl, lang, positions)."""
+    import json
+
+    import numpy as np
+
+    from micce_search_engine_spark.functions.codec import decode_postings
+
+    with open(os.path.join(idx, "meta.json")) as f:
+        langs = json.load(f)["langs"]
+    out = []
+    for r in spark.read.parquet(os.path.join(idx, "segments")).collect():
+        d, t, dl, g, pos = decode_postings(r.asDict(), want_lang=True, want_positions=True)
+        ends = np.cumsum(t)
+        for i in range(d.size):
+            out.append(
+                (r["term"], int(d[i]), int(t[i]), int(dl[i]), langs[g[i]],
+                 tuple(pos[ends[i] - t[i] : ends[i]].tolist()))
+            )
+    return sorted(out)
+
+
+def test_upsert_equals_rebuild(spark, tmp_path):
+    """An upserted positional index stores what build_index writes over
+    the merged pages with the upsert's doc ids: the same postings
+    (term, doc, tf, dl, lang, positions), term_stats, stats and docs.
+    The delta rewrites, inserts and flips one doc's lang to another
+    existing lang; a hot term is salted before and after it."""
+    pdf = gen_pages(300, seed=29)
+    pages = spark.createDataFrame(pdf, schema=pages_spark_schema())
+    kw = dict(n_buckets=4, max_postings_per_row=60, with_positions=True)
+    up = str(tmp_path / "upserted")
+    build_index(spark, pages, up, **kw)
+    flip = "de" if pdf.lang[20] != "de" else "en"
+    updates = spark.createDataFrame(
+        [(pdf.url[i], f"rewritten the of w{i:06d} text", None) for i in range(8)]
+        + [(pdf.url[20], None, flip)]
+        + [(f"https://zz.example/rb{i}", f"the new page of w{i:06d}", "en") for i in range(4)],
+        "url string, text string, lang string",
+    )
+    merged = apply_upsert(spark, up, pages, updates)
+    ids = spark.read.parquet(os.path.join(up, "docs")).select("url", "doc_id")
+    rb = str(tmp_path / "rebuilt")
+    build_index(spark, merged.join(ids, "url"), rb, doc_id_col="doc_id", **kw)
+
+    def table(idx, name, cols):
+        return sorted(tuple(r) for r in spark.read.parquet(os.path.join(idx, name)).select(*cols).collect())
+
+    for idx in (up, rb):
+        assert spark.read.parquet(os.path.join(idx, "segments")).filter("term = 'the'").count() > 1
+    assert _decoded_postings(spark, up) == _decoded_postings(spark, rb)
+    assert table(up, "term_stats", ["term", "df", "cf"]) == table(rb, "term_stats", ["term", "df", "cf"])
+    stats = ["N", "sum_dl", "max_doc_id"]
+    assert table(up, "stats", stats) == table(rb, "stats", stats)
+    docs = ["doc_id", "url", "warc_ts", "lang", "dl"]
+    assert table(up, "docs", docs) == table(rb, "docs", docs)
+
+
 def _count_actions(monkeypatch):
     """Wrap the driver actions apply_upsert issues and return the call
     log. On PySpark 4 the concrete frame is the classic DataFrame; the
