@@ -28,10 +28,15 @@ one — compiles into the same plan (SURVEY.md §2D):
 A doc's branch candidacy needs all of its postings in one chunk of one
 task, so a call runs in one of three shapes, tried in this order:
 
-  * one task: the call's postings fit one evaluation chunk (sum of its
-    terms' df <= ``_chunk_rows``): decode and evaluation fuse into one
-    mapInArrow over the pruned segment scan coalesced to one partition,
-    which is evaluated as a single chunk — no shuffle, one Spark job;
+  * one task: the call fits one task (``_one_task_fit``): either its
+    sum of dfs is within one evaluation chunk (``_chunk_rows``), or,
+    for a call without positions that would otherwise take the doc_id
+    shuffle, its panel bound min(sum df, N) x vocabulary is within
+    ``_PANEL_CELLS`` (8M cells) and its sum of dfs within
+    ``_ONE_TASK_POSTINGS`` (2M postings). Decode and evaluation fuse
+    into one mapInArrow over the pruned segment scan coalesced to one
+    partition, which is evaluated as a single chunk — no shuffle, one
+    Spark job;
   * single-term: every query has exactly one distinct term. A doc holds
     at most one posting of a term, so decode and evaluation fuse into
     one mapInArrow per segment-scan partition, with no shuffle;
@@ -55,7 +60,8 @@ bounded to the blocks holding a doc of each phrase's rarest term
 ``multifield.multifield_scored`` runs the same kernel over a
 field-qualified vocabulary and emits every match unreduced
 (``_hits_fn``), for ``ConditionEngine`` to filter, join and reduce; it
-takes the one-task shape on the same bound, else the doc_id shuffle.
+takes the one-task shape by the same rule (dfs and N summed over the
+fields), else the doc_id shuffle.
 
 ``search_batch_topk`` is the WAND-pruned variant: one probe pass over
 every term's best block yields per-query k-th-best lower bounds,
@@ -100,6 +106,16 @@ DRIVER_MERGE_MAX_ROWS = 2_000_000
 #: memory to ~chunk_docs x n_terms doubles regardless of partition size
 _EVAL_CHUNK_ROWS = 65_536
 
+#: cells (docs x vocabulary) of one dense wf panel: 8M float64 cells
+#: are 64 MB
+_PANEL_CELLS = 8_000_000
+
+#: postings one task decodes in the ``one task`` shape past one chunk:
+#: its decoded arrays (term id, doc, wf, lang, position count; 40 B a
+#: posting) are ~80 MB, ~160 MB while the buffered batches are
+#: concatenated into the one chunk
+_ONE_TASK_POSTINGS = 2_000_000
+
 
 def _query_terms(engine: SearchEngine, q: dict) -> list[str]:
     return sorted({t for b in expand_branches(q["query_text"], engine.synonyms) for t in b})
@@ -142,10 +158,46 @@ def _compile(engine: SearchEngine, queries: list[dict]):
 
 
 def _chunk_rows(n_terms: int) -> int:
-    """Postings per evaluation chunk: the dense panel stays <= ~8M cells
-    (64 MB of float64) even when every row is a distinct doc and the
-    batch vocabulary is at its largest."""
-    return max(4096, min(_EVAL_CHUNK_ROWS, 8_000_000 // max(n_terms, 1)))
+    """Postings per evaluation chunk: the dense panel stays within
+    ``_PANEL_CELLS`` even when every posting is a distinct doc. A call
+    whose sum df is within it fits one task as one chunk; past it,
+    ``_one_task_fit`` bounds the panel by the call's distinct docs and
+    its postings by ``_ONE_TASK_POSTINGS``."""
+    return max(4096, min(_EVAL_CHUNK_ROWS, _PANEL_CELLS // max(n_terms, 1)))
+
+
+def _one_task_fit(engines: list[SearchEngine], terms: list[str], positional: bool):
+    """How a call over ``terms`` in ``engines`` (one per field of a
+    multifield call) fits the ``one task`` shape, its whole pruned scan
+    decoded and evaluated as ONE chunk in one task:
+
+      * ``"chunk"``: its sum df is within ``_chunk_rows`` of its
+        vocabulary, so it is one evaluation chunk of any shape;
+      * ``"panel"``: a call without positions whose panel bound,
+        min(sum df, N) rows by one column per (engine, term), is within
+        ``_PANEL_CELLS`` and whose sum df is within
+        ``_ONE_TASK_POSTINGS``;
+      * None: neither.
+
+    dfs and N are summed over the engines, so N holds across fields.
+    A ``"panel"`` task holds at most 2M decoded postings (~80 MB, twice
+    that while they are concatenated) and a panel of at most 8M cells
+    (64 MB). dfs do not count positions, so a call with positions fits
+    only as one chunk. Callers take a ``"panel"`` fit only where the
+    alternative is the doc_id shuffle. The dfs ride the term-df cache
+    ``idf_map`` fills; a term missing from it never fits."""
+    sum_df = sum(e._df_cache.get(t, float("inf")) for e in engines for t in terms)
+    n_cols = len(engines) * len(terms)
+    if sum_df <= _chunk_rows(n_cols):
+        return "chunk"
+    n_docs = sum(e.N for e in engines)
+    if (
+        not positional
+        and sum_df <= _ONE_TASK_POSTINGS
+        and min(sum_df, n_docs) * n_cols <= _PANEL_CELLS
+    ):
+        return "panel"
+    return None
 
 
 def _posting_arrays(batch, term_to_tid):
@@ -367,24 +419,23 @@ def _eval_plan(
     programs, tid, terms = _compile(engine, queries)
     if not programs:
         return None
-    # _compile's idf_map cached every term's df (a call with a term
-    # already evicted from the bounded cache never fits)
-    sum_df = sum(engine._df_cache.get(t, float("inf")) for t in terms)
-    fits = sum_df <= _chunk_rows(len(terms))
     seqs = [s for p in programs for s in p[4]]
+    positional = any(s is not None for s in seqs)
+    # _compile's idf_map cached every term's df
+    fit = _one_task_fit([engine], terms, positional)
     mode = "score_lang"
-    if any(s is not None for s in seqs):
+    if positional:
         engine._require_positions()
         mode = "score_lang_pos"
         # the phrase bound's own jobs cost more than the unbounded decode
         # of a call that fits one chunk
-        if not fits and block_join is None and all(s is not None for s in seqs):
+        if fit is None and block_join is None and all(s is not None for s in seqs):
             with _described(engine.spark, "search: phrase bound"):
                 block_join = engine._phrase_block_join([[terms[t] for t in s] for s in seqs])
-    if fits:
+    if fit == "chunk":
         # every posting of the call fits one evaluation chunk: read the
         # whole scan in one task and evaluate it as one chunk, so each
-        # doc's postings are together with no shuffle (the df sum only
+        # doc's postings are together with no shuffle (the fit only
         # picks the shape; one chunk is correct whatever it holds)
         shape = "one task"
     elif all(len(p[2]) == 1 for p in programs):
@@ -393,6 +444,10 @@ def _eval_plan(
         # needs a doc's postings co-located — evaluate where they are
         # decoded, in the same Python pass, with no shuffle
         shape = "single-term"
+    elif fit == "panel":
+        # over one chunk, but the call's panel and postings fit one
+        # task: one chunk there beats the doc_id shuffle
+        shape = "one task"
     else:
         shape = "doc_id shuffle"
     ev = _batch_eval_fn(programs, tid, maxk, shape)

@@ -23,8 +23,9 @@ Engine realization:
     field-qualified vocabulary — a branch per field x OR branch, a
     score term per field x term with that field's idf. Each field is
     decoded once (its lang filter on its own lang ids), the fields are
-    unioned — coalesced to one task when the call's postings fit one
-    evaluation chunk, else repartitioned by doc_id once — and one
+    unioned — coalesced to one task when the call fits one task
+    (batch_query's ``_one_task_fit``, with dfs and N summed over the
+    fields), else repartitioned by doc_id once — and one
     mapInArrow emits every doc where SOME field fully matched SOME
     branch (adjacency for phrase branches), scored by the cross-field
     fixed-point BM25 sum;
@@ -110,8 +111,13 @@ def multifield_scored(
 
     Runs as ONE program of the BM25 evaluator over the field-qualified
     vocabulary ``"<field index>:<term>"`` (see "Engine realization"), in
-    one task when the call's postings fit one evaluation chunk."""
-    from micce_search_engine_spark.operators.batch_query import _chunk_rows, _hits_fn
+    one task when the call fits one task (``_one_task_fit`` over every
+    field's engine)."""
+    from micce_search_engine_spark.operators.batch_query import (
+        _chunk_rows,
+        _hits_fn,
+        _one_task_fit,
+    )
 
     branches = expand_branches(query_text, synonyms)
     if not branches:
@@ -142,17 +148,17 @@ def multifield_scored(
         parts.append(post)
     program = (0, -1, sterms, fbranches, seqs)
     union = reduce(DataFrame.union, parts)
-    # idf_map cached every field's dfs: when all the postings fit one
-    # evaluation chunk, evaluate them in one task as one chunk, with no
-    # doc_id shuffle (batch_query's "one task" shape)
-    rows = _chunk_rows(len(keys))
-    if sum(eng._df_cache.get(t, float("inf")) for eng in fields for t in terms) <= rows:
+    # idf_map cached every field's dfs: when the call fits one task (its
+    # panel has one row per distinct doc, whichever field holds it, so
+    # N is summed over the fields), evaluate it there as one chunk, with
+    # no doc_id shuffle (batch_query's "one task" shape)
+    if _one_task_fit(fields, terms, phrase) is not None:
         return union.coalesce(1).mapInArrow(_hits_fn(program, tid, None), _HITS_SCHEMA)
     n_shuf = int(fields[0].spark.conf.get("spark.sql.shuffle.partitions"))
     return (
         union.repartition(n_shuf, "doc_id")
         .sortWithinPartitions("doc_id")
-        .mapInArrow(_hits_fn(program, tid, rows), _HITS_SCHEMA)
+        .mapInArrow(_hits_fn(program, tid, _chunk_rows(len(keys))), _HITS_SCHEMA)
     )
 
 

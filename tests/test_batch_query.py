@@ -242,7 +242,7 @@ def test_single_term_chunks_fit_the_scan_partitions(spark, tiny_index, synonyms,
     tiny calls are pushed over the one-task bound."""
     import micce_search_engine_spark.operators.batch_query as bq
 
-    monkeypatch.setattr(bq, "_chunk_rows", lambda n_terms: 0)
+    monkeypatch.setattr(bq, "_one_task_fit", lambda *args: None)
     eng = SearchEngine(spark, tiny_index, synonyms=synonyms)
     specs = [  # distinct terms spread over the buckets: several scan partitions
         {"query_id": i, "query_text": f"w{i:06d}", "lang_filter": None, "limit": 10, "page": 1}
@@ -379,7 +379,7 @@ def _final_plan(df) -> list[str]:
     ],
 )
 def test_eval_plan_shape(request, spark, synonyms, monkeypatch, texts, n_exchanges):
-    """A call whose postings fit one evaluation chunk (every call on the
+    """A call that fits one task (``_one_task_fit``; every call on the
     tiny index) reads its scan coalesced to ONE task, with no Exchange.
     Pushed over that bound, single-term calls run shuffle-free per scan
     partition and every other call repartitions the decoded postings by
@@ -411,7 +411,7 @@ def test_eval_plan_shape(request, spark, synonyms, monkeypatch, texts, n_exchang
     assert not ex, ex
     assert [ln.lstrip("+- ") for ln in plan if "Coalesce" in ln] == ["Coalesce 1"], plan
 
-    monkeypatch.setattr(bq, "_chunk_rows", lambda n_terms: 0)
+    monkeypatch.setattr(bq, "_one_task_fit", lambda *args: None)
     shape, plan, ex = shape_and_plan()
     assert shape == ("doc_id shuffle" if n_exchanges else "single-term")
     assert not [ln for ln in plan if "Coalesce" in ln], plan
@@ -435,7 +435,7 @@ def salted_pos_index(spark, tiny_pages_pdf, tmp_path_factory):
 
 
 def test_small_multi_term_search_runs_one_job(spark, tiny_index, synonyms):
-    """A multi-term search whose postings fit one evaluation chunk runs
+    """A multi-term search that fits one task (``_one_task_fit``) runs
     ONE Spark job, on a pinned and on an unpinned index: no doc_id
     shuffle stage in front of the evaluator, and no listing or schema
     inference of the segments (resolved once, at open). A first call
@@ -458,7 +458,7 @@ def test_small_multi_term_search_runs_one_job(spark, tiny_index, synonyms):
 
 
 def test_small_phrase_skips_the_bound(spark, pos_index, synonyms):
-    """A phrase call whose postings fit one evaluation chunk runs ONE
+    """A phrase call that fits one task (``_one_task_fit``) runs ONE
     Spark job, even where its df ratio meets ``phrase_block_factor``:
     the bound's rarest-term and metadata jobs cost more than the
     unbounded one-task decode they would bound."""
@@ -491,7 +491,7 @@ def test_queries_do_not_reopen_the_segments(spark, pos_index, synonyms, monkeypa
     from micce_search_engine_spark.operators.batch_query import search_batch_topk
 
     eng = SearchEngine(spark, pos_index, synonyms=synonyms)
-    monkeypatch.setattr(bq, "_chunk_rows", lambda n_terms: 0)  # the bound engages
+    monkeypatch.setattr(bq, "_one_task_fit", lambda *args: None)  # the bound engages
     eng.phrase_block_factor = 0
     eng.wand_engage_factor = 0
     reads = []
@@ -510,7 +510,7 @@ def test_queries_do_not_reopen_the_segments(spark, pos_index, synonyms, monkeypa
 
 
 def test_one_task_matches_doc_id_shuffle(spark, salted_pos_index, monkeypatch):
-    """Every call on the tiny index fits one evaluation chunk. The same
+    """Every call on the tiny index fits one task. The same
     calls pushed over that bound (the doc_id shuffle; the single-term
     plan for a single-term call) return the same pages and totals:
     multi-term, synonym OR branches, lang filter, phrases with and
@@ -556,10 +556,182 @@ def test_one_task_matches_doc_id_shuffle(spark, salted_pos_index, monkeypatch):
     assert set(shapes) == {"one task"}, shapes
     assert one[0] and all(r["results"] for r in one[1:]), one
     shapes.clear()
+    monkeypatch.setattr(bq, "_one_task_fit", lambda *args: None)
+    # and cut every Arrow batch into chunks at doc boundaries
     monkeypatch.setattr(bq, "_chunk_rows", lambda n_terms: 0)
     over = run()
     assert "one task" not in shapes and {"doc_id shuffle", "single-term"} <= set(shapes)
     assert over == one
+
+
+def test_wide_batch_runs_one_task(spark, tiny_index, synonyms, oracle, monkeypatch):
+    """A batch whose sum df exceeds one evaluation chunk (``_chunk_rows``)
+    but whose panel (N x vocabulary) fits ``_PANEL_CELLS`` runs in the
+    one-task shape: ONE Spark job, described ``search: one task``. Its
+    pages and totals equal those of the forced doc_id shuffle."""
+    import micce_search_engine_spark.operators.batch_query as bq
+
+    eng = SearchEngine(spark, tiny_index, synonyms=synonyms)
+    hot = sorted(oracle.df, key=lambda t: (-oracle.df[t], t))[:300]
+    specs = SPECS + [
+        {"query_id": 100 + i, "query_text": t, "lang_filter": None,
+         "limit": 1 + i % 7, "page": 1 + i % 3}
+        for i, t in enumerate(hot)
+    ]
+    terms = bq._compile(eng, specs)[2]
+    sum_df = sum(eng._df_cache[t] for t in terms)
+    assert sum_df > bq._chunk_rows(len(terms))
+    assert eng.N * len(terms) <= bq._PANEL_CELLS
+    sc = spark.sparkContext
+    shapes, descs = [], []
+    eval_plan, merge = bq._eval_plan, bq._merge_reduced
+
+    def spy_plan(*args, **kwargs):
+        out = eval_plan(*args, **kwargs)
+        shapes.append(out[1])
+        return out
+
+    def spy_merge(plan):
+        descs.append(sc.getLocalProperty("spark.job.description"))
+        return merge(plan)
+
+    monkeypatch.setattr(bq, "_eval_plan", spy_plan)
+    monkeypatch.setattr(bq, "_merge_reduced", spy_merge)
+    try:
+        sc.setJobGroup("wide-batch", "a batch over one evaluation chunk")
+        totals, pages = bq._batch_pages(eng, specs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert shapes == ["one task"] and descs == ["search: one task"]
+    assert len(sc.statusTracker().getJobIdsForGroup("wide-batch")) == 1
+    assert len(pages) > 300 and totals
+
+    shapes.clear()
+    monkeypatch.setattr(bq, "_one_task_fit", lambda *args: None)
+    over_totals, over_pages = bq._batch_pages(eng, specs)
+    assert shapes == ["doc_id shuffle"]
+    assert over_totals == totals
+    assert over_pages.equals(pages)
+
+
+def test_one_task_fit_bounds_the_task():
+    """``_one_task_fit`` is ``"chunk"`` when the call's sum df is within
+    one evaluation chunk, ``"panel"`` when a call without positions
+    keeps its decoded postings within ``_ONE_TASK_POSTINGS`` and its
+    dense panel, min(sum df, N) rows by one column per (field, term),
+    within ``_PANEL_CELLS``, else None; a multifield call's dfs and N
+    are summed over its fields' engines."""
+    from types import SimpleNamespace
+
+    import micce_search_engine_spark.operators.batch_query as bq
+
+    def eng(n_docs, sum_df, n_terms):
+        """An engine whose first of ``n_terms`` terms holds every posting."""
+        df = {f"t{i}": 0 for i in range(n_terms)}
+        df["t0"] = sum_df
+        return SimpleNamespace(N=n_docs, _df_cache=df), sorted(df)
+
+    def fit(n_docs, sum_df, n_terms, positional=False):
+        e, terms = eng(n_docs, sum_df, n_terms)
+        return bq._one_task_fit([e], terms, positional)
+
+    assert (bq._PANEL_CELLS, bq._ONE_TASK_POSTINGS) == (8_000_000, 2_000_000)
+    # one evaluation chunk, with or without positions
+    assert bq._chunk_rows(1) == 65_536
+    assert fit(10**7, 65_536, 1) == fit(10**7, 65_536, 1, True) == "chunk"
+    # past one chunk only a call without positions fits
+    assert fit(10**7, 65_537, 1) == "panel"
+    assert fit(10**7, 65_537, 1, True) is None
+    # perfbench's b100 and b300 calls on its 10k-doc index
+    assert fit(10_000, 229_880, 118) == fit(10_000, 306_313, 261) == "panel"
+    # the panel at the budget, one column over it
+    assert fit(100_000, 1_000_000, 80) == "panel"
+    assert fit(100_000, 1_000_000, 81) is None
+    # the postings at the cap, one posting over it
+    assert fit(10, 2_000_000, 1) == "panel"
+    assert fit(10, 2_000_001, 1) is None
+    # a term missing from the df cache never fits
+    e, _ = eng(10, 1, 1)
+    assert bq._one_task_fit([e], ["t0", "missing"], False) is None
+    # multifield: N, the dfs and the columns add up over the fields
+    (f1, terms), (f2, _) = eng(60_000, 250_000, 66), eng(60_000, 250_000, 66)
+    assert bq._one_task_fit([f1], terms, False) == "panel"
+    assert bq._one_task_fit([f1, f2], terms, False) is None
+    (g1, terms), (g2, _) = eng(1, 1_500_000, 1), eng(1, 1_500_000, 1)
+    assert bq._one_task_fit([g1], terms, False) == "panel"
+    assert bq._one_task_fit([g1, g2], terms, False) is None
+
+
+def test_over_either_bound_falls_back(
+    spark, tiny_index, pos_index, synonyms, monkeypatch
+):
+    """Over one evaluation chunk, a multi-term call one cell over the
+    panel budget, or one posting over the postings cap, leaves the
+    one-task shape for the doc_id shuffle — the multifield call too,
+    whose panel counts N over both fields. A single-term call over one
+    chunk keeps the single-term shape, and a phrase call the doc_id
+    shuffle, however its panel fits."""
+    import micce_search_engine_spark.operators.batch_query as bq
+    from micce_search_engine_spark.operators.multifield import multifield_scored
+
+    eng = SearchEngine(spark, tiny_index, synonyms=synonyms)
+
+    def spec(text, phrase=False):
+        return [{"query_id": 0, "query_text": text, "lang_filter": None,
+                 "limit": 5, "page": 1, "phrase": phrase}]
+
+    def shape(text, e=eng, phrase=False):
+        return bq._eval_plan(e, spec(text, phrase), 5)[1]
+
+    eng.idf_map(["the", "of"])
+    df_the, df_of = eng._df_cache["the"], eng._df_cache["of"]
+    sum_df, cells = df_the + df_of, min(df_the + df_of, eng.N) * 2
+    # within one chunk, the postings cap does not apply
+    with monkeypatch.context() as m:
+        m.setattr(bq, "_ONE_TASK_POSTINGS", 0)
+        assert shape("the of") == "one task"
+    monkeypatch.setattr(bq, "_chunk_rows", lambda n_terms: 0)
+    for name, at in (("_PANEL_CELLS", cells), ("_ONE_TASK_POSTINGS", sum_df)):
+        with monkeypatch.context() as m:
+            m.setattr(bq, name, at)
+            assert shape("the of") == "one task", name
+            assert shape("the") == "single-term", name
+            m.setattr(bq, name, at - 1)
+            assert shape("the of") == "doc_id shuffle", name
+            assert shape("the") == "single-term", name
+    # positions are not counted by dfs: a phrase call over one chunk
+    # never takes the panel fit
+    peng = SearchEngine(spark, pos_index, synonyms=synonyms)
+    peng.phrase_block_factor = 10**9  # the bound never pays
+    assert shape("the of", peng, phrase=True) == "doc_id shuffle"
+
+    engines = {"body": eng, "copy": eng}
+    mf_sum_df = 2 * sum_df
+    mf_cells = min(mf_sum_df, 2 * eng.N) * 4  # 2 fields x 2 terms
+    assert mf_cells > min(mf_sum_df, eng.N) * 4
+
+    def mf_plan(phrase=False):
+        return _final_plan(multifield_scored(engines, "the of", synonyms, phrase=phrase))
+
+    def mf_shuffles(plan):
+        ex = [ln for ln in plan if "Exchange" in ln]
+        return (
+            not [ln for ln in plan if "Coalesce" in ln]
+            and len(ex) == 1
+            and "hashpartitioning(doc_id" in ex[0]
+        )
+
+    for name, at in (("_PANEL_CELLS", mf_cells), ("_ONE_TASK_POSTINGS", mf_sum_df)):
+        with monkeypatch.context() as m:
+            m.setattr(bq, name, at)
+            plan = mf_plan()
+            assert [ln.lstrip("+- ") for ln in plan if "Coalesce" in ln] == ["Coalesce 1"]
+            assert not [ln for ln in plan if "Exchange" in ln], plan
+            m.setattr(bq, name, at - 1)
+            assert mf_shuffles(mf_plan()), name
+    engines = {"body": peng, "copy": peng}
+    assert mf_shuffles(mf_plan(phrase=True))
 
 
 def test_reduce_labels_its_jobs_with_the_shape(
@@ -605,15 +777,15 @@ def test_reduce_labels_its_jobs_with_the_shape(
         peng = SearchEngine(spark, pos_index, synonyms=synonyms)
         peng.phrase_block_factor = 0
         labelled(peng, "_phrase_block_join")
-        with monkeypatch.context() as m:  # the bound engages over one chunk
-            m.setattr(bq, "_chunk_rows", lambda n_terms: 0)
+        with monkeypatch.context() as m:  # the bound engages over one task
+            m.setattr(bq, "_one_task_fit", lambda *args: None)
             peng.search_phrase("the of", limit=5, page=1)
         assert sc.getLocalProperty("spark.job.description") == "caller"
         peng.wand_engage_factor = 0
         labelled(peng, "_term_ub_and_best")
         peng.search("the of", limit=5, page=1, topk_only=True)
         assert sc.getLocalProperty("spark.job.description") == "caller"
-        monkeypatch.setattr(bq, "_chunk_rows", lambda n_terms: 0)
+        monkeypatch.setattr(bq, "_one_task_fit", lambda *args: None)
         eng.search("the", limit=5, page=1)
         eng.search("the of", limit=5, page=1)
         assert sc.getLocalProperty("spark.job.description") == "caller"

@@ -205,7 +205,7 @@ def test_phrase_positional_decode_is_bounded(
     disengaged plan must return identical results. Each phrase of a
     batch (incl. a 1-token phrase, which needs the full decode) matches
     exactly what it matches alone. The bound is tried only for calls
-    over the one-chunk bound, so the tiny index is pushed over it."""
+    over the one-task bound, so the tiny index is pushed over it."""
     import micce_search_engine_spark.operators.batch_query as bq
     from micce_search_engine_spark.corpus import pages_spark_schema
     from micce_search_engine_spark.operators.batch_query import search_batch
@@ -235,6 +235,8 @@ def test_phrase_positional_decode_is_bounded(
         calls.clear()
 
     eng._segment_scan = spy
+    monkeypatch.setattr(bq, "_one_task_fit", lambda *args: None)
+    # and cut every Arrow batch into chunks at doc boundaries
     monkeypatch.setattr(bq, "_chunk_rows", lambda n_terms: 0)
     eng.phrase_block_factor = 0  # force block-selection engagement
     res = eng.search_phrase("the of", limit=10, page=1)

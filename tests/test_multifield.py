@@ -316,8 +316,8 @@ def test_multifield_plan_is_one_evaluator_pass(spark, mf_lang_env, monkeypatch, 
     """Bag and phrase queries over two fields decode each field once, in
     the evaluator's lang-carrying mode (never the lang-free ``score``
     mode), with no Aggregate: the fields' postings meet in one evaluator
-    pass, not in per-field aggregates. A call whose postings fit one
-    evaluation chunk reads them in ONE task (one ``Coalesce 1``, no
+    pass, not in per-field aggregates. A call that fits one task
+    (``_one_task_fit``) reads them in ONE task (one ``Coalesce 1``, no
     Exchange); over that bound it runs one doc_id Exchange."""
     import micce_search_engine_spark.operators.batch_query as bq
 
@@ -343,16 +343,16 @@ def test_multifield_plan_is_one_evaluator_pass(spark, mf_lang_env, monkeypatch, 
     assert not ex, plan
     assert [ln.lstrip("+- ") for ln in plan if "Coalesce" in ln] == ["Coalesce 1"], plan
 
-    monkeypatch.setattr(bq, "_chunk_rows", lambda n_terms: 0)
+    monkeypatch.setattr(bq, "_one_task_fit", lambda *args: None)
     plan, ex = plan_and_exchanges()
     assert len(ex) == 1 and "hashpartitioning(doc_id" in ex[0], plan
     assert not [ln for ln in plan if "Coalesce" in ln], plan
 
 
 def test_multifield_one_task_matches_doc_id_shuffle(spark, mf_lang_env, monkeypatch):
-    """The one-task shape and the doc_id shuffle (forced by a zero
-    chunk bound) return the same rows for bag, synonym, phrase and
-    lang-filtered calls."""
+    """The one-task shape and the doc_id shuffle (forced by a
+    ``_one_task_fit`` that never fits) return the same rows for bag,
+    synonym, phrase and lang-filtered calls."""
     import micce_search_engine_spark.operators.batch_query as bq
 
     _, _, engines = mf_lang_env
@@ -369,6 +369,8 @@ def test_multifield_one_task_matches_doc_id_shuffle(spark, mf_lang_env, monkeypa
 
     one = run()
     assert all(one), [len(r) for r in one]
+    monkeypatch.setattr(bq, "_one_task_fit", lambda *args: None)
+    # and cut every Arrow batch into chunks at doc boundaries
     monkeypatch.setattr(bq, "_chunk_rows", lambda n_terms: 0)
     assert run() == one
 

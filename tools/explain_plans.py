@@ -5,11 +5,15 @@ Evidence that the plans are the ones you'd want at 100 TB:
     ReadSchema (no blob columns in metadata-only scans);
   * small sides broadcast (BroadcastHashJoin / BroadcastExchange);
   * every keyword query runs through one vectorized BM25 evaluator
-    (MapInArrow): in one task when the call's postings fit one
-    evaluation chunk, else with at most one doc_id Exchange in front;
+    (MapInArrow): in one task when the call fits one task
+    (``batch_query._one_task_fit``: its sum df within one evaluation
+    chunk, or, for a keyword call that would otherwise shuffle, its
+    panel, min(sum df, N) x vocabulary, within 8M cells and its sum df
+    within 2M postings), a batch of 100 queries included, else with at
+    most one doc_id Exchange in front;
   * a multi-field keyword query is one evaluator program too: one
     decode per field, no aggregate, and in one task (Coalesce 1, no
-    Exchange) when its postings fit one evaluation chunk;
+    Exchange) when it fits one task;
   * the LSH ANN indexed path shows bucket partition pruning.
 
 Usage: python tools/explain_plans.py [n_docs]
@@ -37,7 +41,12 @@ def main() -> None:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 20_000
     import shutil
 
-    from micce_search_engine_spark.corpus import gen_pages, gen_synonyms, pages_spark_schema
+    from micce_search_engine_spark.corpus import (
+        gen_pages,
+        gen_queries,
+        gen_synonyms,
+        pages_spark_schema,
+    )
     from micce_search_engine_spark.operators import batch_query as bq
     from micce_search_engine_spark.operators.batch_query import (
         _batch_wand_selection,
@@ -71,21 +80,41 @@ def main() -> None:
     # the one BM25 evaluator, in its three plan shapes
     sections.append(
         (
-            "BM25 evaluator, a call that fits one evaluation chunk (one task)",
-            "Look for: NO Exchange anywhere — the call's postings (sum of its "
-            "terms' df) fit one evaluation chunk, so the bucket-pruned segment "
-            "scan (PartitionFilters [bucket IN ...], PushedFilters In(term, "
-            "...), ReadSchema WITHOUT unused blob columns) is read through "
-            "Coalesce 1 into ONE MapInArrow that decodes and evaluates the "
-            "whole task as one chunk: one task, one Spark job.",
+            "BM25 evaluator, a call that fits one task",
+            "Look for: NO Exchange anywhere — the call's postings (sum of "
+            "its terms' df) fit one evaluation chunk, so the bucket-pruned "
+            "segment scan (PartitionFilters "
+            "[bucket IN ...], PushedFilters In(term, ...), ReadSchema "
+            "WITHOUT unused blob columns) is read through Coalesce 1 into "
+            "ONE MapInArrow that decodes and evaluates the whole task as "
+            "one chunk: one task, one Spark job.",
             plan([spec(0, "the w000001", lang="en")]),
         )
     )
 
-    # every small call on this index fits one chunk: push the calls below
+    # a batch of 100 queries: its sum df is over one evaluation chunk,
+    # but its panel fits, so it runs in one task too
+    batch = gen_queries(seed=42, n=100).to_dict("records")
+    terms = bq._compile(eng, batch)[2]
+    sum_df = sum(eng._df_cache[t] for t in terms)
+    sections.append(
+        (
+            "BM25 evaluator, a batch of 100 queries that fits one task",
+            f"The batch has {len(terms)} distinct terms with sum df {sum_df:,} "
+            f"(one evaluation chunk holds {bq._chunk_rows(len(terms)):,} "
+            f"postings) over N = {eng.N:,} docs: its panel bound "
+            f"{min(sum_df, eng.N) * len(terms):,} cells is within 8M and its "
+            "sum df within 2M postings. Look for: the same shape as the "
+            "single call — Coalesce 1 into ONE MapInArrow that decodes and "
+            "evaluates every query of the batch, and NO Exchange.",
+            plan(batch),
+        )
+    )
+
+    # every small call on this index fits one task: push the calls below
     # over the one-task bound to show the shapes larger calls take
-    chunk_rows = bq._chunk_rows
-    bq._chunk_rows = lambda n_terms: 0
+    one_task_fit = bq._one_task_fit
+    bq._one_task_fit = lambda *args: None
     try:
         sections.append(
             (
@@ -161,7 +190,7 @@ def main() -> None:
                 )
             )
     finally:
-        bq._chunk_rows = chunk_rows
+        bq._one_task_fit = one_task_fit
 
     # multi-field: the same evaluator over a field-qualified vocabulary
     from micce_search_engine_spark.operators.multifield import multifield_scored
@@ -180,7 +209,7 @@ def main() -> None:
             "Look for: one bucket-pruned segment scan + decode MapInArrow per "
             "field, each followed by the Filter on that field's own lang_id and "
             "the Project prefixing term with the field index; a Union; then, "
-            "as the call's postings fit one evaluation chunk, Coalesce 1 and "
+            "as the call fits one task, Coalesce 1 and "
             "ONE evaluator MapInArrow emitting every matched (doc_id, score) "
             "— no Exchange, no aggregate, no join. Over that bound the Union "
             "is repartitioned by doc_id once (one Exchange + Sort) instead.",
